@@ -5,9 +5,10 @@ Stage map (SURVEY.md §2.3):
     B1  scan            sources.read_transcripts
     B2  assembly        assemble.assemble_conversations
     B3  fingerprint     simhash.signatures
-    B4  blocking        blocking.candidate_pairs
-    B5  skew handling   blocking (stop-band cap + salt), AQE
-    B6  scoring         scoring.score_pairs
+    B4  blocking        blocking.candidate_pairs_wide
+    B5  skew handling   blocking.candidate_pairs_wide (salted chain of
+                        oversize blocks), AQE
+    B6  scoring         scoring.score_wide
     B7  match filter    scoring.match_edges
     B8  clustering      clustering.connected_components
     B9  canonical ids   clustering (min conv_id per component)

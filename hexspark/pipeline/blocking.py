@@ -158,61 +158,6 @@ def sig_chunks_raw():
     return _raw()
 
 
-def banded_with_skew_gate(
-    sigs_c: DataFrame, band_vals: Column, max_block: int
-) -> tuple[DataFrame, DataFrame, bool, DataFrame]:
-    """The adaptive skew gate shared by the batch and incremental blocking
-    paths: compute per-block sizes, probe ONCE at plan-build time for
-    blocks above ``max_block``, and attach the per-conv banned-band
-    bitmask only when some block is oversize (otherwise every mask is a
-    zero literal and the whole skew subplan is left out of the plan —
-    detecting skew needs the sizes aggregation either way, so the probe is
-    one cheap scan; it is the same decide-at-runtime move AQE makes for
-    skew joins, applied one level up).
-
-    The oversize list is materialized with localCheckpoint rather than
-    persist: it is consumed by several subtrees (probe, banned-mask build,
-    chain-branch broadcasts) but a persist() entry in the CacheManager is
-    never released without an explicit unpersist the callers cannot reach
-    — checkpointed RDD blocks are freed by the ContextCleaner once the
-    plan is garbage collected, so repeated calls in a long-lived
-    application do not accumulate cache entries. It is tiny by
-    construction (one row per >max_block block). Trade-off: localCheckpoint
-    truncates lineage, so on a real cluster losing the executor holding
-    these (tiny, replicated-in-memory) blocks fails the job instead of
-    recomputing — acceptable for a <KB side-table, but a deployment with a
-    configured checkpoint dir should prefer reliable checkpoint() here.
-
-    Returns (sigs_b = sigs_c + banned column, oversize, has_oversize,
-    block_stats).
-    """
-    bands_raw = sigs_c.select(
-        "conv_id", F.posexplode(band_vals).alias("band_id", "band_val")
-    )
-    sizes = bands_raw.groupBy("band_id", "band_val").agg(
-        F.count(F.lit(1)).alias("block_size")
-    )
-    block_stats = sizes.withColumn("skipped", F.col("block_size") > F.lit(max_block))
-    oversize = sizes.where(F.col("block_size") > max_block).localCheckpoint(eager=True)
-    has_oversize = not oversize.isEmpty()
-    if has_oversize:
-        banned = (
-            bands_raw.join(
-                oversize.select("band_id", "band_val"), ["band_id", "band_val"]
-            )
-            .groupBy("conv_id")
-            .agg(F.sum(F.expr("shiftleft(1L, band_id)")).alias("banned"))
-        )
-        sigs_b = sigs_c.join(banned, "conv_id", "left").withColumn(
-            "banned", F.coalesce(F.col("banned"), F.lit(0).cast("long"))
-        )
-    else:
-        # no oversize blocks: every banned mask is zero; the bit-test
-        # filters downstream keep the exactly-once guarantee unchanged
-        sigs_b = sigs_c.withColumn("banned", F.lit(0).cast("long"))
-    return sigs_b, oversize, has_oversize, block_stats
-
-
 def _pair_projection(n_chunks: int, swap: Column):
     """Select-list producing the canonical (conv_id_a < conv_id_b) wide
     pair columns from a row carrying own + neighbor ("nb") payloads,
@@ -242,6 +187,7 @@ def candidate_pairs_wide(
     signatures: DataFrame,
     n_bands: int = 16,
     max_block: int = 2000,
+    new_col: str | None = None,
 ) -> tuple[DataFrame, DataFrame]:
     """LSH-blocked candidate pairs that CARRY both sides' signature chunks
     and canonical keys out of the band self-join, each pair emitted
@@ -253,6 +199,18 @@ def candidate_pairs_wide(
     sizes travel through a tiny aggregated side-channel (sizes/oversize/
     banned are all small by construction and AQE broadcasts them).
 
+    ``new_col`` names a boolean new-row column for an incremental fold
+    (pipeline/incremental.py): only pairs touching >= 1 new row are
+    emitted. New rows alone form the A side of the self-join; new-new
+    pairs are emitted once in id order and new-old pairs once, swapped
+    into conv_id_a < conv_id_b order; the chain branch drops old-old
+    links. Old members of an oversize block are already connected by the
+    prior run's clusters, and new members reach them through
+    signature-adjacent old members. Block sizes and banned masks are
+    computed over ALL rows — the sizes the equivalent batch run sees, so
+    the fold's clusters equal the batch run's. ``None`` (batch) keeps the
+    plain ``a.conv_id < b.conv_id`` join with no side swap.
+
     Returns (pairs_wide, block_stats); pairs_wide has conv_id_a/b,
     canon_a/b, c{i}_a/b signature chunk longs. block_stats(band_id,
     band_val, block_size, skipped) — `skipped` marks oversize blocks
@@ -262,15 +220,59 @@ def candidate_pairs_wide(
     from .scoring import N_CHUNKS
 
     chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(sig_chunks_raw())]
-    sigs_c = signatures.select("conv_id", "canon", *chunk_cols)
+    flag = [new_col] if new_col else []
+    sigs_c = signatures.select("conv_id", "canon", *flag, *chunk_cols)
     band_vals = F.array(*[_band_val_int(b, n_bands) for b in range(n_bands)])
 
-    sigs_b, oversize, has_oversize, block_stats = banded_with_skew_gate(
-        sigs_c, band_vals, max_block
+    # ---- adaptive skew gate --------------------------------------------
+    # Compute per-block sizes, probe ONCE at plan-build time for blocks
+    # above max_block, and attach the per-conv banned-band bitmask only
+    # when some block is oversize (otherwise every mask is a zero literal
+    # and the whole skew subplan is left out of the plan — detecting skew
+    # needs the sizes aggregation either way, so the probe is one cheap
+    # scan; it is the same decide-at-runtime move AQE makes for skew
+    # joins, applied one level up).
+    #
+    # The oversize list is materialized with localCheckpoint rather than
+    # persist: it is consumed by several subtrees (probe, banned-mask
+    # build, chain-branch broadcasts) but a persist() entry in the
+    # CacheManager is never released without an explicit unpersist the
+    # callers cannot reach — checkpointed RDD blocks are freed by the
+    # ContextCleaner once the plan is garbage collected, so repeated calls
+    # in a long-lived application do not accumulate cache entries. It is
+    # tiny by construction (one row per >max_block block). Trade-off:
+    # localCheckpoint truncates lineage, so on a real cluster losing the
+    # executor holding these (tiny, replicated-in-memory) blocks fails the
+    # job instead of recomputing — acceptable for a <KB side-table, but a
+    # deployment with a configured checkpoint dir should prefer reliable
+    # checkpoint() here.
+    bands_raw = sigs_c.select(
+        "conv_id", F.posexplode(band_vals).alias("band_id", "band_val")
     )
+    sizes = bands_raw.groupBy("band_id", "band_val").agg(
+        F.count(F.lit(1)).alias("block_size")
+    )
+    block_stats = sizes.withColumn("skipped", F.col("block_size") > F.lit(max_block))
+    oversize = sizes.where(F.col("block_size") > max_block).localCheckpoint(eager=True)
+    has_oversize = not oversize.isEmpty()
+    if has_oversize:
+        banned = (
+            bands_raw.join(
+                oversize.select("band_id", "band_val"), ["band_id", "band_val"]
+            )
+            .groupBy("conv_id")
+            .agg(F.sum(F.expr("shiftleft(1L, band_id)")).alias("banned"))
+        )
+        sigs_b = sigs_c.join(banned, "conv_id", "left").withColumn(
+            "banned", F.coalesce(F.col("banned"), F.lit(0).cast("long"))
+        )
+    else:
+        # no oversize blocks: every banned mask is zero; the bit-test
+        # filters downstream keep the exactly-once guarantee unchanged
+        sigs_b = sigs_c.withColumn("banned", F.lit(0).cast("long"))
 
     bands = sigs_b.select(
-        "conv_id", "canon", "banned",
+        "conv_id", "canon", "banned", *flag,
         *[f"c{i}" for i in range(N_CHUNKS)],
         F.posexplode(band_vals).alias("band_id", "band_val"),
     )
@@ -286,22 +288,39 @@ def candidate_pairs_wide(
     # not worth a count-window — the exchange volume is the same either
     # way and the bit-test below is free codegen)
     kept = bands.where(F.expr("(shiftright(banned, band_id) & 1) = 0"))
-    a = kept.alias("a")
+    a = (kept.where(F.col(new_col)) if new_col else kept).alias("a")
     b = kept.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.conv_id") < F.col("b.conv_id")),
-    ).select(
+    on = (F.col("a.band_id") == F.col("b.band_id")) & (
+        F.col("a.band_val") == F.col("b.band_val")
+    )
+    if new_col is None:
+        on = on & (F.col("a.conv_id") < F.col("b.conv_id"))
+
+        def side(col: str, a_side: bool) -> Column:
+            return F.col(f"a.{col}" if a_side else f"b.{col}")
+    else:
+        # new A side: new-new pairs once in id order, new-old pairs once
+        # whichever id is lower, swapped into canonical order below
+        on = (
+            on
+            & (F.col("a.conv_id") != F.col("b.conv_id"))
+            & ((F.col("a.conv_id") < F.col("b.conv_id")) | ~F.col(f"b.{new_col}"))
+        )
+        swap_ab = F.col("b.conv_id") < F.col("a.conv_id")
+
+        def side(col: str, a_side: bool) -> Column:
+            take_a = ~swap_ab if a_side else swap_ab
+            return F.when(take_a, F.col(f"a.{col}")).otherwise(F.col(f"b.{col}"))
+
+    joined = a.join(b, on).select(
         F.col("a.band_id").alias("band_id"),
-        F.col("a.conv_id").alias("conv_id_a"),
-        F.col("b.conv_id").alias("conv_id_b"),
-        F.col("a.canon").alias("canon_a"),
-        F.col("b.canon").alias("canon_b"),
+        side("conv_id", True).alias("conv_id_a"),
+        side("conv_id", False).alias("conv_id_b"),
+        side("canon", True).alias("canon_a"),
+        side("canon", False).alias("canon_b"),
         F.col("a.banned").alias("banned_a"),
-        *[F.col(f"a.c{i}").alias(f"c{i}_a") for i in range(N_CHUNKS)],
-        *[F.col(f"b.c{i}").alias(f"c{i}_b") for i in range(N_CHUNKS)],
+        *[side(f"c{i}", True).alias(f"c{i}_a") for i in range(N_CHUNKS)],
+        *[side(f"c{i}", False).alias(f"c{i}_b") for i in range(N_CHUNKS)],
     )
     eff = _match_mask(n_bands).bitwiseAND(F.bitwise_not(F.col("banned_a")))
     normal = (
@@ -337,7 +356,7 @@ def candidate_pairs_wide(
     )
     chunk_names = [f"c{i}" for i in range(N_CHUNKS)]
     order_cols = [*chunk_names, "conv_id"]
-    payload = F.struct("conv_id", "canon", "banned", *chunk_names)
+    payload = F.struct("conv_id", "canon", "banned", *flag, *chunk_names)
 
     wg = Window.partitionBy("band_id", "band_val", "salt").orderBy(*order_cols)
     adjacent = over.withColumn("nb", F.lead(payload).over(wg))
@@ -368,6 +387,13 @@ def candidate_pairs_wide(
     )
     wr = Window.partitionBy("band_id", "band_val").orderBy(*order_cols)
     rep_pairs = reps.withColumn("nb", F.lead(payload).over(wr))
+    chain_src = adjacent.unionByName(rep_pairs, allowMissingColumns=False).where(
+        F.col("nb").isNotNull()
+    )
+    if new_col:
+        # the fold chains old and new members TOGETHER but never emits an
+        # old-old link: its connectivity is the prior run's job
+        chain_src = chain_src.where(F.col(new_col) | F.col(f"nb.{new_col}"))
     # A singleton sig-run's rep link can coincide with the group chain's
     # adjacent link (both connect the same two members in the same band).
     # Dedup HERE on plain columns — both sources emit the pair in the same
@@ -377,9 +403,7 @@ def candidate_pairs_wide(
     # Catalyst's optimizer fixed-point (measured: minutes of driver time
     # on a 40-row block).
     chain_src = (
-        adjacent.unionByName(rep_pairs, allowMissingColumns=False)
-        .where(F.col("nb").isNotNull())
-        .withColumn("_nb_id", F.col("nb.conv_id"))
+        chain_src.withColumn("_nb_id", F.col("nb.conv_id"))
         .dropDuplicates(["band_id", "band_val", "conv_id", "_nb_id"])
         .drop("_nb_id")
     )

@@ -76,8 +76,9 @@ def link_candidate_pairs_wide(
     blocks — where the A-count x B-count cross product exceeds
     ``hot_pairs`` — are detected by ONE tiny aggregated probe at
     plan-build time (the same adaptive decide-at-runtime gate as
-    blocking.banded_with_skew_gate); when none exist the salt columns are
-    zero literals and the whole salting subplan is left out of the plan.
+    blocking.candidate_pairs_wide's skew gate); when none exist the salt
+    columns are zero literals and the whole salting subplan is left out of
+    the plan.
 
     Returns (pairs_wide, block_stats); block_stats carries per-block
     (band_id, band_val, n_a, n_b, n_pairs, salted) for observability —
@@ -101,8 +102,8 @@ def link_candidate_pairs_wide(
     )
     block_stats = sizes.withColumn("salted", F.col("n_pairs") > F.lit(hot_pairs))
     # tiny by construction (one row per hot block); localCheckpoint so the
-    # CacheManager never accumulates entries (see banded_with_skew_gate's
-    # docstring for the persist-vs-checkpoint trade-off)
+    # CacheManager never accumulates entries (see the skew-gate comment in
+    # blocking.candidate_pairs_wide for the persist-vs-checkpoint trade-off)
     hot = (
         sizes.where(F.col("n_pairs") > hot_pairs)
         .select("band_id", "band_val")

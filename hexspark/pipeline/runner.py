@@ -34,10 +34,6 @@ class PipelineConfig:
     min_score: float = 0.0
     cc_max_iter: int = 20
     pair_partitions: int | None = None  # explicit repartition before scoring
-    # wide pairs carry both sides' signature chunks + canon out of the band
-    # self-join, so scoring is a pure narrow map (no re-attach joins) — the
-    # scale-path plan; False falls back to thin pairs + two attach joins
-    wide_pairs: bool = True
     # pairwise scorer: "blend" = the fixed hamming+Jaro-Winkler alpha blend
     # gated on max_dist (the reference's A2/A3 semantics); "fs" = the
     # Fellegi-Sunter classical-linkage path (pipeline/fs.py) — per-chunk
@@ -75,7 +71,7 @@ class PipelineConfig:
     # progressive / pay-as-you-go resolution; threshold ties all kept).
     # Cuts the quadratic scoring phase's input at
     # near-zero recall cost; the pruned stream lands as its own resumable
-    # stage table (pruned_pairs). Requires wide_pairs. Incremental folds
+    # stage table (pruned_pairs). Not with extra_passes. Incremental folds
     # score their new-vs-all pairs UNPRUNED by design: a batch's
     # node-local means over a partial graph would drift the threshold,
     # and skipping the prune on (small) increments is recall-monotone —
@@ -144,10 +140,12 @@ class PipelineConfig:
     # decides every pair. Allowed names: "suffix" (suffix-array keys,
     # prefix-corruption-robust), "phonetic" (Soundex), "snm" (fixed
     # window extra_snm_window over the global rank), "adaptive_snm"
-    # (boundary-segmented windows). Thin-pairs only — the extra passes
-    # carry no signature chunks, so wide_pairs/fs/meta_prune (which
-    # need them) are mutually exclusive; batch-only (the incremental
-    # path implements banded blocking only).
+    # (boundary-segmented windows). The extra passes carry no signature
+    # chunks, so the union is scored as thin pairs (two attach joins)
+    # instead of wide ones (a pure narrow map over the carried chunks),
+    # and fs/fs_levels/meta_prune (which need the chunks) do not compose
+    # with it; batch-only (the incremental path implements banded
+    # blocking only).
     extra_passes: tuple = ()
     extra_snm_window: int = 10
     # exact containment pre-dedup (pipeline/align.py): before assembly,
@@ -226,11 +224,6 @@ class Runner:
             raise ValueError(
                 f"meta_cep_budget must be >= 1 (got {self.cfg.meta_cep_budget})"
             )
-        if self.cfg.meta_prune != "off" and not self.cfg.wide_pairs:
-            raise ValueError(
-                "meta_prune requires wide_pairs=True (the CBS weight is "
-                "computed from the carried signature chunks)"
-            )
         if self.cfg.clustering_mode not in ("cc", "pivot", "star", "hac", "lpa"):
             raise ValueError(
                 "clustering_mode must be 'cc', 'pivot', 'star', 'hac', or "
@@ -250,11 +243,14 @@ class Runner:
             raise ValueError(
                 f"unknown extra_passes {unknown!r}; allowed: {allowed_passes}"
             )
-        if self.cfg.extra_passes and self.cfg.wide_pairs:
+        if self.cfg.extra_passes and (
+            self.cfg.meta_prune != "off" or self.cfg.scoring_mode != "blend"
+        ):
             raise ValueError(
-                "extra_passes requires wide_pairs=False: the extra passes "
-                "carry no signature chunks, so the wide scoring path (and "
-                "fs/meta_prune modes built on it) cannot consume the union"
+                "extra_passes does not compose with meta_prune, fs or "
+                "fs_levels: the extra passes carry no signature chunks, so "
+                "the union is scored as thin pairs and the CBS weight and "
+                "the FS comparison fields have nothing to read"
             )
         if self.cfg.drop_contained and self.cfg.containment_depth_cap < 1:
             raise ValueError(
@@ -336,6 +332,43 @@ class Runner:
         result.tables[stage] = out
         return out
 
+    # -- FS scoring ---------------------------------------------------------
+    def _fit_fs_model(self, pairs: DataFrame) -> dict:
+        """Fit the fs / fs_levels model on a run's wide candidate pairs;
+        returns it in the manifest's JSON form, threshold included."""
+        from . import fs
+
+        cfg = self.cfg
+        fit, to_json = (
+            (fs.fit_wide_levels, fs.level_params_to_json)
+            if cfg.scoring_mode == "fs_levels"
+            else (fs.fit_wide_pairs, fs.params_to_json)
+        )
+        params, prev = fit(
+            pairs, chunk_dist=cfg.fs_chunk_dist, canon_prefix_len=cfg.fs_canon_prefix_len
+        )
+        thr = cfg.fs_threshold if cfg.fs_threshold is not None else fs.default_threshold(prev)
+        return {**to_json(params, prev), "threshold": thr}
+
+    def _fs_scorer(self, model: dict, canon_tf: DataFrame | None):
+        """Map a fitted model in its manifest JSON form (plus the canon_tf
+        table in TF mode) to the wide-pairs edge scorer. The batch run and
+        the incremental fold both score through this, so a fold scores
+        under exactly the model the prior run recorded."""
+        from . import fs
+
+        cfg = self.cfg
+        kw = {"chunk_dist": cfg.fs_chunk_dist, "canon_prefix_len": cfg.fs_canon_prefix_len}
+        if cfg.scoring_mode == "fs_levels":
+            lvl_params, _prev = fs.level_params_from_json(model)
+            return lambda p: fs.score_wide_fs_levels(
+                p, lvl_params, model["threshold"], **kw
+            )
+        params, _prev = fs.params_from_json(model)
+        return lambda p: fs.score_wide_fs(
+            p, params, model["threshold"], canon_tf=canon_tf, **kw
+        )
+
     # -- pipeline -----------------------------------------------------------
     def run(self, transcripts: DataFrame) -> PipelineResult:
         manifest = self._manifest()
@@ -393,10 +426,9 @@ class Runner:
         )
 
         def build_pairs() -> DataFrame:
-            maker = (
-                blocking.candidate_pairs_wide if cfg.wide_pairs else blocking.candidate_pairs
+            pairs, stats = blocking.candidate_pairs_wide(
+                sigs, n_bands=cfg.n_bands, max_block=cfg.max_block
             )
-            pairs, stats = maker(sigs, n_bands=cfg.n_bands, max_block=cfg.max_block)
             self.io.write(stats.where(F.col("skipped")), "skipped_blocks")
             if not cfg.extra_passes:
                 return pairs
@@ -462,70 +494,18 @@ class Runner:
                 p = p.select("conv_id_a", "conv_id_b")
             if cfg.pair_partitions:
                 p = p.repartition(cfg.pair_partitions)
-            if cfg.scoring_mode == "fs_levels":
-                # same fit-on-this-run's-pairs + manifest-recorded-model
-                # contract as fs mode, with the categorical (per-level) EM
-                if not cfg.wide_pairs:
-                    raise ValueError("scoring_mode='fs_levels' requires wide_pairs=True")
-                from . import fs
-
-                params, prev = fs.fit_wide_levels(
-                    p,
-                    chunk_dist=cfg.fs_chunk_dist,
-                    canon_prefix_len=cfg.fs_canon_prefix_len,
-                )
-                thr = (
-                    cfg.fs_threshold
-                    if cfg.fs_threshold is not None
-                    else fs.default_threshold(prev)
-                )
-                manifest["fs_model"] = {
-                    **fs.level_params_to_json(params, prev),
-                    "threshold": thr,
-                }
-                return fs.score_wide_fs_levels(
-                    p,
-                    params,
-                    thr,
-                    chunk_dist=cfg.fs_chunk_dist,
-                    canon_prefix_len=cfg.fs_canon_prefix_len,
-                )
-            if cfg.scoring_mode == "fs":
+            if cfg.scoring_mode != "blend":
                 # fit on THIS run's pairs (one pattern-count aggregation
                 # over the materialized stage table + driver EM), record
                 # the model in the manifest so incremental folds reuse it
-                if not cfg.wide_pairs:
-                    raise ValueError("scoring_mode='fs' requires wide_pairs=True")
-                from . import fs
-
-                params, prev = fs.fit_wide_pairs(
-                    p,
-                    chunk_dist=cfg.fs_chunk_dist,
-                    canon_prefix_len=cfg.fs_canon_prefix_len,
+                manifest["fs_model"] = self._fit_fs_model(p)
+                return self._fs_scorer(manifest["fs_model"], canon_tf)(p)
+            if cfg.extra_passes:
+                return scoring.score_and_match(
+                    p, sigs, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
                 )
-                thr = (
-                    cfg.fs_threshold
-                    if cfg.fs_threshold is not None
-                    else fs.default_threshold(prev)
-                )
-                manifest["fs_model"] = {
-                    **fs.params_to_json(params, prev),
-                    "threshold": thr,
-                }
-                return fs.score_wide_fs(
-                    p,
-                    params,
-                    thr,
-                    chunk_dist=cfg.fs_chunk_dist,
-                    canon_prefix_len=cfg.fs_canon_prefix_len,
-                    canon_tf=canon_tf,
-                )
-            if cfg.wide_pairs:
-                return scoring.score_wide(
-                    p, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
-                )
-            return scoring.score_and_match(
-                p, sigs, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
+            return scoring.score_wide(
+                p, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
             )
 
         edges = self._run_stage(manifest, result, "edges", build_edges)
@@ -793,52 +773,28 @@ class Runner:
         result = PipelineResult(run_id=manifest["run_id"])
         timer = StageTimer()
         score_fn = None
-        if cfg.scoring_mode == "fs_levels":
-            # same no-thin-batch-refit rule as fs mode: score the batch
-            # under the model fitted on the prior full run
-            from . import fs
-
-            model = manifest.get("fs_model")
-            if model is None:
-                raise ValueError(
-                    "scoring_mode='fs_levels' requires a fitted model in "
-                    "the manifest (produced by the prior batch run's edges "
-                    "stage); this workdir has none"
-                )
-            lvl_params, _prev = fs.level_params_from_json(model)
-
-            def score_fn(p):
-                return fs.score_wide_fs_levels(
-                    p,
-                    lvl_params,
-                    model["threshold"],
-                    chunk_dist=cfg.fs_chunk_dist,
-                    canon_prefix_len=cfg.fs_canon_prefix_len,
-                )
-        elif cfg.scoring_mode == "fs":
+        if cfg.scoring_mode != "blend":
             # score the batch under the model FITTED ON THE PRIOR RUN (a
             # small batch must not refit — its pair sample is too thin and
             # a drifted model would mix decision boundaries in one edges
             # table); the manifest holds it from the batch run
-            from . import fs
-
             model = manifest.get("fs_model")
             if model is None:
                 raise ValueError(
-                    "scoring_mode='fs' requires a fitted model in the "
-                    "manifest (produced by the prior batch run's edges "
-                    "stage); this workdir has none"
+                    f"scoring_mode={cfg.scoring_mode!r} requires a fitted "
+                    "model in the manifest (produced by the prior batch "
+                    "run's edges stage); this workdir has none"
                 )
-            params, _prev = fs.params_from_json(model)
             # TF mode scores the batch under the CORPUS frequency table
             # (the canon_tf stage), not batch-local frequencies — the same
             # no-thin-batch-refit rule as the model itself
-            canon_tf = (
-                self.io.read("canon_tf") if cfg.fs_tf_adjust else None
-            )
+            canon_tf = self.io.read("canon_tf") if cfg.fs_tf_adjust else None
+            score = self._fs_scorer(model, canon_tf)
+            if canon_tf is None:
+                score_fn = score
+            else:
 
-            def score_fn(p):
-                if canon_tf is not None:
+                def score_fn(p):
                     # TF mode puts a JOIN above the pair stream. In the
                     # batch run the pairs come back from a materialized
                     # stage table, so the join sits on a shallow scan; here
@@ -856,15 +812,7 @@ class Runner:
                     # it is asking for its `constraints` that explodes.
                     # Cost: one batch-proportional scratch-table write.
                     self.io.write(p, "fold_pairs_scratch")
-                    p = self.io.read("fold_pairs_scratch")
-                return fs.score_wide_fs(
-                    p,
-                    params,
-                    model["threshold"],
-                    chunk_dist=cfg.fs_chunk_dist,
-                    canon_prefix_len=cfg.fs_canon_prefix_len,
-                    canon_tf=canon_tf,
-                )
+                    return score(self.io.read("fold_pairs_scratch"))
         res = incremental.incremental_update(
             new_transcripts,
             self.io.read("signatures"),

@@ -32,6 +32,22 @@ def apply_malloc_tuning() -> None:
         os.environ.setdefault(k, v)
 
 
+def default_driver_memory() -> str:
+    """Driver heap for local sessions: a quarter of the host's MemTotal,
+    capped at 16g (local mode runs every executor inside the driver JVM,
+    so a fixed 16g on a small host lets the JVM outgrow physical memory
+    and get OOM-killed). HEXSPARK_DRIVER_MEM overrides it."""
+    env = os.environ.get("HEXSPARK_DRIVER_MEM")
+    if env:
+        return env
+    try:
+        with open("/proc/meminfo") as f:
+            kb = next(int(line.split()[1]) for line in f if line.startswith("MemTotal:"))
+    except (OSError, StopIteration, ValueError):
+        return "16g"
+    return f"{min(16 * 1024, kb // 4 // 1024)}m"
+
+
 def get_spark(
     app_name: str = "hexspark",
     master: str | None = None,
@@ -68,7 +84,7 @@ def get_spark(
         .config("spark.shuffle.sort.bypassMergeThreshold", "1")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "10000")
-        .config("spark.driver.memory", os.environ.get("HEXSPARK_DRIVER_MEM", "16g"))
+        .config("spark.driver.memory", default_driver_memory())
         .config("spark.driver.maxResultSize", "4g")
         .config("spark.ui.enabled", "false")
         .config("spark.sql.session.timeZone", "UTC")

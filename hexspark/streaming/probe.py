@@ -104,7 +104,9 @@ def probe_stream(
         ),
     )
     mask = _match_mask_hex(F.col("_probe_hex"), F.col("_rep_hex"), n_bands)
-    low_bits = F.expr("shiftleft(1L, band_id)") - F.lit(1).cast("long")
+    # bits [0, band_id) without arithmetic: `shiftleft(1L, band_id) - 1`
+    # overflows under ANSI mode at band 63 (see blocking.py)
+    low_bits = F.expr("~ shiftleft(-1L, band_id)")
     screened = (
         probe_bands.join(rep_bands, ["band_id", "band_val"])
         # exactly-once per (probe, rep): only the lowest matching band keeps it

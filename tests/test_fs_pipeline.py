@@ -189,14 +189,17 @@ def test_fs_incremental_requires_fitted_model(spark, tmp_path):
         Runner(spark, wd, cfg).run_incremental(newtr)
 
 
-def test_fs_requires_wide_pairs(spark, tmp_path):
-    tr = fixtures.transcripts_df(spark, n_base=10, seed=1)
-    with pytest.raises(ValueError, match="wide_pairs"):
+@pytest.mark.parametrize("mode", ["fs", "fs_levels"])
+def test_fs_refuses_extra_passes(spark, tmp_path, mode):
+    """FS scoring reads the wide pairs' carried signature chunks; the
+    extra-pass union carries none, so the combination is refused when the
+    Runner is built, before any stage runs."""
+    with pytest.raises(ValueError, match="extra_passes does not compose"):
         Runner(
             spark,
             str(tmp_path / "fs_thin"),
-            PipelineConfig(**CFG, scoring_mode="fs", wide_pairs=False),
-        ).run(tr)
+            PipelineConfig(**CFG, scoring_mode=mode, extra_passes=("suffix",)),
+        )
 
 
 def test_fs_composes_with_robust_mode(spark, tmp_path):

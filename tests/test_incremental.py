@@ -92,11 +92,13 @@ def test_no_old_old_pairs(spark, split_data):
 
 
 def test_incremental_pairs_cover_new_vs_all_candidates(spark, split_data):
-    """Every full-batch candidate pair touching a new conv must be produced
-    by the incremental path too (same pigeonhole guarantee)."""
+    """With no oversize block the incremental pairs are EXACTLY the
+    full-batch candidate pairs touching a new conv: none missing (same
+    pigeonhole guarantee) and none extra (one engine, one band filter)."""
     tr, tr_old, tr_new, old_ids = split_data
     sigs_full = simhash.signatures(assemble.assemble_conversations(tr))
-    full_pairs, _ = blocking.candidate_pairs(sigs_full)
+    full_pairs, full_stats = blocking.candidate_pairs(sigs_full)
+    assert full_stats.where(F.col("skipped")).count() == 0
 
     sigs_old = simhash.signatures(assemble.assemble_conversations(tr_old))
     sigs_new = simhash.signatures(assemble.assemble_conversations(tr_new))
@@ -115,8 +117,10 @@ def test_incremental_pairs_cover_new_vs_all_candidates(spark, split_data):
     expect = full_pairs.exceptAll(
         full_touching_new.select("conv_id_a", "conv_id_b")
     )
-    missing = expect.exceptAll(inc_pairs.select("conv_id_a", "conv_id_b"))
-    assert missing.count() == 0
+    got = inc_pairs.select("conv_id_a", "conv_id_b")
+    assert expect.count() > 0
+    assert expect.exceptAll(got).count() == 0, "batch pairs missing from the fold"
+    assert got.exceptAll(expect).count() == 0, "fold pairs outside the batch pairs"
 
 
 def test_mega_block_bridged_across_batches(spark):

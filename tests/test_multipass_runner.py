@@ -1,8 +1,8 @@
 """Runner(extra_passes=...) — multi-pass blocking as a production mode:
 the candidate stage must be a SUPERSET of the LSH-only candidate set with
 per-pair pass provenance, every unordered pair exactly once, clusters stay
-correct on the clean corpus, and the guards (wide_pairs, unknown pass,
-incremental) refuse."""
+correct on the clean corpus, and the guards (unknown pass, the
+chunk-reading modes meta_prune/fs/fs_levels, incremental) refuse."""
 
 from __future__ import annotations
 
@@ -27,7 +27,7 @@ def test_union_is_superset_with_provenance_exactly_once(spark, corpus, tmp_path)
     multi = Runner(
         spark,
         str(tmp_path / "multi"),
-        PipelineConfig(max_dist=40, wide_pairs=False, extra_passes=("suffix", "snm")),
+        PipelineConfig(max_dist=40, extra_passes=("suffix", "snm")),
     ).run(corpus)
     lsh_pairs = {
         (r.conv_id_a, r.conv_id_b)
@@ -51,8 +51,7 @@ def test_multipass_clusters_stay_correct(spark, corpus, tmp_path):
     res = Runner(
         spark,
         str(tmp_path / "mp"),
-        PipelineConfig(max_dist=40, wide_pairs=False,
-                       extra_passes=("suffix", "adaptive_snm")),
+        PipelineConfig(max_dist=40, extra_passes=("suffix", "adaptive_snm")),
     ).run(corpus)
     labels = fixtures.labeled_pairs_df(spark, corpus)
     m = evaluate.pairwise_f1(labels, res.tables["clusters"])
@@ -63,16 +62,21 @@ def test_guards(spark, corpus, tmp_path):
     with pytest.raises(ValueError, match="unknown extra_passes"):
         Runner(
             spark, str(tmp_path / "a"),
-            PipelineConfig(wide_pairs=False, extra_passes=("sufix",)),
+            PipelineConfig(extra_passes=("sufix",)),
         )
-    with pytest.raises(ValueError, match="wide_pairs=False"):
-        Runner(
-            spark, str(tmp_path / "b"),
-            PipelineConfig(extra_passes=("suffix",), wide_pairs=True),
-        )
+    for chunk_mode in (
+        {"meta_prune": "wep"},
+        {"scoring_mode": "fs"},
+        {"scoring_mode": "fs_levels"},
+    ):
+        with pytest.raises(ValueError, match="extra_passes does not compose"):
+            Runner(
+                spark, str(tmp_path / "b"),
+                PipelineConfig(extra_passes=("suffix",), **chunk_mode),
+            )
     wd = str(tmp_path / "inc")
     runner = Runner(
-        spark, wd, PipelineConfig(max_dist=40, wide_pairs=False, extra_passes=("phonetic",))
+        spark, wd, PipelineConfig(max_dist=40, extra_passes=("phonetic",))
     )
     runner.run(corpus)
     batch = spark.createDataFrame(

@@ -41,10 +41,12 @@ def _corpus(spark, sigs, clusters):
     return sig_df, cl_df, reps, members
 
 
-def test_probe_stream_batch_plan_equals_two_stage_probe(spark):
+@pytest.mark.parametrize("n_bands", [16, 64])
+def test_probe_stream_batch_plan_equals_two_stage_probe(spark, n_bands):
     """Same function on a BATCH probes frame: output set identical to
     probe_clusters for every probe (tight clusters: radius + max_dist < 16
-    bands, so the band screen is lossless by pigeonhole)."""
+    bands, so the band screen is lossless by pigeonhole). n_bands=64 runs
+    the first-matching-band filter up to bit 63 under ANSI mode."""
     rng = np.random.default_rng(21)
     sigs, clusters = _planted(rng)
     sig_df, cl_df, reps, members = _corpus(spark, sigs, clusters)
@@ -53,7 +55,7 @@ def test_probe_stream_batch_plan_equals_two_stage_probe(spark):
     probe_df = spark.createDataFrame(probes, "probe_id string, sig_hex string")
     got = {
         (r["probe_id"], r["conv_id"], r["dist"])
-        for r in probe_stream(probe_df, reps, members, max_dist).collect()
+        for r in probe_stream(probe_df, reps, members, max_dist, n_bands).collect()
     }
     want = set()
     for pid, phex in probes:
