@@ -58,7 +58,7 @@ from hexspark.ops.pii import scrub_documents
 from hexspark.ops.quality import repetition_filter
 from hexspark.ops.sampling import mixture_sample
 from hexspark.pipeline.clustering import connected_components
-from hexspark.pipeline.io import TableIO
+from hexspark.pipeline.io import TableIO, write_json_atomic
 from hexspark.pipeline.metrics import partition_metrics
 
 _STAGES = ("scrubbed", "quality", "deduped", "corpus")
@@ -136,8 +136,7 @@ class CorpusRunner:
 
     def _mark(self, manifest: dict, stage: str, rows: int, wall_ms: int, extra: dict | None = None) -> None:
         manifest["completed"][stage] = {"rows": rows, "wall_ms": wall_ms, **(extra or {})}
-        with open(self._manifest_path, "w") as f:
-            json.dump(manifest, f, indent=2)
+        write_json_atomic(self._manifest_path, manifest)
 
     def _ensure(self, manifest: dict, result: CorpusResult, stage: str, build, extra=None):
         if manifest["completed"].get(stage) and self.io.exists(stage):

@@ -26,10 +26,24 @@ available without the jar.
 
 from __future__ import annotations
 
+import json
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
+
+
+def write_json_atomic(path: str, obj) -> None:
+    """Write `obj` as JSON to `path` through a temp file in the same
+    directory and os.replace: a crash mid-dump leaves the previous file
+    whole, never a truncated one."""
+    os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    tmp = path + ".tmp"
+    with open(tmp, "w") as f:
+        json.dump(obj, f, indent=2)
+        f.flush()
+        os.fsync(f.fileno())
+    os.replace(tmp, path)
 
 
 class TableIO:

@@ -21,7 +21,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from . import assemble, blocking, clustering, scoring, simhash
-from .io import TableIO
+from .io import TableIO, write_json_atomic
 from .metrics import StageTimer, partition_metrics
 
 
@@ -305,9 +305,7 @@ class Runner:
 
     def _mark(self, manifest: dict, stage: str, rows: int, wall_ms: int) -> None:
         manifest["completed"][stage] = {"rows": rows, "wall_ms": wall_ms}
-        os.makedirs(self.workdir, exist_ok=True)
-        with open(self._manifest_path, "w") as f:
-            json.dump(manifest, f, indent=2)
+        write_json_atomic(self._manifest_path, manifest)
 
     # -- stage execution ----------------------------------------------------
     def _run_stage(

@@ -44,6 +44,7 @@ from pyspark.sql import functions as F
 
 from ..ops.pii import scrub_documents
 from ..ops.quality import repetition_filter
+from ..pipeline.io import write_json_atomic
 
 DOC_DDL = "doc_id long, text string, lang string"
 
@@ -61,11 +62,23 @@ def _load_state(workdir: str) -> dict:
 
 
 def _save_state(workdir: str, state: dict) -> None:
-    os.makedirs(workdir, exist_ok=True)
-    tmp = _state_path(workdir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, _state_path(workdir))
+    write_json_atomic(_state_path(workdir), state)
+
+
+def _refuse_flat_layout(out_dir: str) -> None:
+    """Earlier versions appended every micro-batch as parquet files at the
+    quality_stream root. Leaf files beside epoch=N directories break
+    Spark's partition discovery for every reader of the table, so a
+    workdir in that layout is refused before the stream starts."""
+    if os.path.isdir(out_dir) and any(
+        name.endswith(".parquet") for name in os.listdir(out_dir)
+    ):
+        raise RuntimeError(
+            f"{out_dir} holds parquet files at its root: the flat layout of "
+            "an earlier version, which cannot be mixed with epoch=N "
+            "partitions. Recreate the workdir (or move those files away) "
+            "and drain the source again."
+        )
 
 
 def hygiene_batch(
@@ -111,6 +124,7 @@ def hygiene_stream_to_parquet(
     way the ER stage tables do.
     """
     out_dir = os.path.join(workdir, "quality_stream")
+    _refuse_flat_layout(out_dir)
 
     def fold(batch_df: DataFrame, epoch_id: int) -> None:
         state = _load_state(workdir)

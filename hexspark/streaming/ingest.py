@@ -39,6 +39,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..fixtures import TRANSCRIPT_SCHEMA as TRANSCRIPT_DDL
+from ..pipeline.io import write_json_atomic
 from ..pipeline.runner import PipelineConfig, Runner
 
 
@@ -55,11 +56,7 @@ def _load_fold_state(workdir: str) -> dict:
 
 
 def _save_fold_state(workdir: str, state: dict) -> None:
-    os.makedirs(workdir, exist_ok=True)
-    tmp = _fold_state_path(workdir) + ".tmp"
-    with open(tmp, "w") as f:
-        json.dump(state, f)
-    os.replace(tmp, _fold_state_path(workdir))
+    write_json_atomic(_fold_state_path(workdir), state)
 
 
 def _routes_incremental(runner: Runner) -> bool:

@@ -1,8 +1,8 @@
 """Watermarked stream-stream join — the sixth Structured-Streaming idiom
 in the package, next to the foreachBatch fold (ingest.py), watermarked
 windows (windows.py), applyInPandasWithState sessions (sessions.py),
-dropDuplicatesWithinWatermark (dedup.py), and stream-static probe joins
-(probe.py).
+dropDuplicatesWithinWatermark (dedup.py), and the probe service's
+mapInArrow over a broadcast snapshot index (probe.py).
 
 The demo correlation: attribute each purchase to the same user's click at
 most `horizon` earlier — two live event streams joined on user_id with a
@@ -86,7 +86,7 @@ def purchase_attribution(
         if not (lhs.isStreaming and rhs.isStreaming):
             raise ValueError(
                 "purchase_attribution joins two streams or two batch frames; "
-                "for stream-vs-static use streaming/probe.py's stream-static join"
+                "for stream-vs-static use Spark's stateless stream-static join"
             )
         lhs = lhs.withWatermark("click_ts", watermark_delay)
         rhs = rhs.withWatermark("purchase_ts", watermark_delay)

@@ -96,3 +96,31 @@ def test_manifest_without_config_is_treated_as_drift(spark, first_run):
     finally:
         with open(manifest_path, "w") as f:
             f.write(original)
+
+
+def test_torn_manifest_dump_keeps_previous_manifest(spark, first_run, monkeypatch):
+    """A crash in the middle of writing run_manifest.json (here: a dump
+    that writes half the JSON, then raises) leaves the previous manifest
+    parseable, and the workdir resumes from it."""
+    tr, workdir, clusters, _ = first_run
+    manifest_path = os.path.join(workdir, "run_manifest.json")
+    with open(manifest_path) as f:
+        manifest = json.load(f)
+    manifest["completed"].pop("clusters")
+    with open(manifest_path, "w") as f:
+        json.dump(manifest, f)
+    real_dump = json.dump
+
+    def torn_dump(obj, f, **kw):
+        f.write(json.dumps(obj, **kw)[:40])
+        raise OSError("disk full mid-dump")
+
+    monkeypatch.setattr(json, "dump", torn_dump)
+    with pytest.raises(OSError, match="mid-dump"):
+        Runner(spark, workdir, PipelineConfig(max_dist=40)).run(tr)
+    monkeypatch.setattr(json, "dump", real_dump)
+    with open(manifest_path) as f:
+        assert json.load(f) == manifest
+    result = Runner(spark, workdir, PipelineConfig(max_dist=40)).run(tr)
+    assert result.stages_run == ["clusters"]
+    assert _rows(result.tables["clusters"], ["conv_id", "cluster_id"]) == clusters

@@ -7,6 +7,7 @@ from __future__ import annotations
 
 import json
 
+import pytest
 from pyspark.sql import functions as F
 
 from hexspark.streaming.corpus import (
@@ -136,3 +137,16 @@ def test_composes_with_batch_corpus_runner(spark, tmp_path):
     ).run(acc)
     kept = {r["doc_id"] for r in res.tables["deduped"].collect()}
     assert kept == {1, 3}  # the late exact dup (5) removed by the batch pass
+
+
+def test_legacy_flat_layout_is_refused_at_start(spark, tmp_path):
+    """A quality_stream written flat (parquet files at its root, the
+    layout before epoch=N partitions) must fail at start with a clear
+    message, not break partition discovery after a mixed write."""
+    src, wd = str(tmp_path / "src"), str(tmp_path / "wd")
+    spark.createDataFrame(_BATCH_B, DOC_DDL).coalesce(1).write.mode("append").parquet(src)
+    hygiene_batch(spark.createDataFrame(_BATCH_A, DOC_DDL)).write.parquet(
+        f"{wd}/quality_stream"
+    )
+    with pytest.raises(RuntimeError, match="Recreate the workdir"):
+        hygiene_stream_to_parquet(spark, src, wd)
