@@ -59,7 +59,7 @@ from hexspark.ops.quality import repetition_filter
 from hexspark.ops.sampling import mixture_sample
 from hexspark.pipeline.clustering import connected_components
 from hexspark.pipeline.io import TableIO, write_json_atomic
-from hexspark.pipeline.metrics import partition_metrics
+from hexspark.pipeline.metrics import record_stage
 
 _STAGES = ("scrubbed", "quality", "deduped", "corpus")
 
@@ -134,8 +134,8 @@ class CorpusRunner:
             "completed": {},
         }
 
-    def _mark(self, manifest: dict, stage: str, rows: int, wall_ms: int, extra: dict | None = None) -> None:
-        manifest["completed"][stage] = {"rows": rows, "wall_ms": wall_ms, **(extra or {})}
+    def _mark(self, manifest: dict, stage: str, entry: dict) -> None:
+        manifest["completed"][stage] = entry
         write_json_atomic(self._manifest_path, manifest)
 
     def _ensure(self, manifest: dict, result: CorpusResult, stage: str, build, extra=None):
@@ -145,23 +145,19 @@ class CorpusRunner:
             result.stage_rows[stage] = manifest["completed"][stage]["rows"]
             return out
         t0 = time.time()
-        out = build()
-        self.io.write(out, stage)
-        out = self.io.read(stage)
-        rows = out.count()
-        wall_ms = int((time.time() - t0) * 1000)
-        # per-partition lineage, same table contract as the ER Runner —
-        # one append per completed stage, keyed by run_id + stage
-        self.io.append(
-            partition_metrics(out, stage, manifest["run_id"], wall_ms),
-            "stage_metrics",
-        )
-        self._mark(
-            manifest, stage, rows, wall_ms,
-            extra() if callable(extra) else extra,
+        df = build()
+        self.io.write(df, stage)
+
+        def mark(manifest: dict, stage: str, entry: dict) -> None:
+            more = extra() if callable(extra) else extra
+            self._mark(manifest, stage, {**entry, **(more or {})})
+
+        # per-file lineage, same stage_metrics contract as the ER Runner
+        out = record_stage(
+            self.io, manifest, stage, df.schema, int((time.time() - t0) * 1000), mark
         )
         result.tables[stage] = out
-        result.stage_rows[stage] = rows
+        result.stage_rows[stage] = manifest["completed"][stage]["rows"]
         return out
 
     # -- stages -------------------------------------------------------------

@@ -14,14 +14,25 @@ switches every stage write to `df.writeTo('lake.<ns>.<table>')
 .createOrReplace()` with no code change. Writes are atomic-by-rename for
 parquet (write to tmp dir, rename) to keep resume semantics safe.
 
+A stage's accounting comes from what its write left behind, not from a
+Spark job over the table: `data_files` lists each data file's rows (its
+parquet footer, read with pyarrow on the driver; on Iceberg the table's
+`files` metadata table) and bytes, and `read(name, schema)` reads a table
+back under the schema it was written with, so Spark infers nothing.
+`put_rows` writes a handful of driver-side rows as one file under a
+deterministic key (parquet: pyarrow to a hidden temp name, then
+os.replace), so writing the same key again replaces the rows instead of
+adding a copy.
+
 Runtime-jar status (checked 2026-08-18): no iceberg-spark-runtime jar
 exists anywhere on this sandbox image (searched / and the pyspark jars
 dir) and the sandbox has no network route to Maven Central
 (`Name or service not known`), so the Iceberg branch cannot be executed
 against a real catalog here. It is contract-tested against a duck-typed
 fake catalog in tests/test_io_iceberg.py (probe, writeTo/partitionedBy/
-bucket-transform call shapes, read-back, exists) — the strongest evidence
-available without the jar.
+bucket-transform call shapes, read-back, exists, the `files` metadata
+read and the keyed-rows append) — the strongest evidence available
+without the jar.
 """
 
 from __future__ import annotations
@@ -30,7 +41,11 @@ import json
 import os
 import shutil
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.pandas.types import to_arrow_schema
+from pyspark.sql.types import StructType
 
 
 def write_json_atomic(path: str, obj) -> None:
@@ -95,10 +110,50 @@ class TableIO:
             return
         df.write.mode("append").parquet(self._path(name))
 
-    def read(self, name: str) -> DataFrame:
+    def read(self, name: str, schema: StructType | None = None) -> DataFrame:
+        """Table `name`; on parquet, a `schema` (the one the table was
+        written with) spares Spark the footer-reading job that infers it."""
         if self.use_iceberg:
             return self.spark.read.table(f"{self.catalog}.{self.namespace}.{name}")
-        return self.spark.read.parquet(self._path(name))
+        reader = self.spark.read
+        if schema is not None:
+            reader = reader.schema(schema)
+        return reader.parquet(self._path(name))
+
+    def data_files(self, name: str) -> list[tuple[int, int]]:
+        """(rows, bytes) of each data file of table `name`, in file-name
+        order, read on the driver: no Spark job on the parquet path."""
+        if self.use_iceberg:
+            files = self.spark.read.table(
+                f"{self.catalog}.{self.namespace}.{name}.files"
+            ).select("file_path", "record_count", "file_size_in_bytes")
+            return [(r[1], r[2]) for r in sorted(files.collect())]
+        root = self._path(name)
+        out = []
+        for f in sorted(os.listdir(root)):
+            if f.startswith(("_", ".")):  # _SUCCESS, .crc: not data
+                continue
+            path = os.path.join(root, f)
+            out.append((pq.read_metadata(path).num_rows, os.path.getsize(path)))
+        return out
+
+    def put_rows(self, rows: list[tuple], schema: StructType, name: str, key: str) -> None:
+        """Add `rows` to table `name` as one file named by `key`; putting
+        the same key again replaces that file's rows. Iceberg appends a
+        driver-built frame instead (an append has no file name to reuse)."""
+        if self.use_iceberg:
+            self.append(self.spark.createDataFrame(rows, schema), name)
+            return
+        root = self._path(name)
+        os.makedirs(root, exist_ok=True)
+        arrow_schema = to_arrow_schema(schema)
+        table = pa.Table.from_pylist(
+            [dict(zip(arrow_schema.names, r)) for r in rows], schema=arrow_schema
+        )
+        # the hidden temp name keeps a torn write out of Spark's listing
+        tmp = os.path.join(root, f".{key}.parquet.tmp")
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(root, f"{key}.parquet"))
 
     def write_bucketed(
         self, df: DataFrame, name: str, bucket_cols: list[str], n_buckets: int

@@ -1,9 +1,14 @@
 """End-to-end pipeline runner with checkpoint/resume and stage lineage.
 
-Every stage materializes its output table (Iceberg or parquet via TableIO),
-records per-partition metrics, and marks completion in a run manifest.
-A rerun with the same workdir skips stages whose outputs already exist —
-kill-after-stage-k resume is exercised by tests/test_resume.py.
+Every stage materializes its output table (Iceberg or parquet via TableIO)
+and marks completion in a run manifest. Its accounting comes from the
+files the write left (metrics.record_stage): the manifest entry's rows,
+files and bytes and the per-file `stage_metrics` rows are read from the
+parquet footers on the driver, and the table is read back under the
+schema it was written with, so a stage launches no Spark job after its
+write. A rerun with the same workdir skips stages whose outputs already
+exist — kill-after-stage-k resume, and a crash at each step of a stage's
+accounting, are exercised by tests/test_resume.py.
 
 Stage graph:
     transcripts ─ B2 → conversations ─ B3 → signatures ─ B4/B5 → pairs
@@ -22,7 +27,7 @@ from pyspark.sql import functions as F
 
 from . import assemble, blocking, clustering, scoring, simhash
 from .io import TableIO, write_json_atomic
-from .metrics import StageTimer, partition_metrics
+from .metrics import StageTimer, record_stage
 
 
 @dataclass
@@ -303,13 +308,13 @@ class Runner:
             "config": self._cfg_dict(),
         }
 
-    def _mark(self, manifest: dict, stage: str, rows: int, wall_ms: int) -> None:
-        manifest["completed"][stage] = {"rows": rows, "wall_ms": wall_ms}
+    def _mark(self, manifest: dict, stage: str, entry: dict) -> None:
+        manifest["completed"][stage] = entry
         write_json_atomic(self._manifest_path, manifest)
 
     # -- stage execution ----------------------------------------------------
     def _run_stage(
-        self, manifest: dict, result: PipelineResult, stage: str, build, partition_by=None
+        self, manifest: dict, result: PipelineResult, stage: str, build
     ) -> DataFrame:
         if manifest["completed"].get(stage) and self.io.exists(stage):
             result.stages_skipped.append(stage)
@@ -318,14 +323,10 @@ class Runner:
             return df
         timer = StageTimer()
         df = build()
-        self.io.write(df, stage, partition_by=partition_by)
-        out = self.io.read(stage)
-        wall = timer.wall_ms()
-        rows = out.count()
-        self.io.append(
-            partition_metrics(out, stage, manifest["run_id"], wall), "stage_metrics"
+        self.io.write(df, stage)
+        out = record_stage(
+            self.io, manifest, stage, df.schema, timer.wall_ms(), self._mark
         )
-        self._mark(manifest, stage, rows, wall)
         result.stages_run.append(stage)
         result.tables[stage] = out
         return out
@@ -893,9 +894,11 @@ class Runner:
             self.io.write(bridges, "bridge_edges")
             self.io.write(merged, "clusters")
             new_tri.unpersist()
+            written = {"triangles": new_tri, "bridge_edges": bridges, "clusters": merged}
         else:
             self.io.append(res["edges"], "edges")
             self.io.write(res["clusters"], "clusters")
+            written = {"clusters": res["clusters"]}
         if cfg.persist_entity_ids:
             # carry entity ids over the merged partition BEFORE the
             # signatures write that arms the batch-overlap guard, so a
@@ -916,7 +919,9 @@ class Runner:
             # after the swap would read deleted files
             self.io.append(retirements, "entity_retirements")
             self.io.write(assignments, "entity_ids")
+            written["entity_ids"] = assignments
         self.io.write(res["signatures"], "signatures")
+        written.update(signatures=res["signatures"], edges=res["edges"])
         # release the intermediates incremental_update persisted — a
         # CacheManager entry is never freed without an explicit unpersist,
         # and a long-lived app folds many batches through this path
@@ -929,13 +934,11 @@ class Runner:
             + (("entity_ids",) if cfg.persist_entity_ids else ())
         )
         for stage in stages:
-            out = self.io.read(stage)
-            rows = out.count()
-            self.io.append(
-                partition_metrics(out, f"{stage}_incremental", manifest["run_id"], wall),
-                "stage_metrics",
+            # an appended table (edges, triangles) is accounted whole: its
+            # manifest rows are the full table's, not the batch's
+            result.tables[stage] = record_stage(
+                self.io, manifest, stage, written[stage].schema, wall, self._mark,
+                label=f"{stage}_incremental",
             )
-            self._mark(manifest, stage, rows, wall)
-            result.tables[stage] = out
             result.stages_run.append(f"{stage}_incremental")
         return result

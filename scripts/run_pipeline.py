@@ -17,9 +17,10 @@
 
 Master/executors come from spark-submit. Every stage materializes to the
 workdir (Iceberg when a catalog is configured — see pipeline/io.py — else
-parquet), records per-partition lineage in stage_metrics, and is skipped
-on rerun when already complete, so a killed job resumes from its last
-finished stage. Exit output is one JSON line with per-stage rows and the
+parquet), records its rows, files and bytes in the run manifest and one
+stage_metrics row per written file (row counts from the file footers),
+and is skipped on rerun when already complete, so a killed job resumes
+from its last finished stage. Exit output is one JSON line with per-stage rows and the
 run manifest location.
 """
 

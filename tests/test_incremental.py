@@ -176,6 +176,31 @@ def test_runner_incremental_matches_full_batch_run(spark, split_data, tmp_path):
     assert result.tables["edges"].where(F.col("hamming_dist") > MAX_DIST).count() == 0
 
 
+def test_runner_incremental_accounts_whole_tables(spark, split_data, tmp_path):
+    """The fold's manifest rows are full-table counts (the appended edges
+    table included), its stage_metrics rows sum to them, and its
+    read-backs keep the schema of the tables on disk."""
+    import json
+    import os
+
+    from hexspark.pipeline.runner import PipelineConfig, Runner
+
+    _, tr_old, tr_new, _ = split_data
+    workdir = str(tmp_path / "inc")
+    inc = Runner(spark, workdir, PipelineConfig(max_dist=MAX_DIST))
+    inc.run(tr_old)
+    result = inc.run_incremental(tr_new)
+    with open(os.path.join(workdir, "run_manifest.json")) as f:
+        done = json.load(f)["completed"]
+    metrics = spark.read.parquet(os.path.join(workdir, "stage_metrics"))
+    for stage in ("signatures", "clusters", "edges"):
+        on_disk = spark.read.parquet(os.path.join(workdir, stage))
+        assert result.tables[stage].schema == on_disk.schema, stage
+        assert done[stage]["rows"] == on_disk.count(), stage
+        folded = metrics.where(F.col("stage") == f"{stage}_incremental")
+        assert folded.agg(F.sum("rows_out")).first()[0] == done[stage]["rows"], stage
+
+
 def test_runner_incremental_requires_completed_run(spark, split_data, tmp_path):
     from hexspark.pipeline.runner import PipelineConfig, Runner
 

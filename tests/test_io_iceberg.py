@@ -9,6 +9,8 @@ is covered for real by tests/test_resume.py.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 
 from hexspark.pipeline.io import TableIO
@@ -56,22 +58,45 @@ class _FakeCatalog:
         return name in self._existing
 
 
-class _FakeRead:
-    def __init__(self, log):
+class _FakeFrame:
+    """A metadata table: select(...) then collect() its rows."""
+
+    def __init__(self, log, name, rows):
         self._log = log
+        self._name = name
+        self._rows = rows
+
+    def select(self, *cols):
+        self._log.append(("select", self._name, cols))
+        return self
+
+    def collect(self):
+        return list(self._rows)
+
+
+class _FakeRead:
+    def __init__(self, log, files):
+        self._log = log
+        self._files = files
 
     def table(self, name):
         self._log.append(("readTable", name))
+        if name in self._files:
+            return _FakeFrame(self._log, name, self._files[name])
         return f"df:{name}"
 
 
 class _FakeSpark:
-    def __init__(self, conf_values, existing=(), namespace_error=False):
+    def __init__(self, conf_values, existing=(), namespace_error=False, files=None):
         self.log = []
         self.conf = _FakeConf(conf_values)
         self.catalog = _FakeCatalog(self.log, set(existing))
-        self.read = _FakeRead(self.log)
+        self.read = _FakeRead(self.log, files or {})
         self._namespace_error = namespace_error
+
+    def createDataFrame(self, rows, schema):
+        self.log.append(("createDataFrame", len(rows), schema))
+        return _FakeDF(self.log)
 
     def sql(self, query):
         self.log.append(("sql", query))
@@ -103,6 +128,43 @@ def test_iceberg_branch_probes_namespace_and_routes_tables(spark, tmp_path):
     assert ("append", "lake.erns.metrics") in fake.log
 
     assert io.read("signatures") == "df:lake.erns.signatures"
+
+
+def test_iceberg_stage_accounting_reads_the_files_metadata_table(tmp_path):
+    """On Iceberg a stage's per-file rows and bytes come from
+    `<ns>.<table>.files`, its stage_metrics rows are appended as one
+    driver-built frame, and the read-back is the catalog table."""
+    from hexspark.pipeline.metrics import METRICS_SCHEMA, record_stage
+
+    files = {
+        "lake.erns.edges.files": [
+            ("s3://lake/erns/edges/data/b.parquet", 5, 700),
+            ("s3://lake/erns/edges/data/a.parquet", 3, 500),
+        ]
+    }
+    fake = _FakeSpark(ICEBERG_CONF, files=files)
+    io = TableIO(fake, str(tmp_path / "wd"))
+    assert io.data_files("edges") == [(3, 500), (5, 700)]
+    assert ("readTable", "lake.erns.edges.files") in fake.log
+    assert (
+        "select", "lake.erns.edges.files",
+        ("file_path", "record_count", "file_size_in_bytes"),
+    ) in fake.log
+
+    fake.log.clear()
+    marks = []
+    manifest = {"run_id": "r1", "completed": {}}
+    out = record_stage(
+        io, manifest, "edges", None, 42, lambda m, s, e: marks.append((s, e))
+    )
+    assert out == "df:lake.erns.edges"
+    assert marks == [
+        ("edges", {"rows": 8, "wall_ms": 42, "files": 2, "bytes": 1200})
+    ]
+    assert manifest["executions"] == 1
+    assert ("createDataFrame", 2, METRICS_SCHEMA) in fake.log
+    assert ("append", "lake.erns.stage_metrics") in fake.log
+    assert not os.path.exists(tmp_path / "wd")  # nothing written locally
 
 
 def test_iceberg_probe_failure_falls_back_to_parquet(tmp_path):

@@ -124,3 +124,179 @@ def test_torn_manifest_dump_keeps_previous_manifest(spark, first_run, monkeypatc
     result = Runner(spark, workdir, PipelineConfig(max_dist=40)).run(tr)
     assert result.stages_run == ["clusters"]
     assert _rows(result.tables["clusters"], ["conv_id", "cluster_id"]) == clusters
+
+
+# -- stage accounting: from the files a stage's write leaves ----------------
+
+CFG = PipelineConfig(max_dist=40)
+
+
+class _Crash(Exception):
+    pass
+
+
+def _table_rows(spark, workdir, stage):
+    return sorted(tuple(r) for r in spark.read.parquet(os.path.join(workdir, stage)).collect())
+
+
+def _data_files(workdir, stage):
+    root = os.path.join(workdir, stage)
+    return [
+        os.path.join(root, f)
+        for f in sorted(os.listdir(root))
+        if not f.startswith(("_", "."))
+    ]
+
+
+@pytest.fixture(scope="module")
+def clean_run(spark, first_run, tmp_path_factory):
+    """A clean run in its own workdir, untouched by the crash tests above."""
+    tr = first_run[0]
+    workdir = str(tmp_path_factory.mktemp("clean"))
+    result = Runner(spark, workdir, CFG).run(tr)
+    tables = {s: _table_rows(spark, workdir, s) for s in Runner.STAGES}
+    return workdir, result, tables
+
+
+def _assert_one_row_set_per_execution(spark, workdir):
+    with open(os.path.join(workdir, "run_manifest.json")) as f:
+        manifest = json.load(f)
+    metrics = spark.read.parquet(os.path.join(workdir, "stage_metrics")).collect()
+    by_stage = {s: [r for r in metrics if r["stage"] == s] for s in Runner.STAGES}
+    # none duplicated, none lost: one row set whose rows sum to the table's
+    for stage, mine in by_stage.items():
+        assert len({(r["run_id"], r["ts"]) for r in mine}) == 1, stage
+        assert sum(r["rows_out"] for r in mine) == manifest["completed"][stage]["rows"], stage
+    for stage, mine in by_stage.items():
+        files = manifest["completed"][stage]["files"]
+        assert sorted(r["partition_id"] for r in mine) == list(range(files)), stage
+
+
+@pytest.mark.parametrize(
+    "point", ["after_table_write", "after_metrics_write", "before_mark"]
+)
+def test_crash_in_stage_accounting_resumes_without_duplicate_metrics(
+    spark, first_run, clean_run, tmp_path, monkeypatch, point
+):
+    """A crash at each step between a stage's table write and its manifest
+    mark, then a rerun: the tables equal a clean run's, and stage_metrics
+    holds exactly one row set per stage execution."""
+    from hexspark.pipeline.io import TableIO
+
+    tr = first_run[0]
+    workdir = str(tmp_path / "wd")
+    crash_stage = "edges"
+    if point == "after_table_write":
+        real_write = TableIO.write
+
+        def write(io, df, name, *args, **kwargs):
+            real_write(io, df, name, *args, **kwargs)
+            if name == crash_stage:
+                raise _Crash(point)
+
+        monkeypatch.setattr(TableIO, "write", write)
+    elif point == "after_metrics_write":
+        real_put = TableIO.put_rows
+
+        def put_rows(io, rows, schema, name, key):
+            real_put(io, rows, schema, name, key)
+            if rows[0][0] == crash_stage:
+                raise _Crash(point)
+
+        monkeypatch.setattr(TableIO, "put_rows", put_rows)
+    else:
+        real_mark = Runner._mark
+
+        def mark(runner, manifest, stage, *args):
+            if stage == crash_stage:
+                raise _Crash(point)
+            real_mark(runner, manifest, stage, *args)
+
+        monkeypatch.setattr(Runner, "_mark", mark)
+    with pytest.raises(_Crash):
+        Runner(spark, workdir, CFG).run(tr)
+    monkeypatch.undo()
+
+    result = Runner(spark, workdir, CFG).run(tr)
+    assert result.stages_skipped == ["conversations", "signatures", "candidate_pairs"]
+    assert result.stages_run == ["edges", "clusters"]
+    _, _, clean_tables = clean_run
+    for stage in Runner.STAGES:
+        assert _table_rows(spark, workdir, stage) == clean_tables[stage], stage
+    _assert_one_row_set_per_execution(spark, workdir)
+
+
+def _jobs_in_group(spark, group, fn) -> int:
+    sc = spark.sparkContext
+    sc.setJobGroup(group, group)
+    try:
+        fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    # the status tracker is fed by the listener bus: drain it first
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group))
+
+
+def test_stage_launches_no_job_after_its_write(spark, tmp_path):
+    """A stage run through the runner launches exactly the jobs of a bare
+    parquet write of its frame: accounting and read-back add none."""
+    from hexspark.pipeline.runner import PipelineResult
+
+    df = spark.range(0, 2000, numPartitions=4).select(
+        F.col("id").cast("string").alias("conv_id"), (F.col("id") % 7).alias("k")
+    )
+    bare = _jobs_in_group(
+        spark, "bare-write", lambda: df.write.parquet(str(tmp_path / "bare"))
+    )
+    runner = Runner(spark, str(tmp_path / "wd"))
+    manifest = runner._manifest()
+    result = PipelineResult(run_id=manifest["run_id"])
+    staged = _jobs_in_group(
+        spark, "runner-stage",
+        lambda: runner._run_stage(manifest, result, "stage_t", lambda: df),
+    )
+    assert bare >= 1
+    assert staged == bare
+    assert result.tables["stage_t"].count() == 2000
+
+
+def test_read_back_keeps_the_written_schema(spark, clean_run):
+    workdir, result, _ = clean_run
+    for stage in Runner.STAGES:
+        inferred = spark.read.parquet(os.path.join(workdir, stage)).schema
+        assert result.tables[stage].schema == inferred, stage
+
+
+def test_manifest_reports_rows_files_and_bytes(spark, clean_run):
+    """Each stage entry records the files and bytes its write left, and
+    its stage_metrics rows are those files' row counts, in file order."""
+    workdir, result, _ = clean_run
+    with open(os.path.join(workdir, "run_manifest.json")) as f:
+        manifest = json.load(f)
+    metrics = spark.read.parquet(os.path.join(workdir, "stage_metrics"))
+    assert metrics.schema.simpleString() == (
+        "struct<stage:string,partition_id:int,rows_out:bigint,"
+        "wall_ms:bigint,run_id:string,ts:timestamp>"
+    )
+    rows = metrics.collect()
+    for stage in Runner.STAGES:
+        entry = manifest["completed"][stage]
+        files = _data_files(workdir, stage)
+        assert entry["files"] == len(files), stage
+        assert entry["bytes"] == sum(os.path.getsize(p) for p in files), stage
+        assert entry["rows"] == result.tables[stage].count(), stage
+        per_file = {
+            os.path.basename(r[0]): r[1]
+            for r in spark.read.parquet(os.path.join(workdir, stage))
+            .groupBy(F.input_file_name())
+            .count()
+            .collect()
+        }
+        got = sorted(
+            (r["partition_id"], r["rows_out"]) for r in rows if r["stage"] == stage
+        )
+        assert got == [
+            (i, per_file.get(os.path.basename(p), 0)) for i, p in enumerate(files)
+        ], stage
