@@ -103,6 +103,12 @@ class KNTrigramLM:
     k: float
     min_count: int
 
+    def unpersist(self) -> None:
+        """Release the trigram table train_kn_lm cached; the other count
+        tables are plans over it and recompute from the source if used
+        again."""
+        self.trigrams.unpersist()
+
 
 def train_kn_lm(
     docs: DataFrame,

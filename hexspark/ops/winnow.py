@@ -22,8 +22,8 @@ the DuckDB oracle in tests/test_winnow.py):
   in DuckDB, conv(substring(md5(g),1,12),16,10) in Spark; identical
   values by construction, no engine-native hash involved).
 * windows: every w consecutive gram hashes. From each window select the
-  MINIMUM hash; ties broken by the RIGHTMOST position (the paper's
-  robust-winnowing tie rule, which makes the selection depend only on
+  MINIMUM hash; ties broken by the RIGHTMOST position (the paper's tie
+  rule for plain winnowing, which makes the selection depend only on
   local content). Output the (global gram position, hash) of the
   selection; adjacent windows usually select the same gram, so the
   per-document output is deduplicated.

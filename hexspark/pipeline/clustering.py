@@ -1,9 +1,20 @@
 """B8/B9 — transitive clustering: connected components on the match-edge
-DataFrame via alternating large-star / small-star (Kiveris et al.,
+DataFrame, evaluated on the driver when the graph fits there and by
+alternating large-star / small-star rounds otherwise (Kiveris et al.,
 "Connected Components in MapReduce and Beyond", SoCC'14 — public paper; see
-PAPERS.md), expressed entirely as DataFrame aggregations and joins.
+PAPERS.md). Choosing local or distributed evaluation by input size is the
+hybrid evaluation of "Hybrid Evaluation for Distributed Iterative Matrix
+Computation" (SIGMOD'21, PAPERS.md), the way AQE picks a broadcast or a
+shuffle join.
 
-Why this algorithm at 100 TB: each round is one groupBy + one join — no
+The size test is the fetch: one ``limit(bound + 1).toArrow()`` of the
+non-loop edges. At most ``bound`` rows come back → the components are
+labelled on the driver in numpy (factorize the ids, then hook roots and
+pointer-jump until every edge's endpoints share a root) and returned as one
+driver-built frame. More rows → the star rounds run over the edge set in
+Spark. The bound is sized from the driver's memory (_driver_edge_bound).
+
+Why the star rounds at 100 TB: each round is one groupBy + one join — no
 driver-side graph, no per-node Python — and converges in O(log^2 n) rounds
 (in practice <10 for duplicate-cluster graphs, whose components are tiny).
 Each round's result is localCheckpoint()ed to cut lineage so the loop's
@@ -14,13 +25,20 @@ instead of one round later like a fixpoint comparison would.
 
 Node ids are the string conv_ids; "min" is lexicographic min, deterministic
 and collision-free at any scale (no 64-bit hash-collision risk at 10^12
-nodes).
+nodes). Both paths name a component by the same minimum: Python orders
+``str`` by code point, which is the UTF-8 byte order of Spark's
+UTF8_BINARY string comparison.
 """
 
 from __future__ import annotations
 
+import numpy as np
+import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+# driver bytes budgeted per fetched edge (see _driver_edge_bound)
+_DRIVER_BYTES_PER_EDGE = 512
 
 
 def _large_star(edges: DataFrame) -> DataFrame:
@@ -88,6 +106,69 @@ def _is_star_forest(edges: DataFrame) -> bool:
     return bad.isEmpty()
 
 
+def _driver_edge_bound(spark) -> int:
+    """Largest edge count connected_components labels on the driver.
+
+    Rule: the fetch holds the edges twice on the driver — as Arrow batches
+    in the JVM (counted against spark.driver.maxResultSize) and as an
+    Arrow table plus its numpy copies in Python — about 512 bytes per edge
+    for ids of up to ~40 characters. The bound gives that 1/8 of the
+    smaller of spark.driver.memory and spark.driver.maxResultSize (0 =
+    unlimited, so the memory alone), i.e. one edge per 4 KiB: a 4g driver
+    labels up to 1,048,576 edges locally."""
+    conf = spark.sparkContext._jsc.sc().conf()
+    budget = conf.getSizeAsMb("spark.driver.memory", "1g") << 20
+    result_cap = conf.getSizeAsBytes("spark.driver.maxResultSize", "1g")
+    if result_cap > 0:
+        budget = min(budget, result_cap)
+    # limit() takes a 32-bit row count
+    return min(budget // 8 // _DRIVER_BYTES_PER_EDGE, 2**31 - 2)
+
+
+def _label_on_driver(table: pa.Table) -> tuple[np.ndarray, np.ndarray]:
+    """Edge table (u, v) → (node ids, each node's component minimum).
+
+    np.unique sorts the ids, so a node's code is its rank and the smallest
+    code of a component is its minimum id. Each round hooks every edge's
+    larger root under the smallest root it meets (np.minimum.at), then
+    pointer-jumps until every node points at a root. parent[x] <= x holds
+    throughout, so a component's minimum stays a root; while any edge has
+    endpoints under two roots, the larger one is re-parented, so the
+    number of roots falls every round and the loop ends with one root —
+    the minimum — per component."""
+    m = table.num_rows
+    ends = np.concatenate(
+        [table.column(c).to_numpy(zero_copy_only=False) for c in ("u", "v")]
+    )
+    ids, codes = np.unique(ends, return_inverse=True)
+    a, b = codes[:m], codes[m:]
+    parent = np.arange(len(ids))
+    while True:
+        ra, rb = parent[a], parent[b]
+        live = ra != rb
+        if not live.any():
+            break
+        ra, rb = ra[live], rb[live]
+        np.minimum.at(parent, np.maximum(ra, rb), np.minimum(ra, rb))
+        while True:
+            jumped = parent[parent]
+            if np.array_equal(jumped, parent):
+                break
+            parent = jumped
+    return ids, ids[parent]
+
+
+def _star_clusters(state: DataFrame) -> DataFrame:
+    """Converged star-forest state (child u → root v) → clusters: every
+    edge is (node, root); roots appear only on the right side → add
+    (root, root) rows."""
+    return state.select(
+        F.col("u").alias("conv_id"), F.col("v").alias("cluster_id")
+    ).union(
+        state.select(F.col("v").alias("conv_id"), F.col("v").alias("cluster_id")).distinct()
+    ).distinct()
+
+
 def connected_components(
     edges: DataFrame, max_iter: int = 20
 ) -> tuple[DataFrame, int]:
@@ -97,19 +178,39 @@ def connected_components(
     Nodes with no surviving edge are not emitted — callers union isolated
     nodes as singleton clusters (see runner).
 
+    Up to _driver_edge_bound(spark) non-loop edges are labelled on the
+    driver from one fetch; the result is then a driver-built frame and
+    ``rounds`` is 1 when any edge survives, 0 otherwise. A larger graph
+    runs the large-star/small-star rounds, ``rounds`` being their number,
+    and raises RuntimeError if they do not converge within max_iter.
+
     Returns (clusters, rounds_used).
     """
     # no input distinct: duplicate edges cannot change any round's output
     # (min-aggregations are idempotent and each round ends in its own
     # distinct), so deduplicating here would be a pure extra shuffle of the
     # largest edge set the loop ever sees.
-    cur = (
-        edges.select(F.col("conv_id_a").alias("u"), F.col("conv_id_b").alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .localCheckpoint(eager=True)
-    )
+    cur = edges.select(
+        F.col("conv_id_a").alias("u"), F.col("conv_id_b").alias("v")
+    ).where(F.col("u") != F.col("v"))
+    spark = edges.sparkSession
+    bound = _driver_edge_bound(spark)
+    fetched = cur.limit(bound + 1).toArrow()
+    if fetched.num_rows <= bound:
+        ids, roots = _label_on_driver(fetched)
+        schema = _star_clusters(cur).schema
+        table = pa.table(
+            [
+                pa.array(ids.tolist(), fetched.schema.field("u").type),
+                pa.array(roots.tolist(), fetched.schema.field("v").type),
+            ],
+            names=schema.fieldNames(),
+        )
+        return spark.createDataFrame(table, schema), int(fetched.num_rows > 0)
+    # the fetch found more than `bound` edges, so the set is not empty
+    cur = cur.localCheckpoint(eager=True)
     rounds = 0
-    converged = cur.isEmpty()
+    converged = False
     while not converged and rounds < max_iter:
         rounds += 1
         cur = _small_star(_large_star(cur)).localCheckpoint(eager=True)
@@ -121,14 +222,7 @@ def connected_components(
             f"connected components did not converge within max_iter={max_iter} "
             "rounds; raise cc_max_iter (expected O(log^2 n) rounds)"
         )
-    # converged state: every edge is (node, root); roots themselves appear
-    # only on the right side → add (root, root) rows.
-    clusters = cur.select(
-        F.col("u").alias("conv_id"), F.col("v").alias("cluster_id")
-    ).union(
-        cur.select(F.col("v").alias("conv_id"), F.col("v").alias("cluster_id")).distinct()
-    ).distinct()
-    return clusters, rounds
+    return _star_clusters(cur), rounds
 
 
 def _pivot_priority(col, salt: str):
@@ -420,9 +514,10 @@ def threshold_components(
     locally checkpointed — each tighter slice re-filters that (much
     smaller) cached edge set, so the full candidate stream is read exactly
     once no matter how many thresholds are requested. Each slice then runs
-    the same large-star/small-star loop as production clustering
-    (O(log^2 n) rounds, exchanges keyed on node ids only). k slices = k
-    small CC runs over nested edge sets, embarrassingly independent."""
+    the same connected_components as production clustering: on the driver
+    when the slice fits its bound, else O(log^2 n) star rounds whose
+    exchanges are keyed on node ids only. k slices = k small CC runs over
+    nested edge sets, embarrassingly independent."""
     if not thresholds:
         raise ValueError("thresholds must be non-empty")
     ts = sorted(set(thresholds))

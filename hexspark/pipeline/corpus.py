@@ -191,6 +191,8 @@ class CorpusRunner:
 
         scrubbed = self._ensure(manifest, result, "scrubbed", build_scrubbed)
 
+        models = []  # trained KN models, released once the stage is written
+
         def build_quality():
             rep = repetition_filter(scrubbed, id_c, txt, cfg.repetition_thresholds)
             kept = scrubbed.join(
@@ -202,6 +204,7 @@ class CorpusRunner:
                 from hexspark.ops.kn import kn_score, train_kn_lm
 
                 lm3 = train_kn_lm(kept, txt, min_count=cfg.lm_min_count)
+                models.append(lm3)
                 scores = kn_score(kept, lm3, id_c, txt)
             else:
                 lm = train_bigram_lm(kept, txt, min_count=cfg.lm_min_count)
@@ -213,6 +216,8 @@ class CorpusRunner:
             return kept.join(ok, id_c, "left_semi")
 
         quality = self._ensure(manifest, result, "quality", build_quality)
+        for lm3 in models:
+            lm3.unpersist()
 
         def build_deduped():
             groups = exact_dedup_groups(quality, txt, id_c)

@@ -4,12 +4,13 @@ This is the plan a long-running job submits: fingerprint → wide LSH
 blocking → codegen-gated scoring → connected components as ONE action
 chain, with no intermediate persists — candidate pairs stream from the
 band self-join through the hamming gate into the Arrow scorer and the CC
-input checkpoint. Only the signature table is cached (it feeds the skew
-probe, the band join, and the singleton union). The staged Runner
-materializes every stage instead, buying resume + lineage at the cost of
-writing each intermediate; benchmarks, tests and the scaling evidence all
-measure THIS function so they cannot drift from each other or from the
-production plan shape.
+edge fetch (which either labels the graph on the driver or, above the
+driver bound, feeds the checkpointed star rounds). Only the signature
+table is cached (it feeds the skew probe, the band join, and the singleton
+union). The staged Runner materializes every stage instead, buying resume
++ lineage at the cost of writing each intermediate. bench.py's fused
+metric and scripts/scaling_job.py's `pipeline_fused` timing measure THIS
+function; perfbench and the pipeline tests measure the staged Runner.
 """
 
 from __future__ import annotations
@@ -31,8 +32,9 @@ def fused_clusters(
     """transcripts → (clusters, signatures, cc_rounds).
 
     The returned signatures DataFrame is persisted — the caller unpersists
-    it once the clusters have been consumed. cc_rounds is the number of
-    large-star/small-star rounds the convergence took (the CC loop runs
+    it once the clusters have been consumed. cc_rounds is what
+    clustering.connected_components reports: 1 for a non-empty graph
+    labelled on the driver, else the number of large-star/small-star rounds (CC runs
     eagerly; everything downstream of `clusters` stays lazy).
     """
     sigs = simhash.signatures(assemble.assemble_conversations(transcripts)).persist()

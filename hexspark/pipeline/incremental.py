@@ -25,7 +25,8 @@ docstring); the two paths may then emit different O(size) spanning pairs,
 and equality holds at cluster level as long as chain pairs pass the score
 gate (they are near-identical members of a mega-duplicate block, which is
 what makes them a block) — connectivity, not pair identity, is the contract
-there, exactly as in the batch path.
+there, exactly as in the batch path (tested on a mixed corpus through the
+Runner: test_oversize_block_fold_matches_batch_in_a_mixed_corpus).
 
 Reference anchor: the reference library has no incremental facility (its
 whole surface is 5 scalar calls, python_hexhamming.cc:421-428); this module
@@ -77,7 +78,9 @@ def merge_clusters(
     in. Members are re-expanded afterwards with one join (prior root -> new
     root). Untouched prior clusters stream through an anti-join unchanged —
     no CC iteration ever sees them, so per-batch cost scales with the
-    batch, not the corpus.
+    batch, not the corpus. That condensed graph is batch-sized, so
+    connected_components labels it on the driver unless it passes the
+    driver bound.
 
     cluster_id stays min(member) after merges: every prior root is the min
     of its members, so the min over a merged component's {roots ∪ new node

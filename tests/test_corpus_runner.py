@@ -104,6 +104,26 @@ def test_kn_trigram_gate_drops_gibberish(spark, runner):
         CorpusRunner(spark, "/tmp/never", CorpusConfig(lm_order=4))
 
 
+def test_kn_quality_stage_releases_the_trigram_cache(spark, runner, monkeypatch):
+    """train_kn_lm caches its trigram table for the count tables built on
+    it; the corpus runner releases it once the quality stage is written."""
+    from hexspark.ops import kn
+
+    trained = []
+    train = kn.train_kn_lm
+
+    def keep(*args, **kwargs):
+        trained.append(train(*args, **kwargs))
+        return trained[-1]
+
+    monkeypatch.setattr(kn, "train_kn_lm", keep)
+    docs = spark.createDataFrame(_docs(), _DDL)
+    cfg = CorpusConfig(max_perplexity=60.0, lm_order=3)
+    runner(cfg, sub="wd_kn_release").run(docs)
+    assert len(trained) == 1
+    assert trained[0].trigrams.is_cached is False
+
+
 def test_resume_skips_completed_stages(spark, runner, tmp_path):
     docs = spark.createDataFrame(_docs(), _DDL)
     rn = runner(sub="wd_resume")

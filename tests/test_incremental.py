@@ -151,6 +151,48 @@ def test_mega_block_bridged_across_batches(spark):
     assert final.agg(F.min("cluster_id")).collect()[0][0] == "c000"
 
 
+def test_oversize_block_fold_matches_batch_in_a_mixed_corpus(spark, tmp_path):
+    """The module's oversize-block contract on the production surface: 40
+    near-identical conversations (one mega-block, above max_block=16, so
+    salt-chained) beside ordinary conversations with their own duplicates,
+    both split across a batch run and a fold. The fold's clusters equal a
+    batch run's over the union."""
+    from hexspark.pipeline.runner import PipelineConfig, Runner
+
+    boiler = ("thank you for contacting support your ticket has been received "
+              "and an agent will reply within two business days please keep "
+              "this reference for your records")
+    mega = spark.createDataFrame(
+        [(f"mega_{i:03d}", 0, "assistant", f"{boiler} ref {i}", "none")
+         for i in range(40)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    tr = fixtures.transcripts_df(spark, n_base=60, seed=23, mutation_rate=0.01)
+    tr = tr.unionByName(mega).cache()
+    ids = tr.select("conv_id").distinct()
+    old_ids = ids.where(F.pmod(F.xxhash64("conv_id"), F.lit(3)) != 0).cache()
+    tr_old = tr.join(old_ids, "conv_id")
+    tr_new = tr.join(old_ids, "conv_id", "left_anti")
+    assert tr_new.where(F.col("conv_id").startswith("mega_")).count() > 0
+    assert tr_old.where(F.col("conv_id").startswith("mega_")).count() > 0
+
+    cfg = PipelineConfig(max_dist=MAX_DIST, max_block=16)
+    full = Runner(spark, str(tmp_path / "full"), cfg)
+    full_result = full.run(tr)
+    assert full.io.read("skipped_blocks").count() > 0  # the block is oversize
+    want = {(r.conv_id, r.cluster_id) for r in full_result.tables["clusters"].collect()}
+    mega_clusters = {c for v, c in want if v.startswith("mega_")}
+    assert mega_clusters == {"mega_000"}
+    assert len({c for _, c in want}) > 1  # ordinary clusters beside it
+
+    inc = Runner(spark, str(tmp_path / "inc"), cfg)
+    inc.run(tr_old)
+    result = inc.run_incremental(tr_new)
+    got = {(r.conv_id, r.cluster_id) for r in result.tables["clusters"].collect()}
+    assert got == want
+    tr.unpersist(), old_ids.unpersist()
+
+
 def test_runner_incremental_matches_full_batch_run(spark, split_data, tmp_path):
     """Production surface: Runner.run on batch A, run_incremental on batch
     B, final clusters table == Runner.run on A ∪ B."""

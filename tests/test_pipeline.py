@@ -26,6 +26,16 @@ N_BASE = 120
 SEED = 42
 
 
+@pytest.fixture(params=["driver", "distributed"])
+def cc_path(request, monkeypatch):
+    """Force clustering.connected_components down one evaluation path: a
+    huge driver bound labels every graph on the driver, a zero bound sends
+    every non-empty graph through the star rounds."""
+    bound = 10**9 if request.param == "driver" else 0
+    monkeypatch.setattr(clustering, "_driver_edge_bound", lambda spark: bound)
+    return request.param
+
+
 @pytest.fixture(scope="module")
 def data(spark, tmp_path_factory):
     tr = fixtures.transcripts_df(spark, n_base=N_BASE, seed=SEED, mutation_rate=0.01)
@@ -125,7 +135,8 @@ def test_connected_components_vs_union_find_oracle(spark, data):
         r["conv_id"]: r["cluster_id"] for r in result.tables["clusters"].collect()
     }
 
-    # driver-side union-find oracle (test-only; the engine never does this)
+    # pure-Python union-find oracle (test-only; independent of both CC
+    # evaluation paths, the numpy driver labelling and the star rounds)
     parent: dict[str, str] = {}
 
     def find(x: str) -> str:
@@ -223,12 +234,13 @@ def test_wide_path_equals_thin_path(spark):
     sigs.unpersist()
 
 
-def test_connected_components_multi_parent_counterexample(spark):
+def test_connected_components_multi_parent_counterexample(spark, cc_path):
     """Regression: a state where no root appears as a child but one node
     has TWO parents fooled the earlier root-as-child-only convergence test
     into stopping a round early, splitting one true component into two
     clusters (and assigning that node twice). This exact graph reproduced
-    the corruption."""
+    the corruption. Run on both CC paths, so the star-forest test keeps its
+    coverage while small graphs are labelled on the driver."""
     edges = spark.createDataFrame(
         [("c2", "c4"), ("c5", "c3"), ("c5", "c4"),
          ("c5", "c6"), ("c6", "c0"), ("c6", "c5")],
@@ -242,10 +254,11 @@ def test_connected_components_multi_parent_counterexample(spark):
     assert len(rows) == len({r.conv_id for r in rows})  # one row per node
 
 
-def test_connected_components_random_graphs_vs_union_find(spark):
+def test_connected_components_random_graphs_vs_union_find(spark, cc_path):
     """Randomized sweep: CC over many small random graphs must match a
     union-find oracle exactly (the multi-parent early-stop bug above hit
-    ~1% of small random graphs — a fixed fixture cannot cover the space)."""
+    ~1% of small random graphs — a fixed fixture cannot cover the space).
+    Run on both CC paths."""
     import random
 
     rng = random.Random(424242)
