@@ -575,8 +575,7 @@ def lpa_communities(
     groups denser INSIDE than across, so an over-merged component (two
     entities glued by a few bad edges) splits along its sparse cut
     without needing triangle support (robust_components) or scores
-    (HAC). The unseeded complement of pipeline/labelprop.propagate_labels
-    (which needs a trusted registry).
+    (HAC).
 
     Deterministic variant: every node starts labeled with its own id;
     each round every node SIMULTANEOUSLY adopts the most frequent label

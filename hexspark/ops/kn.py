@@ -116,16 +116,15 @@ def train_kn_lm(
     min_count: int = 2,
     d: float = 0.75,
     k: float = 0.5,
-    broadcast_vocab: bool = True,
 ) -> KNTrigramLM:
     """Fit the interpolated-KN trigram LM (five count aggregates + one
     scalar collect). ``d`` is the absolute discount, ``k`` the add-k
     smoothing of the continuation-unigram base.
 
     The UNK mapping costs one extra exchange: tokens explode to the
-    position grain, the vocabulary membership join runs there (broadcast
-    when ``broadcast_vocab``, shuffle otherwise — a min_count-capped web
-    vocabulary is tens of millions of rows, so either can be right), and
+    position grain, the vocabulary membership join runs there (AQE picks
+    broadcast or shuffle from the measured vocabulary size — a
+    min_count-capped web vocabulary is tens of millions of rows), and
     the mapped sequence re-gathers per document to form n-grams. Scoring
     pays the same shape, so train and score tokenize AND map
     identically — the property the closed-vocabulary treatment exists
@@ -154,8 +153,6 @@ def train_kn_lm(
     rows = words.select(F.monotonically_increasing_id().alias("_row"), "_ws")
     pos = rows.select("_row", F.posexplode("_ws").alias("_i", "w"))
     vocab_in = vocab.withColumn("_in", F.lit(1))
-    if broadcast_vocab:
-        vocab_in = F.broadcast(vocab_in)
     mapped = (
         pos.join(vocab_in, "w", "left")
         .select(
@@ -248,23 +245,22 @@ def kn_score(
     lm: KNTrigramLM,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document (n_tokens, cross_entropy bits/token, perplexity)
     under the interpolated-KN trigram model. Position grain: one in-row
     transform carrying (w_prev2, w_prev, w), so every order's term flows
-    through ONE explode + equi-joins on the n-gram keys."""
+    through ONE explode + equi-joins on the n-gram keys. The joins carry
+    no broadcast hint: AQE broadcasts a model table only when its
+    measured size fits the threshold, so a corpus-scale trigram table is
+    shuffle-joined instead of shipped to every executor."""
     uni, bi, tri = lm.unigrams, lm.bigrams, lm.trigrams
     ctx2, ctx3 = lm.ctx2, lm.ctx3
-    if broadcast_model:
-        uni, bi, tri = F.broadcast(uni), F.broadcast(bi), F.broadcast(tri)
-        ctx2, ctx3 = F.broadcast(ctx2), F.broadcast(ctx3)
     dlit = F.lit(lm.d)
 
     base = docs.select(
         F.col(id_col).alias("_id"), words_array(F.col(text_col)).alias("_raw")
     )
-    # UNK-map in-row against the broadcast vocab? The vocab can be huge;
+    # UNK-map in-row against a broadcast vocab? The vocab can be huge;
     # map on the exploded grain instead (same mapping as training).
     pos0 = base.select(
         "_id",

@@ -12,7 +12,7 @@ Model definition (exact, documented — the pure-Python test oracle
 replays it arithmetic-for-arithmetic):
 
 * Tokens: ops/quality.words_array (lowercased [a-z0-9]+ runs) — the SAME
-  normalization as the repetition filters and decontamination, so every
+  normalization as the repetition filters and the KN trigram LM, so every
   text operator in the package tokenizes identically.
 * Vocabulary V: tokens with train count >= min_count; N = total token
   occurrences (all tokens, including rare ones — mass never vanishes).
@@ -116,17 +116,14 @@ def lm_score(
     lm: BigramLM,
     id_col: str = "doc_id",
     text_col: str = "text",
-    broadcast_model: bool = True,
 ) -> DataFrame:
     """Per-document (n_tokens, cross_entropy bits/token, perplexity).
 
-    broadcast_model=True broadcasts both count tables (right for a
-    min_count-capped model); set False to let Catalyst pick shuffle
-    joins when the model itself is huge.
+    The count-table joins carry no broadcast hint: AQE broadcasts a table
+    whose measured size fits the threshold (a min_count-capped model) and
+    shuffle-joins a huge one.
     """
     uni, bi = lm.unigrams, lm.bigrams
-    if broadcast_model:
-        uni, bi = F.broadcast(uni), F.broadcast(bi)
     denom_pad = F.lit(lm.k * (lm.vocab_size + 1))
     lp1 = lambda c1: F.log2(
         (F.coalesce(c1, F.lit(0)) + lm.k) / (F.lit(float(lm.n_tokens)) + denom_pad)

@@ -45,9 +45,9 @@ from pyspark.sql import functions as F
 
 def words_array(text_col):
     """Lowercased word array: runs of [a-z0-9] after lowering. Shared
-    normalization for the repetition filters and ops/decontam.py (a
-    contamination check is only sound if both corpora normalize
-    identically — one definition, imported by both)."""
+    normalization for the repetition filters and the language models
+    (ops/lm.py, ops/kn.py): one definition, so every text operator
+    tokenizes identically."""
     return F.regexp_extract_all(F.lower(text_col), F.lit(r"[a-z0-9]+"), F.lit(0))
 
 
@@ -59,9 +59,9 @@ def word_ngrams(words_col, n: int):
     words_array(...) to a named column first), never the words_array
     expression inline — the gram builder reads its input once per F.get,
     so an inlined tokenizer would re-run the regex n times per gram
-    (measured 15x wall-clock on the decontam path at n=8). A projection
-    boundary is enough: CollapseProject declines to inline expensive
-    multiply-referenced expressions."""
+    (measured 15x wall-clock on an 8-gram contamination check). A
+    projection boundary is enough: CollapseProject declines to inline
+    expensive multiply-referenced expressions."""
     size = F.size(words_col)
     idx = F.sequence(F.lit(0), size - n)
     grams = F.transform(

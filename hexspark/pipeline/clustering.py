@@ -256,58 +256,6 @@ def _greedy_mis_clusters(
     loop's plan stays flat. Priorities ride along as columns, so callers
     may derive them from joins (star: degree table) or pure expressions
     (pivot) without changing the engine."""
-    orig, mis, rounds = _greedy_mis(orig, max_iter, what)
-    all_nodes = (
-        orig.select("u").union(orig.select(F.col("v").alias("u"))).distinct()
-        .localCheckpoint(eager=True)
-    )
-    if rounds == 0:
-        return (
-            all_nodes.select(
-                F.col("u").alias("conv_id"), F.col("u").alias("cluster_id")
-            ),
-            rounds,
-        )
-    sym_all = orig.select("u", "v", "pv").unionByName(
-        orig.select(
-            F.col("v").alias("u"), F.col("u").alias("v"),
-            F.col("pu").alias("pv"),
-        )
-    )
-    # OUT = nodes adjacent to some center; everything else is IN the MIS
-    # (including unresolved leftovers — all their neighbors were knocked
-    # OUT in earlier rounds, so they are singleton-or-late centers)
-    mis = all_nodes.join(
-        sym_all.join(mis.select(F.col("u").alias("v")), "v", "left_semi")
-        .select("u").distinct(),
-        "u",
-        "left_anti",
-    ).localCheckpoint(eager=True)
-    # assign each OUT node to its minimum-priority center neighbor
-    assigned = (
-        sym_all.join(mis.select(F.col("u").alias("v")), "v", "left_semi")
-        .join(mis.select(F.col("u")), "u", "left_anti")
-        .groupBy("u")
-        .agg(F.min_by("v", F.col("pv")).alias("cluster_id"))
-    )
-    clusters = mis.select(
-        F.col("u").alias("conv_id"), F.col("u").alias("cluster_id")
-    ).unionByName(assigned.select(F.col("u").alias("conv_id"), "cluster_id"))
-    return clusters, rounds
-
-
-def _greedy_mis(
-    orig: DataFrame, max_iter: int, what: str
-) -> tuple[DataFrame, DataFrame, int]:
-    """The round engine under _greedy_mis_clusters: compute the
-    lexicographically-first maximal independent set of the priority-
-    annotated edge graph ``orig(u, pu, v, pv)``. Returns (checkpointed
-    orig, mis_from_rounds(u), rounds) — callers that need the FULL MIS
-    must still add never-touched leftovers (nodes all of whose neighbors
-    were knocked out earlier): _greedy_mis_clusters does so via the OUT
-    complement, canopy center selection does the same. Exposed separately
-    so overlapping-cover algorithms (canopy) can reuse the center
-    selection without the partition assignment."""
     orig = orig.localCheckpoint(eager=True)
     cur = orig
     pivot_parts: list[DataFrame] = []
@@ -346,10 +294,46 @@ def _greedy_mis(
             .select("u", "pu", "v", "pv")  # USING joins move the key first
             .localCheckpoint(eager=True)
         )
-    early = pivot_parts[0] if pivot_parts else orig.select("u").limit(0)
+    all_nodes = (
+        orig.select("u").union(orig.select(F.col("v").alias("u"))).distinct()
+        .localCheckpoint(eager=True)
+    )
+    if rounds == 0:
+        return (
+            all_nodes.select(
+                F.col("u").alias("conv_id"), F.col("u").alias("cluster_id")
+            ),
+            rounds,
+        )
+    centers = pivot_parts[0]
     for part in pivot_parts[1:]:
-        early = early.unionByName(part)
-    return orig, early, rounds
+        centers = centers.unionByName(part)
+    sym_all = orig.select("u", "v", "pv").unionByName(
+        orig.select(
+            F.col("v").alias("u"), F.col("u").alias("v"),
+            F.col("pu").alias("pv"),
+        )
+    )
+    # OUT = nodes adjacent to some center; everything else is IN the MIS
+    # (including unresolved leftovers — all their neighbors were knocked
+    # OUT in earlier rounds, so they are singleton-or-late centers)
+    mis = all_nodes.join(
+        sym_all.join(centers.select(F.col("u").alias("v")), "v", "left_semi")
+        .select("u").distinct(),
+        "u",
+        "left_anti",
+    ).localCheckpoint(eager=True)
+    # assign each OUT node to its minimum-priority center neighbor
+    assigned = (
+        sym_all.join(mis.select(F.col("u").alias("v")), "v", "left_semi")
+        .join(mis.select(F.col("u")), "u", "left_anti")
+        .groupBy("u")
+        .agg(F.min_by("v", F.col("pv")).alias("cluster_id"))
+    )
+    clusters = mis.select(
+        F.col("u").alias("conv_id"), F.col("u").alias("cluster_id")
+    ).unionByName(assigned.select(F.col("u").alias("conv_id"), "cluster_id"))
+    return clusters, rounds
 
 
 def pivot_components(

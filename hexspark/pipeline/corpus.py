@@ -32,8 +32,7 @@ last — each stage shrinks the input of the next):
 
 Per-stage drop counts land in the manifest — at 100 TB "how many
 documents did each gate remove" IS the operational dashboard; a gate
-that suddenly drops 40% is the drift alarm (ops/drift.js_divergence is
-the standing companion check).
+that suddenly drops 40% is the drift alarm.
 
 Scale shape: stages 1-2 are projections/doc-keyed aggregates (no
 corpus-wide state), stage 3 is the banded near-dup + CC machinery the

@@ -11,8 +11,8 @@ exist — kill-after-stage-k resume, and a crash at each step of a stage's
 accounting, are exercised by tests/test_resume.py.
 
 Stage graph:
-    transcripts ─ B2 → conversations ─ B3 → signatures ─ B4/B5 → pairs
-    pairs × signatures ─ B6/B7 → edges ─ B8/B9 → clusters
+    transcripts ─ B2 → conversations ─ B3 → signatures ─ B4/B5 → wide pairs
+    wide pairs ─ B6/B7 → edges ─ B8/B9 → clusters
 """
 
 from __future__ import annotations
@@ -76,8 +76,8 @@ class PipelineConfig:
     # progressive / pay-as-you-go resolution; threshold ties all kept).
     # Cuts the quadratic scoring phase's input at
     # near-zero recall cost; the pruned stream lands as its own resumable
-    # stage table (pruned_pairs). Not with extra_passes. Incremental folds
-    # score their new-vs-all pairs UNPRUNED by design: a batch's
+    # stage table (pruned_pairs). Incremental folds score their
+    # new-vs-all pairs UNPRUNED by design: a batch's
     # node-local means over a partial graph would drift the threshold,
     # and skipping the prune on (small) increments is recall-monotone —
     # it can only add edges.
@@ -145,12 +145,11 @@ class PipelineConfig:
     # decides every pair. Allowed names: "suffix" (suffix-array keys,
     # prefix-corruption-robust), "phonetic" (Soundex), "snm" (fixed
     # window extra_snm_window over the global rank), "adaptive_snm"
-    # (boundary-segmented windows). The extra passes carry no signature
-    # chunks, so the union is scored as thin pairs (two attach joins)
-    # instead of wide ones (a pure narrow map over the carried chunks),
-    # and fs/fs_levels/meta_prune (which need the chunks) do not compose
-    # with it; batch-only (the incremental path implements banded
-    # blocking only).
+    # (boundary-segmented windows). The union is widened with both
+    # sides' signature chunks and canon keys (two attach joins) in the
+    # candidate_pairs stage, so every scoring and meta_prune mode reads
+    # it like the LSH pairs; batch-only (the incremental path implements
+    # banded blocking only).
     extra_passes: tuple = ()
     extra_snm_window: int = 10
     # exact containment pre-dedup (pipeline/align.py): before assembly,
@@ -247,15 +246,6 @@ class Runner:
         if unknown:
             raise ValueError(
                 f"unknown extra_passes {unknown!r}; allowed: {allowed_passes}"
-            )
-        if self.cfg.extra_passes and (
-            self.cfg.meta_prune != "off" or self.cfg.scoring_mode != "blend"
-        ):
-            raise ValueError(
-                "extra_passes does not compose with meta_prune, fs or "
-                "fs_levels: the extra passes carry no signature chunks, so "
-                "the union is scored as thin pairs and the CBS weight and "
-                "the FS comparison fields have nothing to read"
             )
         if self.cfg.drop_contained and self.cfg.containment_depth_cap < 1:
             raise ValueError(
@@ -456,7 +446,11 @@ class Runner:
                     F.least("conv_id_a", "conv_id_b").alias("conv_id_a"),
                     F.greatest("conv_id_a", "conv_id_b").alias("conv_id_b"),
                 )
-            return blocking.union_candidates(passes)
+            # widen the union with both sides' chunks and canon keys, so
+            # every run scores (and prunes, and fits FS on) wide pairs
+            return scoring.attach_signatures(
+                blocking.union_candidates(passes), sigs
+            )
 
         pairs = self._run_stage(manifest, result, "candidate_pairs", build_pairs)
 
@@ -487,10 +481,6 @@ class Runner:
 
         def build_edges() -> DataFrame:
             p = pairs
-            if cfg.extra_passes:
-                # provenance (passes, n_passes) stays in the stage table
-                # for lineage; scoring sees only the pair keys
-                p = p.select("conv_id_a", "conv_id_b")
             if cfg.pair_partitions:
                 p = p.repartition(cfg.pair_partitions)
             if cfg.scoring_mode != "blend":
@@ -499,10 +489,6 @@ class Runner:
                 # the model in the manifest so incremental folds reuse it
                 manifest["fs_model"] = self._fit_fs_model(p)
                 return self._fs_scorer(manifest["fs_model"], canon_tf)(p)
-            if cfg.extra_passes:
-                return scoring.score_and_match(
-                    p, sigs, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
-                )
             return scoring.score_wide(
                 p, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
             )

@@ -6,13 +6,12 @@ batches; the match gate is A3's ``dist <= max_dist`` predicate
 (python_hexhamming.cc:62-64). The secondary Jaro-Winkler term runs on the
 short canonical keys, also batch-vectorized (hexspark.columns.jaro_winkler).
 
-Plan shape: the preferred path is score_wide over
-blocking.candidate_pairs_wide — pair rows that already carry both sides'
-signature chunks and canon keys, making scoring a pure narrow map stage
-(codegen hamming gate, then the Arrow Jaro-Winkler kernel on survivors;
-zero joins, zero shuffles). score_and_match/score_pairs remain for thin
-pairs(conv_id_a, conv_id_b): they re-attach signatures with two equi-joins
-(broadcast at sandbox scale via AQE, shuffle joins at 10^12-turn scale).
+Plan shape: score_wide runs over wide pairs — rows that already carry
+both sides' signature chunks and canon keys (blocking.candidate_pairs_wide
+emits them; attach_signatures widens any other pair stream with two
+equi-joins) — making scoring a pure narrow map stage (codegen hamming
+gate, then the Arrow Jaro-Winkler kernel on survivors; zero joins, zero
+shuffles).
 
     score = alpha * (1 - hamming_dist/256) + (1 - alpha) * jw(canon_a, canon_b)
 """
@@ -69,7 +68,11 @@ def hamming_jvm(side_a: str = "a", side_b: str = "b"):
     return expr.cast("long")
 
 
-def _attach_signatures(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
+def attach_signatures(pairs: DataFrame, signatures: DataFrame) -> DataFrame:
+    """Widen pairs(conv_id_a, conv_id_b, ...) with both sides' canon keys
+    and signature chunks — the columns score_wide, the FS scorers and the
+    meta-blocking weight read. Two equi-joins (broadcast at sandbox scale
+    via AQE, shuffle joins at 10^12-turn scale)."""
     sa = signatures.select(
         F.col("conv_id").alias("conv_id_a"),
         F.col("canon").alias("canon_a"),
@@ -108,39 +111,6 @@ def _jw_batches(alpha: float):
             )
 
     return run
-
-
-def score_pairs(pairs: DataFrame, signatures: DataFrame, alpha: float = DEFAULT_ALPHA) -> DataFrame:
-    """pairs(conv_id_a, conv_id_b) × signatures → scored
-    edges(conv_id_a, conv_id_b, hamming_dist, jw, score) for ALL pairs.
-
-    Hamming runs JVM-side (hamming_jvm); Jaro-Winkler + hybrid score run in
-    one mapInArrow stage. Prefer score_and_match when a distance gate
-    applies — it filters in codegen BEFORE paying the Python boundary."""
-    joined = _attach_signatures(pairs, signatures).withColumn(
-        "hamming_dist", hamming_jvm()
-    )
-    return joined.select(
-        "conv_id_a", "conv_id_b", "hamming_dist", "canon_a", "canon_b"
-    ).mapInArrow(_jw_batches(alpha), _JW_SCHEMA)
-
-
-def score_and_match(
-    pairs: DataFrame,
-    signatures: DataFrame,
-    max_dist: int = DEFAULT_MAX_DIST,
-    alpha: float = DEFAULT_ALPHA,
-    min_score: float = 0.0,
-) -> DataFrame:
-    """The fused B6+B7 fast path for THIN pairs: attach both signatures by
-    equi-join, then run exactly the wide path — one gate/score definition,
-    so the thin and wide paths cannot diverge."""
-    return score_wide(
-        _attach_signatures(pairs, signatures),
-        max_dist=max_dist,
-        alpha=alpha,
-        min_score=min_score,
-    )
 
 
 def score_wide(

@@ -5,7 +5,7 @@ accumulates — the streaming front half of pipeline/corpus.CorpusRunner.
 Division of labor (why only stages 1-2 stream): the scrub and the
 repetition gate are PER-DOCUMENT — batch-local application is exactly
 corpus application, so streaming them is semantically free. Dedup,
-LM training, drift, and mixture are CORPUS-WIDE — a per-batch decision
+LM training and mixture are CORPUS-WIDE — a per-batch decision
 would depend on arrival order (a batch-local "unique" doc may duplicate
 last week's) — so they stay in the periodic batch CorpusRunner run over
 the accumulated `quality_stream` table, which this module keeps append-

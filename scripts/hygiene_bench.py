@@ -1,6 +1,6 @@
 """Benchmark the training-data hygiene ops at sf0.1: PII scrub,
-repetition filter, bigram-LM train+score, corpus drift, decontamination,
-mixture sampling. Writes one JSON object to build/hygiene_bench.json and
+repetition filter, bigram-LM train+score, mixture sampling and span
+dedup. Writes one JSON object to build/hygiene_bench.json and
 prints it.
 
 Methodology matches bench.py: warmup pass (JIT + Python-worker spawn),
@@ -43,8 +43,6 @@ def main():
 
     from pyspark.sql import functions as F
 
-    from hexspark.ops.decontam import ngram_contamination
-    from hexspark.ops.drift import js_divergence
     from hexspark.ops.lm import lm_score, train_bigram_lm
     from hexspark.ops.pii import scrub_documents
     from hexspark.ops.quality import repetition_filter
@@ -70,15 +68,6 @@ def main():
     lm.bigrams.persist().count()
     run("lm_train", lambda: train_bigram_lm(docs).bigrams.count())
     run("lm_score", lambda: lm_score(docs, lm).agg(F.avg("perplexity")).collect())
-
-    half_a = docs.where(F.col("doc_id") % 2 == 0)
-    half_b = docs.where(F.col("doc_id") % 2 == 1)
-    run("drift_js", lambda: js_divergence(half_a, half_b))
-
-    eval_side = docs.orderBy("doc_id").limit(50).persist()
-    eval_side.count()
-    run("decontam", lambda: ngram_contamination(docs, eval_side, n=8).agg(
-        F.sum(F.col("contaminated").cast("long"))).collect())
 
     run("mixture_sample", lambda: mixture_sample(
         docs, "lang", "doc_id", {"en": 0.5, "de": 0.25, "fr": 0.25})[0].count())

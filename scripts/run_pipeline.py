@@ -125,8 +125,8 @@ def main() -> None:
         "--extra-passes", default="",
         help="comma-separated extra blocking passes unioned with the LSH "
              "bands (suffix, phonetic, snm, adaptive_snm) — recall "
-             "levers; switches scoring to the thin-pairs path "
-             "(batch mode only)",
+             "levers; the union is scored as wide pairs like the LSH "
+             "pairs (batch mode only)",
     )
     ap.add_argument(
         "--pivot-salt", default="",

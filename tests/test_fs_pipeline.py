@@ -189,19 +189,6 @@ def test_fs_incremental_requires_fitted_model(spark, tmp_path):
         Runner(spark, wd, cfg).run_incremental(newtr)
 
 
-@pytest.mark.parametrize("mode", ["fs", "fs_levels"])
-def test_fs_refuses_extra_passes(spark, tmp_path, mode):
-    """FS scoring reads the wide pairs' carried signature chunks; the
-    extra-pass union carries none, so the combination is refused when the
-    Runner is built, before any stage runs."""
-    with pytest.raises(ValueError, match="extra_passes does not compose"):
-        Runner(
-            spark,
-            str(tmp_path / "fs_thin"),
-            PipelineConfig(**CFG, scoring_mode=mode, extra_passes=("suffix",)),
-        )
-
-
 def test_fs_composes_with_robust_mode(spark, tmp_path):
     """The two production modes are orthogonal config axes: FS-scored
     edges feed the triangle corroboration, both stage sets land, and the

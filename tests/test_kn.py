@@ -206,6 +206,16 @@ def test_score_plan_no_python(spark, fitted):
     assert "BroadcastNestedLoopJoin" not in plan
 
 
+def test_score_plan_has_no_broadcast_hint(spark, fitted):
+    """Neither training nor scoring forces a broadcast: AQE decides from
+    the measured model-table sizes, so a corpus-scale trigram table is
+    never shipped to every executor on a hint."""
+    docs, lm = fitted
+    plan = kn_score(docs, lm)._jdf.queryExecution().analyzed().toString()
+    assert "ResolvedHint" not in plan
+    assert "broadcast" not in plan.lower()
+
+
 def test_train_count_tables_match_duckdb_on_testdata(spark):
     """Cross-engine oracle on REAL testdata: every KN training count
     table (all integers — unigram/continuation counts, mid/midsum/

@@ -284,12 +284,6 @@ def test_runner_meta_prune_validation(spark, tmp_path):
 
     with pytest.raises(ValueError, match="meta_prune"):
         Runner(spark, str(tmp_path / "x"), PipelineConfig(meta_prune="bogus"))
-    with pytest.raises(ValueError, match="extra_passes does not compose"):
-        Runner(
-            spark,
-            str(tmp_path / "y"),
-            PipelineConfig(meta_prune="wnp", extra_passes=("suffix",)),
-        )
     with pytest.raises(ValueError, match="meta_cnp_k"):
         Runner(
             spark,
@@ -334,8 +328,9 @@ def test_meta_blocking_prunes_pipeline_candidates_at_full_recall(spark):
     # downstream scoring + transitive clustering must still hit F1 >= 0.99
     from hexspark.pipeline import clustering, evaluate, scoring
 
-    edges = scoring.score_and_match(
-        pruned.select("conv_id_a", "conv_id_b"), sigs, max_dist=40
+    edges = scoring.score_wide(
+        scoring.attach_signatures(pruned.select("conv_id_a", "conv_id_b"), sigs),
+        max_dist=40,
     )
     cc, _ = clustering.connected_components(edges)
     clusters = clustering.with_singletons(cc, sigs.select("conv_id"))

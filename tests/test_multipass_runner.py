@@ -1,8 +1,9 @@
 """Runner(extra_passes=...) — multi-pass blocking as a production mode:
 the candidate stage must be a SUPERSET of the LSH-only candidate set with
 per-pair pass provenance, every unordered pair exactly once, clusters stay
-correct on the clean corpus, and the guards (unknown pass, the
-chunk-reading modes meta_prune/fs/fs_levels, incremental) refuse."""
+correct on the clean corpus, the union is scored as wide pairs under every
+chunk-reading mode (fs, fs_levels, meta_prune), and the guards (unknown
+pass, incremental) refuse."""
 
 from __future__ import annotations
 
@@ -58,22 +59,40 @@ def test_multipass_clusters_stay_correct(spark, corpus, tmp_path):
     assert m["f1"] == 1.0, m
 
 
+@pytest.mark.parametrize(
+    "mode",
+    [{"scoring_mode": "fs"}, {"scoring_mode": "fs_levels"}, {"meta_prune": "wep"}],
+    ids=["fs", "fs_levels", "meta_prune_wep"],
+)
+def test_extra_passes_compose_with_chunk_reading_modes(spark, corpus, tmp_path, mode):
+    """The extra-pass union carries both sides' signature chunks and canon
+    keys, so the FS fields and the CBS weight read it like the LSH pairs:
+    every edge is a candidate pair and the clusters stay exact. (On this
+    corpus the suffix pass alone adds no pair the LSH bands miss; snm
+    does, so extra-pass-only pairs are scored and pruned too.)"""
+    from hexspark.pipeline import evaluate
+
+    res = Runner(
+        spark,
+        str(tmp_path / "mode"),
+        PipelineConfig(max_dist=40, extra_passes=("suffix", "snm"), **mode),
+    ).run(corpus)
+    pairs = res.tables["candidate_pairs"]
+    assert pairs.where(~F.array_contains("passes", "lsh")).count() > 0
+    key = ["conv_id_a", "conv_id_b"]
+    edges = res.tables["edges"].select(*key)
+    assert edges.exceptAll(pairs.select(*key)).count() == 0
+    labels = fixtures.labeled_pairs_df(spark, corpus)
+    m = evaluate.pairwise_f1(labels, res.tables["clusters"])
+    assert m["f1"] == 1.0, m
+
+
 def test_guards(spark, corpus, tmp_path):
     with pytest.raises(ValueError, match="unknown extra_passes"):
         Runner(
             spark, str(tmp_path / "a"),
             PipelineConfig(extra_passes=("sufix",)),
         )
-    for chunk_mode in (
-        {"meta_prune": "wep"},
-        {"scoring_mode": "fs"},
-        {"scoring_mode": "fs_levels"},
-    ):
-        with pytest.raises(ValueError, match="extra_passes does not compose"):
-            Runner(
-                spark, str(tmp_path / "b"),
-                PipelineConfig(extra_passes=("suffix",), **chunk_mode),
-            )
     wd = str(tmp_path / "inc")
     runner = Runner(
         spark, wd, PipelineConfig(max_dist=40, extra_passes=("phonetic",))

@@ -209,8 +209,9 @@ def test_stage_metrics_lineage(spark, data):
 
 def test_wide_path_equals_thin_path(spark):
     """blocking.candidate_pairs_wide + scoring.score_wide must produce the
-    exact edge set of candidate_pairs + score_and_match (same bands, same
-    kernels — only the plan shape differs)."""
+    exact edge set of thin candidate_pairs widened by attach_signatures
+    (same bands, same kernels — only where the chunks are attached
+    differs; the runner widens its extra-pass union the same way)."""
     from pyspark.sql import functions as F
 
     from hexspark import fixtures
@@ -221,7 +222,9 @@ def test_wide_path_equals_thin_path(spark):
     sigs = sm.signatures(assemble.assemble_conversations(tr)).persist()
 
     thin, _ = blocking.candidate_pairs(sigs)
-    e_thin = scoring.score_and_match(thin, sigs, max_dist=40).select(
+    e_thin = scoring.score_wide(
+        scoring.attach_signatures(thin, sigs), max_dist=40
+    ).select(
         "conv_id_a", "conv_id_b", "hamming_dist", F.round("jw", 9).alias("jw")
     )
     wide, _ = blocking.candidate_pairs_wide(sigs)
