@@ -61,7 +61,7 @@ own chain, so cluster-level connectivity is preserved.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
 
 SIG_HEX_CHARS = 64  # 256 bits
@@ -188,16 +188,17 @@ def candidate_pairs_wide(
     n_bands: int = 16,
     max_block: int = 2000,
     new_col: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row]]:
     """LSH-blocked candidate pairs that CARRY both sides' signature chunks
     and canonical keys out of the band self-join, each pair emitted
     EXACTLY ONCE with zero pair-stream shuffles (see module docstring).
 
     Plan: ONE full-width band exchange feeds the self-join (both sides via
     ReusedExchange). The skew gate is a codegen bit-test on the per-conv
-    banned-band mask — no window, no sort beyond the join's own. Block
-    sizes travel through a tiny aggregated side-channel (sizes/oversize/
-    banned are all small by construction and AQE broadcasts them).
+    banned-band mask — no window, no sort beyond the join's own. The
+    block-size aggregate runs once, as one collect of the oversize blocks
+    (a tiny list by construction); the banned masks built from it are
+    small too, and AQE broadcasts them.
 
     ``new_col`` names a boolean new-row column for an incremental fold
     (pipeline/incremental.py): only pairs touching >= 1 new row are
@@ -212,10 +213,11 @@ def candidate_pairs_wide(
     plain ``a.conv_id < b.conv_id`` join with no side swap.
 
     Returns (pairs_wide, block_stats); pairs_wide has conv_id_a/b,
-    canon_a/b, c{i}_a/b signature chunk longs. block_stats(band_id,
-    band_val, block_size, skipped) — `skipped` marks oversize blocks
-    routed to the salted chain branch (observability, per north_rule's
-    "skew handled explicitly").
+    canon_a/b, c{i}_a/b signature chunk longs. block_stats is the sorted
+    list of the oversize blocks routed to the salted chain branch, as
+    collected Rows (band_id, band_val, block_size) — empty when no block
+    exceeds max_block (observability, per north_rule's "skew handled
+    explicitly"; the runner writes it as the skipped_blocks table).
     """
     from .scoring import N_CHUNKS
 
@@ -225,37 +227,26 @@ def candidate_pairs_wide(
     band_vals = F.array(*[_band_val_int(b, n_bands) for b in range(n_bands)])
 
     # ---- adaptive skew gate --------------------------------------------
-    # Compute per-block sizes, probe ONCE at plan-build time for blocks
-    # above max_block, and attach the per-conv banned-band bitmask only
+    # Compute per-block sizes and collect the blocks above max_block ONCE,
+    # at plan-build time, then attach the per-conv banned-band bitmask only
     # when some block is oversize (otherwise every mask is a zero literal
     # and the whole skew subplan is left out of the plan — detecting skew
     # needs the sizes aggregation either way, so the probe is one cheap
     # scan; it is the same decide-at-runtime move AQE makes for skew
-    # joins, applied one level up).
-    #
-    # The oversize list is materialized with localCheckpoint rather than
-    # persist: it is consumed by several subtrees (probe, banned-mask
-    # build, chain-branch broadcasts) but a persist() entry in the
-    # CacheManager is never released without an explicit unpersist the
-    # callers cannot reach — checkpointed RDD blocks are freed by the
-    # ContextCleaner once the plan is garbage collected, so repeated calls
-    # in a long-lived application do not accumulate cache entries. It is
-    # tiny by construction (one row per >max_block block). Trade-off:
-    # localCheckpoint truncates lineage, so on a real cluster losing the
-    # executor holding these (tiny, replicated-in-memory) blocks fails the
-    # job instead of recomputing — acceptable for a <KB side-table, but a
-    # deployment with a configured checkpoint dir should prefer reliable
-    # checkpoint() here.
+    # joins, applied one level up). The collected list is tiny by
+    # construction (one row per >max_block block); it is the banned-mask
+    # join's and the chain branch's input as a local relation, so no
+    # subtree recomputes the aggregate and no cache entry outlives the
+    # call.
     bands_raw = sigs_c.select(
         "conv_id", F.posexplode(band_vals).alias("band_id", "band_val")
     )
     sizes = bands_raw.groupBy("band_id", "band_val").agg(
         F.count(F.lit(1)).alias("block_size")
     )
-    block_stats = sizes.withColumn("skipped", F.col("block_size") > F.lit(max_block))
-    oversize = sizes.where(F.col("block_size") > max_block).localCheckpoint(eager=True)
-    has_oversize = not oversize.isEmpty()
-    if has_oversize:
+    oversize_rows = sorted(sizes.where(F.col("block_size") > max_block).collect())
+    if oversize_rows:
+        oversize = signatures.sparkSession.createDataFrame(oversize_rows, sizes.schema)
         banned = (
             bands_raw.join(
                 oversize.select("band_id", "band_val"), ["band_id", "band_val"]
@@ -334,8 +325,8 @@ def candidate_pairs_wide(
         *[f"c{i}_a" for i in range(N_CHUNKS)],
         *[f"c{i}_b" for i in range(N_CHUNKS)],
     ]
-    if not has_oversize:
-        return normal.select(*out_cols), block_stats
+    if not oversize_rows:
+        return normal.select(*out_cols), oversize_rows
 
     # ---- chain branch: oversize blocks, salted path instead of drop -----
     # input is ONLY the band rows of oversize blocks (usually none/few);
@@ -425,14 +416,14 @@ def candidate_pairs_wide(
     )
 
     pairs = normal.select(*out_cols).unionByName(chain.select(*out_cols))
-    return pairs, block_stats
+    return pairs, oversize_rows
 
 
 def candidate_pairs(
     signatures: DataFrame,
     n_bands: int = 16,
     max_block: int = 2000,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row]]:
     """Thin LSH-blocked candidate pairs (conv_id_a, conv_id_b) — a
     projection of the wide path, so both share one engine implementation
     and the exactly-once guarantee."""

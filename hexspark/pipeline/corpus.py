@@ -58,7 +58,7 @@ from hexspark.ops.quality import repetition_filter
 from hexspark.ops.sampling import mixture_sample
 from hexspark.pipeline.clustering import connected_components
 from hexspark.pipeline.io import TableIO, write_json_atomic
-from hexspark.pipeline.metrics import record_stage
+from hexspark.pipeline.metrics import read_stage, record_stage
 
 _STAGES = ("scrubbed", "quality", "deduped", "corpus")
 
@@ -139,7 +139,7 @@ class CorpusRunner:
 
     def _ensure(self, manifest: dict, result: CorpusResult, stage: str, build, extra=None):
         if manifest["completed"].get(stage) and self.io.exists(stage):
-            out = self.io.read(stage)
+            out = read_stage(self.io, manifest, stage)
             result.tables[stage] = out
             result.stage_rows[stage] = manifest["completed"][stage]["rows"]
             return out

@@ -101,9 +101,9 @@ def link_candidate_pairs_wide(
         .withColumn("n_pairs", F.col("n_a") * F.col("n_b"))
     )
     block_stats = sizes.withColumn("salted", F.col("n_pairs") > F.lit(hot_pairs))
-    # tiny by construction (one row per hot block); localCheckpoint so the
-    # CacheManager never accumulates entries (see the skew-gate comment in
-    # blocking.candidate_pairs_wide for the persist-vs-checkpoint trade-off)
+    # tiny by construction (one row per hot block); localCheckpoint rather
+    # than persist, so the CacheManager never accumulates entries: the
+    # ContextCleaner frees checkpointed blocks once the plan is collected
     hot = (
         sizes.where(F.col("n_pairs") > hot_pairs)
         .select("band_id", "band_val")

@@ -43,8 +43,9 @@ def record_stage(
     """Account a stage whose table `io` has just written, from what the
     write left on disk: its `stage_metrics` rows (stamped `label`, default
     the stage name), then `mark(manifest, stage, entry)` with the entry's
-    rows, wall_ms, files and bytes. Returns the table read back under
-    `schema`, the schema it was written with."""
+    rows, wall_ms, files, bytes and `schema` (the schema the table was
+    written with, in its JSON form, so a later run reads the table without
+    inferring it). Returns the table read back under `schema`."""
     files = io.data_files(stage)
     run_id = manifest["run_id"]
     n = manifest.get("executions", 0)
@@ -61,8 +62,17 @@ def record_stage(
         "wall_ms": wall_ms,
         "files": len(files),
         "bytes": sum(size for _, size in files),
+        "schema": schema.jsonValue(),
     })
     return io.read(stage, schema)
+
+
+def read_stage(io, manifest: dict, stage: str) -> DataFrame:
+    """A completed stage's table, read under the schema its manifest entry
+    records, so Spark runs no schema-inference job. An entry written
+    before entries carried a schema reads with inference."""
+    schema = manifest["completed"][stage].get("schema")
+    return io.read(stage, schema and StructType.fromJson(schema))
 
 
 class StageTimer:

@@ -73,8 +73,9 @@ BAND_POSITIONS = (
 
 
 def _canon(col: Column) -> Column:
-    """lowercase, alnum+space only — same canonicalization family as
-    assemble.assemble_conversations (assemble.py:39)."""
+    """lowercase, alnum+space only — the canonicalization of the `canon`
+    key (kernels.canon_keys_utf8; its parity with this JVM expression is
+    test_columns.py::test_canon_keys_match_spark_expression_on_mixed_unicode)."""
     return F.regexp_replace(F.lower(col), "[^a-z0-9 ]", "")
 
 

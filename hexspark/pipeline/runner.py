@@ -7,7 +7,8 @@ files and bytes and the per-file `stage_metrics` rows are read from the
 parquet footers on the driver, and the table is read back under the
 schema it was written with, so a stage launches no Spark job after its
 write. A rerun with the same workdir skips stages whose outputs already
-exist — kill-after-stage-k resume, and a crash at each step of a stage's
+exist and reads them under the schema their manifest entries record —
+kill-after-stage-k resume, and a crash at each step of a stage's
 accounting, are exercised by tests/test_resume.py.
 
 Stage graph:
@@ -24,10 +25,20 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import BooleanType, IntegerType, LongType, StructField, StructType
 
 from . import assemble, blocking, clustering, scoring, simhash
 from .io import TableIO, write_json_atomic
-from .metrics import StageTimer, record_stage
+from .metrics import StageTimer, read_stage, record_stage
+
+# skipped_blocks: the oversize blocks the candidate_pairs stage routed to
+# blocking's salted chain branch, one row each (`skipped` is always true)
+SKIPPED_BLOCKS_SCHEMA = StructType([
+    StructField("band_id", IntegerType()),
+    StructField("band_val", LongType()),
+    StructField("block_size", LongType()),
+    StructField("skipped", BooleanType()),
+])
 
 
 @dataclass
@@ -308,7 +319,7 @@ class Runner:
     ) -> DataFrame:
         if manifest["completed"].get(stage) and self.io.exists(stage):
             result.stages_skipped.append(stage)
-            df = self.io.read(stage)
+            df = read_stage(self.io, manifest, stage)
             result.tables[stage] = df
             return df
         timer = StageTimer()
@@ -415,10 +426,12 @@ class Runner:
         )
 
         def build_pairs() -> DataFrame:
-            pairs, stats = blocking.candidate_pairs_wide(
+            pairs, oversize = blocking.candidate_pairs_wide(
                 sigs, n_bands=cfg.n_bands, max_block=cfg.max_block
             )
-            self.io.write(stats.where(F.col("skipped")), "skipped_blocks")
+            self.io.write_rows(
+                [(*r, True) for r in oversize], SKIPPED_BLOCKS_SCHEMA, "skipped_blocks"
+            )
             if not cfg.extra_passes:
                 return pairs
             from . import snm as snm_mod
@@ -630,7 +643,7 @@ class Runner:
             # and stable_entity_ids is a fixed point there (tested), so
             # the retried retirements stage is correctly empty
             prior = (
-                self.io.read("entity_ids")
+                read_stage(self.io, manifest, "entity_ids")
                 if manifest["completed"].get("entity_ids")
                 and self.io.exists("entity_ids")
                 else None
@@ -743,7 +756,7 @@ class Runner:
         # driver on an unbounded broadcast collect.
         new_ids = new_transcripts.select("conv_id").distinct()
         overlap = (
-            self.io.read("signatures")
+            read_stage(self.io, manifest, "signatures")
             .join(new_ids, "conv_id", "left_semi")
             .count()
         )
@@ -773,7 +786,9 @@ class Runner:
             # TF mode scores the batch under the CORPUS frequency table
             # (the canon_tf stage), not batch-local frequencies — the same
             # no-thin-batch-refit rule as the model itself
-            canon_tf = self.io.read("canon_tf") if cfg.fs_tf_adjust else None
+            canon_tf = (
+                read_stage(self.io, manifest, "canon_tf") if cfg.fs_tf_adjust else None
+            )
             score = self._fs_scorer(model, canon_tf)
             if canon_tf is None:
                 score_fn = score
@@ -797,11 +812,11 @@ class Runner:
                     # it is asking for its `constraints` that explodes.
                     # Cost: one batch-proportional scratch-table write.
                     self.io.write(p, "fold_pairs_scratch")
-                    return score(self.io.read("fold_pairs_scratch"))
+                    return score(self.io.read("fold_pairs_scratch", p.schema))
         res = incremental.incremental_update(
             new_transcripts,
-            self.io.read("signatures"),
-            self.io.read("clusters"),
+            read_stage(self.io, manifest, "signatures"),
+            read_stage(self.io, manifest, "clusters"),
             n_bands=cfg.n_bands,
             max_block=cfg.max_block,
             max_dist=cfg.max_dist,
@@ -848,11 +863,11 @@ class Runner:
             # fill the edges cache ONCE before the graph plans fan out over
             # it (merge=False above means nothing else materializes it)
             res["edges"].count()
-            old_edges = self.io.read("edges")
+            old_edges = read_stage(self.io, manifest, "edges")
             new_tri = graph.incremental_triangles(
                 old_edges, res["edges"], "conv_id_a", "conv_id_b"
             ).persist()
-            prior_clusters = self.io.read("clusters")
+            prior_clusters = read_stage(self.io, manifest, "clusters")
             tri_sides = (
                 new_tri.select(F.col("x").alias("u"), F.col("y").alias("v"))
                 .unionAll(new_tri.select(F.col("y").alias("u"), F.col("z").alias("v")))
@@ -869,7 +884,7 @@ class Runner:
             )
             result.cc_rounds = rounds
             bridges = (
-                self.io.read("bridge_edges")
+                read_stage(self.io, manifest, "bridge_edges")
                 .unionByName(
                     graph.canonical_edges(res["edges"], "conv_id_a", "conv_id_b")
                 )
@@ -897,7 +912,8 @@ class Runner:
             from . import identity
 
             assignments, retirements = identity.stable_entity_ids(
-                self.io.read("clusters"), self.io.read("entity_ids")
+                read_stage(self.io, manifest, "clusters"),
+                read_stage(self.io, manifest, "entity_ids"),
             )
             # retirements FIRST: both plans lazily scan the CURRENT
             # entity_ids files, and the assignments write ends in a

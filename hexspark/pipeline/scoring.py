@@ -30,7 +30,6 @@ SIG_BITS = 256
 SIG_BYTES = 32
 DEFAULT_MAX_DIST = 20
 DEFAULT_ALPHA = 0.75
-_CANON_LEN = 48
 
 N_CHUNKS = 8  # 8 x 32-bit hex chunks of the 256-bit signature
 _CHUNK_HEX = 8  # hex chars per chunk

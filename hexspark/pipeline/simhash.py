@@ -27,7 +27,11 @@ import pyarrow as pa
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from .assemble import CANON_LEN
+# length of the canonical Jaro-Winkler key `canon`: lowercase, alnum+space
+# only, first CANON_LEN chars of the document. This stage is the one place
+# the key is derived (kernels.canon_keys_utf8); every reader of `canon`
+# reads the signatures table's copy.
+CANON_LEN = 48
 
 _SIG_SCHEMA = (
     "conv_id string, sig binary, sig_hex string, canon string, "
@@ -67,12 +71,12 @@ def _fingerprint_batches(batches: Iterator[pa.RecordBatch]) -> Iterator[pa.Recor
 
 
 def signatures(conversations: DataFrame) -> DataFrame:
-    """conversations(conv_id, doc_text, ..., n_turns) →
+    """conversations(conv_id, doc_text, n_turns) →
     signatures(conv_id, sig binary(32), sig_hex char(64), canon, n_turns,
     n_chars).
 
-    Selecting only (conv_id, doc_text, n_turns) lets Catalyst prune the
-    assemble stage's other derived columns out of the aggregate entirely.
+    Only (conv_id, doc_text, n_turns) is selected, so any other column of
+    the input is pruned before the Arrow boundary.
     """
     pruned = conversations.select("conv_id", "doc_text", F.col("n_turns").cast("int"))
     return pruned.mapInArrow(_fingerprint_batches, _SIG_SCHEMA)

@@ -68,7 +68,7 @@ def run_once(spark, n_bg: int, n_mega: int, max_block: int) -> dict:
     ).collect()[0]
     t_cluster = time.monotonic() - t1
 
-    n_skipped = stats.where("skipped").count()
+    n_skipped = len(stats)
     pairs.unpersist()
     sigs.unpersist()
     assert agg["k"] == 1, f"mega-cluster split into {agg['k']} components"

@@ -127,6 +127,12 @@ def test_iceberg_branch_probes_namespace_and_routes_tables(spark, tmp_path):
     io.append(_FakeDF(fake.log), "metrics")
     assert ("append", "lake.erns.metrics") in fake.log
 
+    # driver-built rows replace the table: a rerun leaves one row set
+    io.write_rows([(3, 7, 40, True)], "skipped_schema", "skipped_blocks")
+    assert ("createDataFrame", 1, "skipped_schema") in fake.log
+    assert ("createOrReplace", "lake.erns.skipped_blocks") in fake.log
+    assert ("append", "lake.erns.skipped_blocks") not in fake.log
+
     assert io.read("signatures") == "df:lake.erns.signatures"
 
 
@@ -155,11 +161,14 @@ def test_iceberg_stage_accounting_reads_the_files_metadata_table(tmp_path):
     marks = []
     manifest = {"run_id": "r1", "completed": {}}
     out = record_stage(
-        io, manifest, "edges", None, 42, lambda m, s, e: marks.append((s, e))
+        io, manifest, "edges", METRICS_SCHEMA, 42, lambda m, s, e: marks.append((s, e))
     )
     assert out == "df:lake.erns.edges"
     assert marks == [
-        ("edges", {"rows": 8, "wall_ms": 42, "files": 2, "bytes": 1200})
+        ("edges", {
+            "rows": 8, "wall_ms": 42, "files": 2, "bytes": 1200,
+            "schema": METRICS_SCHEMA.jsonValue(),
+        })
     ]
     assert manifest["executions"] == 1
     assert ("createDataFrame", 2, METRICS_SCHEMA) in fake.log

@@ -85,6 +85,16 @@ def test_per_turn_ordering_invariant(spark, data):
     assert mismatched == 0
 
 
+def test_conversations_stage_derives_no_text_keys(spark, data):
+    """The conversations table is the document and its turn count only:
+    `canon` and `n_chars` come from the fingerprint kernel, so the
+    assembly plan runs no JVM regex over the documents."""
+    tr, _, _, result = data
+    assert result.tables["conversations"].columns == ["conv_id", "doc_text", "n_turns"]
+    plan = assemble.assemble_conversations(tr)._jdf.queryExecution().optimizedPlan()
+    assert "regexp_replace" not in plan.toString()
+
+
 def test_signature_shape(spark, data):
     _, _, _, result = data
     sigs = result.tables["signatures"]

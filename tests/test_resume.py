@@ -45,6 +45,67 @@ def test_full_rerun_skips_everything(spark, first_run):
     assert _rows(result2.tables["clusters"], ["conv_id", "cluster_id"]) == clusters
 
 
+def _jobs_per_read(spark, monkeypatch):
+    """Run every TableIO.read under a job group of its own; the returned
+    callable maps each read to the Spark jobs it launched."""
+    from hexspark.pipeline.io import TableIO
+
+    sc = spark.sparkContext
+    real_read = TableIO.read
+    groups = []
+
+    def read(io, name, schema=None):
+        group = f"read-{len(groups)}-{name}"
+        groups.append(group)
+        outer = sc.getLocalProperty("spark.jobGroup.id")
+        sc.setJobGroup(group, group)
+        try:
+            return real_read(io, name, schema)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", outer)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(TableIO, "read", read)
+
+    def jobs() -> dict[str, int]:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return {g: len(sc.statusTracker().getJobIdsForGroup(g)) for g in groups}
+
+    return jobs
+
+
+def test_full_rerun_and_fold_read_prior_tables_without_inference(
+    spark, first_run, tmp_path, monkeypatch
+):
+    """Each stage's manifest entry records its schema, so a fully skipped
+    rerun and a fold read every prior table under it: no read launches
+    the schema-inference job a bare parquet read costs."""
+    tr, workdir, _, _ = first_run
+    with open(os.path.join(workdir, "run_manifest.json")) as f:
+        entry = json.load(f)["completed"]["signatures"]
+    from pyspark.sql.types import StructType
+
+    assert "sig_hex" in StructType.fromJson(entry["schema"]).names
+
+    jobs = _jobs_per_read(spark, monkeypatch)
+    result = Runner(spark, workdir, CFG).run(tr)
+    assert result.stages_skipped == Runner.STAGES
+    reads = jobs()
+    assert len(reads) == len(Runner.STAGES) and not any(reads.values()), reads
+
+    # fold five new base conversations (same generator, disjoint ids) into
+    # a copy of the run, so the tests below keep the original workdir
+    fold_dir = str(tmp_path / "fold")
+    shutil.copytree(workdir, fold_dir)
+    new = fixtures.transcripts_df(spark, n_base=45, seed=7, mutation_rate=0.01).where(
+        F.col("conv_id") >= "conv_00000040"
+    )
+    done = len(reads)
+    Runner(spark, fold_dir, CFG).run_incremental(new)
+    reads = dict(list(jobs().items())[done:])
+    assert len(reads) >= 3 and not any(reads.values()), reads
+
+
 def test_crash_after_stage_k_resumes(spark, first_run):
     tr, workdir, clusters, edges = first_run
     # simulate crash: edges + clusters lost, manifest rolled back
@@ -300,3 +361,99 @@ def test_manifest_reports_rows_files_and_bytes(spark, clean_run):
         assert got == [
             (i, per_file.get(os.path.basename(p), 0)) for i, p in enumerate(files)
         ], stage
+
+
+def test_candidate_pairs_stage_is_at_most_four_spark_jobs(
+    spark, first_run, tmp_path, monkeypatch
+):
+    """On a corpus with no oversize block the candidate_pairs stage is the
+    oversize collect (one block-size aggregate) and the pairs write; the
+    skipped_blocks table is written on the driver: ≤ 4 Spark jobs."""
+    tr = first_run[0]
+    sc = spark.sparkContext
+    group = "candidate-pairs-stage"
+    run_stage = Runner._run_stage
+
+    def grouped(self, manifest, result, stage, build):
+        if stage != "candidate_pairs":
+            return run_stage(self, manifest, result, stage, build)
+        sc.setJobGroup(group, "candidate_pairs stage")
+        try:
+            return run_stage(self, manifest, result, stage, build)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+
+    monkeypatch.setattr(Runner, "_run_stage", grouped)
+    workdir = str(tmp_path / "wd")
+    Runner(spark, workdir, CFG).run(tr)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    jobs = len(sc.statusTracker().getJobIdsForGroup(group))
+    assert _table_rows(spark, workdir, "skipped_blocks") == []
+    assert 1 <= jobs <= 4, jobs
+
+
+# -- the skipped_blocks side table: written inside the candidate_pairs stage
+
+_BOILER = (
+    "thank you for contacting support your ticket has been received and an "
+    "agent will reply within two business days please keep this reference"
+)
+OVERSIZE_CFG = PipelineConfig(max_dist=40, max_block=16)
+
+
+@pytest.fixture(scope="module")
+def oversize_run(spark, tmp_path_factory):
+    """A clean run over ordinary conversations beside 40 near-identical
+    ones, whose shared blocks exceed max_block=16."""
+    mega = spark.createDataFrame(
+        [(f"mega_{i:03d}", 0, "assistant", f"{_BOILER} ref {i}", "none") for i in range(40)],
+        "conv_id string, turn_idx int, role string, text string, tool string",
+    ).withColumn("ts", F.current_timestamp())
+    tr = fixtures.transcripts_df(spark, n_base=20, seed=23, mutation_rate=0.01)
+    tr = tr.unionByName(mega).cache()
+    workdir = str(tmp_path_factory.mktemp("oversize"))
+    Runner(spark, workdir, OVERSIZE_CFG).run(tr)
+    return tr, workdir
+
+
+@pytest.mark.parametrize("corpus", ["clean", "oversize"])
+def test_crash_after_skipped_blocks_write_resumes_with_one_row_set(
+    spark, first_run, clean_run, oversize_run, tmp_path, monkeypatch, corpus
+):
+    """A crash after the skipped_blocks write and before candidate_pairs
+    is marked, then a rerun: every table equals a clean run's, and
+    skipped_blocks holds one row set — empty on the clean corpus, yet
+    still a table that carries its schema."""
+    from hexspark.pipeline.io import TableIO
+    from hexspark.pipeline.runner import SKIPPED_BLOCKS_SCHEMA
+
+    if corpus == "clean":
+        tr, cfg, clean_dir = first_run[0], CFG, clean_run[0]
+    else:
+        (tr, clean_dir), cfg = oversize_run, OVERSIZE_CFG
+    workdir = str(tmp_path / "wd")
+    real_write_rows = TableIO.write_rows
+
+    def write_rows(io, rows, schema, name):
+        real_write_rows(io, rows, schema, name)
+        if name == "skipped_blocks":
+            raise _Crash("after skipped_blocks")
+
+    monkeypatch.setattr(TableIO, "write_rows", write_rows)
+    with pytest.raises(_Crash):
+        Runner(spark, workdir, cfg).run(tr)
+    monkeypatch.undo()
+    assert os.path.exists(os.path.join(workdir, "skipped_blocks", "_SUCCESS"))
+
+    result = Runner(spark, workdir, cfg).run(tr)
+    assert result.stages_skipped == ["conversations", "signatures"]
+    assert result.stages_run == ["candidate_pairs", "edges", "clusters"]
+    for stage in (*Runner.STAGES, "skipped_blocks"):
+        assert _table_rows(spark, workdir, stage) == _table_rows(spark, clean_dir, stage), stage
+    path = os.path.join(workdir, "skipped_blocks")
+    assert spark.read.parquet(path).schema == SKIPPED_BLOCKS_SCHEMA
+    skipped = _table_rows(spark, workdir, "skipped_blocks")
+    assert len(set(skipped)) == len(skipped)
+    assert (skipped == []) == (corpus == "clean")
+    _assert_one_row_set_per_execution(spark, workdir)
