@@ -130,19 +130,19 @@ def minhash_pairs(
     rows = sig.select("id", "bhs", F.posexplode("bhs").alias("band", "bv"))
     sizes = rows.groupBy("band", "bv").agg(F.count(F.lit(1)).alias("block_size"))
     # Adaptive skew gate (same move as blocking.candidate_pairs_wide):
-    # probe for oversize blocks once at plan-build time over the persisted
-    # signature table (the probe also materializes the cache for every
-    # later consumer). When none exist — the common case — skip the
-    # banned-mask join and the chain branch entirely instead of running
+    # collect the oversize blocks once at plan-build time over the
+    # persisted signature table (the collect also materializes the cache
+    # for every later consumer). When none exist — the common case — skip
+    # the banned-mask join and the chain branch entirely instead of running
     # their exchanges and window sorts over zero rows on every execution.
-    # `oversize` itself is materialized via localCheckpoint (tiny) so the
-    # skewed case pays the sizes aggregation once across probe / banned /
-    # chain consumers — localCheckpoint, not persist: checkpointed blocks
-    # are freed by the ContextCleaner when the plan is GC'd, while a
-    # CacheManager persist entry leaks per call in a long-lived app.
-    oversize = sizes.where(F.col("block_size") > max_block).localCheckpoint(eager=True)
-    has_oversize = not oversize.isEmpty()
-    if has_oversize:
+    # The collected list is tiny by construction; fed back as a local
+    # relation, it is the banned and chain consumers' input, so the skewed
+    # case pays the sizes aggregation once and no cache entry outlives the
+    # call.
+    oversize_keys = sizes.where(F.col("block_size") > max_block)
+    oversize_rows = oversize_keys.collect()
+    if oversize_rows:
+        oversize = docs.sparkSession.createDataFrame(oversize_rows, oversize_keys.schema)
         banned = (
             rows.join(oversize.select("band", "bv"), ["band", "bv"])
             .groupBy("id")
@@ -190,7 +190,7 @@ def minhash_pairs(
         .where(F.col("eff").bitwiseAND(low_bits) == 0)
     )
 
-    if not has_oversize:
+    if not oversize_rows:
         return _minhash_finish(normal.select("id_a", "id_b", "match"), b_cnt, band_rows)
 
     over = (

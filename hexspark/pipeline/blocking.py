@@ -97,41 +97,52 @@ def _band_geometry(n_bands: int) -> tuple[int, int]:
     return w_hex, 4 * w_hex
 
 
-def _band_val_int(b: int, n_bands: int, side: str = "") -> Column:
-    """Integer value of band b extracted from the signature chunk longs
-    c{i}[_side]: pure codegen bit arithmetic, no strings."""
+# The per-band expressions below are built as SQL text and parsed once
+# per call by F.expr: every Column method or functions.* call is at least
+# one py4j round trip (several with the DataFrame call-site capture), and
+# a 16-band mask spelled as Column calls was ~3,700 of them per
+# candidate_pairs_wide build. The SQL text parses to the same expression
+# trees, so the optimized plans do not change.
+
+
+def _band_slice(b: int, n_bands: int) -> tuple[int, int, int]:
+    """(chunk index, shift, bits) of band b inside its chunk long: the band
+    is ``(c{chunk} >> shift) & ((1 << bits) - 1)``."""
     w_hex, w_bits = _band_geometry(n_bands)
     chunk = (b * w_hex) // _CHUNK_HEX
     off = (b * w_hex) % _CHUNK_HEX          # hex-char offset inside chunk
     shift = 4 * (_CHUNK_HEX - off - w_hex)  # bits below the band in chunk
-    col = F.col(f"c{chunk}_{side}" if side else f"c{chunk}")
-    v = F.shiftright(col, shift) if shift else col
-    return v.bitwiseAND(F.lit((1 << w_bits) - 1))
+    return chunk, shift, w_bits
 
 
-def _band_match_bit(b: int, n_bands: int) -> Column:
+def _band_val_int(b: int, n_bands: int, side: str = "") -> Column:
+    """Integer value of band b extracted from the signature chunk longs
+    c{i}[_side]: pure codegen bit arithmetic, no strings."""
+    chunk, shift, w_bits = _band_slice(b, n_bands)
+    col = f"c{chunk}_{side}" if side else f"c{chunk}"
+    v = f"shiftright({col}, {shift})" if shift else col
+    return F.expr(f"{v} & {(1 << w_bits) - 1}")
+
+
+def _band_match_sql(b: int, n_bands: int) -> str:
     """True iff band b of sides a/b agree — tested on the XOR of the chunk
-    longs, masked to the band's bit range (no per-side extraction)."""
-    w_hex, w_bits = _band_geometry(n_bands)
-    chunk = (b * w_hex) // _CHUNK_HEX
-    off = (b * w_hex) % _CHUNK_HEX
-    shift = 4 * (_CHUNK_HEX - off - w_hex)
+    longs, masked to the band's bit range (no per-side extraction).
+    Parenthesized: in Spark SQL ``&`` binds tighter than ``^``."""
+    chunk, shift, w_bits = _band_slice(b, n_bands)
     mask = ((1 << w_bits) - 1) << shift
-    x = F.col(f"c{chunk}_a").bitwiseXOR(F.col(f"c{chunk}_b"))
-    return x.bitwiseAND(F.lit(mask)) == 0
+    return f"((c{chunk}_a ^ c{chunk}_b) & {mask}) = 0"
 
 
 def _match_mask(n_bands: int) -> Column:
     """Long bitmask over all bands: bit b set iff band b matches.
     shiftleft (not a Python int literal) so bit 63 stays inside Spark's
     long literal range at n_bands=64."""
-    expr = None
-    for b in range(n_bands):
-        term = F.when(
-            _band_match_bit(b, n_bands), F.expr(f"shiftleft(1L, {b})")
-        ).otherwise(F.lit(0).cast("long"))
-        expr = term if expr is None else expr + term
-    return expr.cast("long")
+    terms = " + ".join(
+        f"(CASE WHEN {_band_match_sql(b, n_bands)} THEN shiftleft(1L, {b}) "
+        "ELSE CAST(0 AS BIGINT) END)"
+        for b in range(n_bands)
+    )
+    return F.expr(f"CAST({terms} AS BIGINT)")
 
 
 def shared_band_count(n_bands: int = 16) -> Column:
@@ -142,11 +153,11 @@ def shared_band_count(n_bands: int = 16) -> Column:
     signature can only share a block with band b of the other), this IS
     the Common Blocks Scheme weight of the LSH block collection
     (pipeline/metablocking.py) evaluated per pair for free."""
-    expr = None
-    for b in range(n_bands):
-        t = F.when(_band_match_bit(b, n_bands), 1).otherwise(0)
-        expr = t if expr is None else expr + t
-    return expr.cast("long")
+    terms = " + ".join(
+        f"(CASE WHEN {_band_match_sql(b, n_bands)} THEN 1 ELSE 0 END)"
+        for b in range(n_bands)
+    )
+    return F.expr(f"CAST({terms} AS BIGINT)")
 
 
 def sig_chunks_raw():
@@ -281,37 +292,33 @@ def candidate_pairs_wide(
     kept = bands.where(F.expr("(shiftright(banned, band_id) & 1) = 0"))
     a = (kept.where(F.col(new_col)) if new_col else kept).alias("a")
     b = kept.alias("b")
-    on = (F.col("a.band_id") == F.col("b.band_id")) & (
-        F.col("a.band_val") == F.col("b.band_val")
-    )
+    on = "a.band_id = b.band_id AND a.band_val = b.band_val"
     if new_col is None:
-        on = on & (F.col("a.conv_id") < F.col("b.conv_id"))
+        on += " AND a.conv_id < b.conv_id"
 
-        def side(col: str, a_side: bool) -> Column:
-            return F.col(f"a.{col}" if a_side else f"b.{col}")
+        def side(col: str, a_side: bool) -> str:
+            return f"a.{col}" if a_side else f"b.{col}"
     else:
         # new A side: new-new pairs once in id order, new-old pairs once
         # whichever id is lower, swapped into canonical order below
-        on = (
-            on
-            & (F.col("a.conv_id") != F.col("b.conv_id"))
-            & ((F.col("a.conv_id") < F.col("b.conv_id")) | ~F.col(f"b.{new_col}"))
+        on += (
+            " AND a.conv_id != b.conv_id"
+            f" AND (a.conv_id < b.conv_id OR NOT b.{new_col})"
         )
-        swap_ab = F.col("b.conv_id") < F.col("a.conv_id")
 
-        def side(col: str, a_side: bool) -> Column:
-            take_a = ~swap_ab if a_side else swap_ab
-            return F.when(take_a, F.col(f"a.{col}")).otherwise(F.col(f"b.{col}"))
+        def side(col: str, a_side: bool) -> str:
+            take_a = "NOT (b.conv_id < a.conv_id)" if a_side else "b.conv_id < a.conv_id"
+            return f"CASE WHEN {take_a} THEN a.{col} ELSE b.{col} END"
 
-    joined = a.join(b, on).select(
-        F.col("a.band_id").alias("band_id"),
-        side("conv_id", True).alias("conv_id_a"),
-        side("conv_id", False).alias("conv_id_b"),
-        side("canon", True).alias("canon_a"),
-        side("canon", False).alias("canon_b"),
-        F.col("a.banned").alias("banned_a"),
-        *[side(f"c{i}", True).alias(f"c{i}_a") for i in range(N_CHUNKS)],
-        *[side(f"c{i}", False).alias(f"c{i}_b") for i in range(N_CHUNKS)],
+    joined = a.join(b, F.expr(on)).selectExpr(
+        "a.band_id AS band_id",
+        f"{side('conv_id', True)} AS conv_id_a",
+        f"{side('conv_id', False)} AS conv_id_b",
+        f"{side('canon', True)} AS canon_a",
+        f"{side('canon', False)} AS canon_b",
+        "a.banned AS banned_a",
+        *[f"{side(f'c{i}', True)} AS c{i}_a" for i in range(N_CHUNKS)],
+        *[f"{side(f'c{i}', False)} AS c{i}_b" for i in range(N_CHUNKS)],
     )
     eff = _match_mask(n_bands).bitwiseAND(F.bitwise_not(F.col("banned_a")))
     normal = (

@@ -101,17 +101,14 @@ def link_candidate_pairs_wide(
         .withColumn("n_pairs", F.col("n_a") * F.col("n_b"))
     )
     block_stats = sizes.withColumn("salted", F.col("n_pairs") > F.lit(hot_pairs))
-    # tiny by construction (one row per hot block); localCheckpoint rather
-    # than persist, so the CacheManager never accumulates entries: the
-    # ContextCleaner frees checkpointed blocks once the plan is collected
-    hot = (
-        sizes.where(F.col("n_pairs") > hot_pairs)
-        .select("band_id", "band_val")
-        .localCheckpoint(eager=True)
-    )
-    has_hot = not hot.isEmpty()
+    # tiny by construction (one row per hot block): collected once and fed
+    # back as a local relation, so no subtree recomputes the aggregate and
+    # no cache entry outlives the call (as blocking.candidate_pairs_wide)
+    hot_keys = sizes.where(F.col("n_pairs") > hot_pairs).select("band_id", "band_val")
+    hot_rows = hot_keys.collect()
 
-    if has_hot:
+    if hot_rows:
+        hot = sigs_a.sparkSession.createDataFrame(hot_rows, hot_keys.schema)
         hot_marked = F.broadcast(hot.withColumn("_hot", F.lit(True)))
         bands_a = bands_a.join(hot_marked, ["band_id", "band_val"], "left").withColumn(
             "salt",

@@ -40,7 +40,10 @@ def sig_chunks_raw():
     THE single definition of the chunk decomposition (blocking and the
     incremental path build their band slices from these same columns)."""
     return [
-        F.conv(F.substring("sig_hex", i * _CHUNK_HEX + 1, _CHUNK_HEX), 16, 10).cast("long")
+        F.expr(
+            f"CAST(conv(substring(sig_hex, {i * _CHUNK_HEX + 1}, {_CHUNK_HEX}), 16, 10)"
+            " AS BIGINT)"
+        )
         for i in range(N_CHUNKS)
     ]
 
@@ -58,13 +61,10 @@ def hamming_jvm(side_a: str = "a", side_b: str = "b"):
     realization of the reference's A2 kernel: the XOR+popcount runs where
     the data is, and the reference's early-exit optimization (cc:62-64)
     becomes a codegen-level filter that never ships a row to Python."""
-    expr = None
-    for i in range(N_CHUNKS):
-        term = F.bit_count(
-            F.col(f"c{i}_{side_a}").bitwiseXOR(F.col(f"c{i}_{side_b}"))
-        )
-        expr = term if expr is None else expr + term
-    return expr.cast("long")
+    terms = " + ".join(
+        f"bit_count(c{i}_{side_a} ^ c{i}_{side_b})" for i in range(N_CHUNKS)
+    )
+    return F.expr(f"CAST({terms} AS BIGINT)")
 
 
 def attach_signatures(pairs: DataFrame, signatures: DataFrame) -> DataFrame:

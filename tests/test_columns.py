@@ -208,6 +208,16 @@ def test_canon_keys_match_spark_expression_on_mixed_unicode(spark):
         "émoji 🎉 and ação ñandú",
         "",
         "...",
+        # the kernel reads a 4 * 48 = 192-byte prefix first: fewer than 48
+        # kept chars in it (punctuation / non-ASCII first) widens the window
+        "!" * 191 + "Widened Window " * 8,
+        "中文" * 40 + " tail after the multibyte run 0123456789 and more words",
+        # the 48th kept char is the window's last byte, then its first
+        # byte past the edge
+        "." * 144 + "a" * 48 + "b",
+        "." * 145 + "a" * 48 + "b",
+        # larger than simhash._SLICE_BYTES: a slice of its own
+        "Big Doc, " * 120_000,
     ]
     df = spark.createDataFrame(
         [(str(i), t, 1) for i, t in enumerate(texts)],
@@ -235,6 +245,60 @@ def test_canon_keys_match_spark_expression_on_mixed_unicode(spark):
         f"SELECT regexp_replace(lower('{kelvin}'), '[^a-z0-9 ]', '') AS e"
     ).collect()[0]["e"]
     assert byte_canon == "elvin" and jvm_canon == "kelvin"  # divergence is real & pinned
+
+
+def test_fingerprint_slices_equal_whole_batch(monkeypatch):
+    """simhash._fingerprint_batches runs the kernels over row slices of
+    about _SLICE_BYTES of text: the output must not depend on the slice
+    size, and no kernel call may exceed the budget unless it holds one
+    oversize document. Driver-side, no Spark."""
+    import pyarrow as pa
+
+    from hexspark import kernels
+    from hexspark.pipeline import simhash as sm
+
+    rng = np.random.default_rng(5)
+    words = ["alpha", "Beta", "gamma42", "ünï", "—", "中文", "...", "x" * 30]
+    texts = [
+        " ".join(rng.choice(words, size=int(rng.integers(0, 60))))
+        for _ in range(200)
+    ]
+    texts += ["", None, "!" * 2700, "tokens " * 500]  # the last two > 1 KB
+    n = len(texts)
+    batch = pa.RecordBatch.from_arrays(
+        [
+            pa.array([str(i) for i in range(n)]),
+            pa.array(texts, type=pa.string()),
+            pa.array(np.ones(n, dtype=np.int32)),
+        ],
+        names=["conv_id", "doc_text", "n_turns"],
+    )
+    # a second batch that is itself a view at a non-zero offset
+    batches = [batch, batch.slice(17, 150)]
+    orig = kernels.simhash256_from_utf8
+
+    def run(slice_bytes):
+        calls = []
+
+        def spy(data, offs):
+            calls.append((len(data), len(offs) - 1))
+            return orig(data, offs)
+
+        monkeypatch.setattr(sm, "_SLICE_BYTES", slice_bytes)
+        monkeypatch.setattr(kernels, "simhash256_from_utf8", spy)
+        out = pa.Table.from_batches(list(sm._fingerprint_batches(iter(batches))))
+        return out.combine_chunks(), calls
+
+    sliced, sliced_calls = run(1024)
+    whole, whole_calls = run(1 << 30)
+    assert len(whole_calls) == 2 and len(sliced_calls) > 10
+    assert sliced.num_rows == whole.num_rows == n + 150
+    assert sliced.equals(whole)
+    for nbytes, ndocs in sliced_calls:
+        assert nbytes <= 1024 or ndocs == 1, (nbytes, ndocs)
+    # null doc_text: empty key, 0 chars (the byte count's answer)
+    row = whole.slice(n - 3, 1).to_pylist()[0]
+    assert row["canon"] == "" and row["n_chars"] == 0
 
 
 def test_edit_distance_scorer(spark):

@@ -191,3 +191,35 @@ def test_link_plan_shapes(spark):
             spark.conf.unset("spark.sql.debug.maxToStringFields")
         else:
             spark.conf.set("spark.sql.debug.maxToStringFields", prev)
+
+
+def test_link_plan_build_collects_hot_blocks_once(spark):
+    """Building the linkage plan finds hot blocks with ONE collect of the
+    block sizes (fed back as a local relation), not a localCheckpoint +
+    isEmpty probe: fewer than the 4 Spark jobs the probe took, with and
+    without a hot block, and the salted pairs stay the exact band pairs."""
+    sc = spark.sparkContext
+
+    def build_jobs(group, a_rows, b_rows, **kw):
+        sc.setJobGroup(group, "linkage plan build")
+        try:
+            pairs, _ = link_candidate_pairs_wide(_mk(spark, a_rows), _mk(spark, b_rows), **kw)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        # the status tracker is fed by the listener bus: drain it first
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return pairs, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    a_rows, b_rows = _rand_tables(7)
+    _, cold_jobs = build_jobs("link-build-cold", a_rows, b_rows)
+    assert 1 <= cold_jobs < 4, cold_jobs
+
+    rng = random.Random(11)
+    ah = [(f"a{i:03d}", "beef" + _hex(rng)[W:], f"hot a {i}") for i in range(12)]
+    bh = [(f"b{i:03d}", "beef" + _hex(rng)[W:], f"hot b {i}") for i in range(9)]
+    hot, hot_jobs = build_jobs("link-build-hot", ah, bh, hot_pairs=50, n_salts=4)
+    assert 1 <= hot_jobs < 4, hot_jobs
+    got = [(r["conv_id_a"], r["conv_id_b"]) for r in hot.collect()]
+    assert len(got) == len(set(got)) == 108
+    assert set(got) == _expected_pairs(ah, bh)
