@@ -2,10 +2,10 @@
 
 pandas UDFs pay per-row costs for Binary/String columns (each cell becomes a
 Python bytes/str object). These helpers read the Arrow buffers directly:
-a fixed-width binary column becomes one (n, w) uint8 matrix view and an
-ASCII string column becomes one padded (n, L) uint8 matrix — no per-row
-objects anywhere between the JVM and the numpy kernels. Used by
-pipeline.scoring via DataFrame.mapInArrow.
+an ASCII string column becomes one padded (n, L) uint8 matrix, and numpy
+matrices go back as string or binary arrays — no per-row objects anywhere
+between the JVM and the numpy kernels. Used by pipeline.scoring via
+DataFrame.mapInArrow.
 
 This is the distributed analogue of the reference's SIMD width escalation
 (nibble LOOKUP → SSE → AVX2, python_hexhamming.h:243-259/489-510): the
@@ -26,20 +26,6 @@ def _offsets_and_data(arr: pa.Array) -> tuple[np.ndarray, np.ndarray]:
     offs = np.frombuffer(buffers[1], dtype=off_dtype)[arr.offset : arr.offset + len(arr) + 1]
     data = np.frombuffer(buffers[2], dtype=np.uint8)
     return offs.astype(np.int64), data
-
-
-def fixed_binary_matrix(arr: pa.Array, width: int) -> np.ndarray:
-    """(n, width) uint8 view of a binary column whose values are all
-    `width` bytes (validated). Zero-copy when the column is contiguous."""
-    offs, data = _offsets_and_data(arr)
-    n = len(offs) - 1
-    if n == 0:
-        return np.zeros((0, width), dtype=np.uint8)
-    widths = np.diff(offs)
-    if not (widths == width).all():
-        raise ValueError(f"expected fixed width {width}, got widths {np.unique(widths)}")
-    start = int(offs[0])
-    return data[start : start + n * width].reshape(n, width)
 
 
 def string_array_from_matrix(mat: np.ndarray, lens: np.ndarray) -> pa.Array:

@@ -4,14 +4,14 @@ Design notes for 100 TB:
 - exact dedup is one hash-aggregate on a digest column — the digest is
   computed map-side (md5, JVM codegen) so the shuffle carries 16 bytes per
   row, not the document text.
-- MinHash permutations use md5(perm_id || token): engine-agnostic and
+- MinHash permutations use md5(perm_id || shingle): engine-agnostic and
   deterministic (string-min over hex digests is a valid min-hash), fully
-  expressible in Catalyst (transform + array_min) — no UDF, whole-stage
-  codegen end to end.
-- MinHash LSH pairing explodes k rows per doc and self-joins on
-  (perm, minhash) — same shape as the signature LSH blocking in
-  pipeline/blocking.py, same skew story (hot minhash values = boilerplate
-  docs; cap with max_block).
+  expressible in Catalyst (shingles exploded to rows, one min-aggregate
+  per permutation) — no UDF, whole-stage codegen end to end.
+- MinHash LSH pairing explodes one row per band (md5 of the band's
+  min-hashes) and self-joins on (band, band hash) — same shape as the
+  signature LSH blocking in pipeline/blocking.py, same skew story (hot
+  minhash values = boilerplate docs; cap with max_block).
 - n-gram Jaccard is transform(sequence) + array_distinct + cardinality
   arithmetic, all built-in.
 """
@@ -36,12 +36,6 @@ def exact_dedup_groups(docs: DataFrame, text_col: str = "text", id_col: str = "d
     )
 
 
-def _perm_min(toks, perm: int):
-    # NB: the closure must take exactly one lambda arg — a two-arg lambda
-    # would make Spark bind the second to the array index column.
-    return F.array_min(F.transform(toks, lambda t: F.md5(F.concat(F.lit(str(perm)), t))))
-
-
 def shingles(text_col, size: int = 3):
     """Column: array of `size`-token shingles of the whitespace tokens
     (the whole text as one shingle when shorter). Shingling is what makes
@@ -62,14 +56,6 @@ def shingles(text_col, size: int = 3):
         nxt = F.slice(toks, 1 + j, F.greatest(m, F.lit(0)))
         win = F.zip_with(win, nxt, lambda x, y: F.concat_ws(" ", x, y))
     return F.when(n >= size, win).otherwise(F.array(text_col))
-
-
-def minhash_signature(text_col, k: int = 8, shingle_size: int = 3):
-    """Column: array of k min-hashes of the `shingle_size`-token shingle
-    set. Permutation i = lexicographic min over shingles of
-    md5(i || shingle) — engine-agnostic and deterministic."""
-    sh = shingles(text_col, shingle_size)
-    return F.array(*[_perm_min(sh, i) for i in range(k)])
 
 
 def minhash_pairs(

@@ -17,11 +17,6 @@ def token_count(text_col):
     return F.size(F.split(text_col, " "))
 
 
-def word_token_count(text_col):
-    """BPE-ish token estimate: words + digit runs + punctuation marks."""
-    return F.size(F.regexp_extract_all(text_col, F.lit(r"[a-zA-Z]+|[0-9]+|[^a-zA-Z0-9\s]"), F.lit(0)))
-
-
 def punct_ratio(text_col):
     clean = F.regexp_replace(text_col, _PUNCT_CLASS, "")
     return (F.length(text_col) - F.length(clean)).cast("double") / F.length(text_col)

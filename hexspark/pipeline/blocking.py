@@ -57,12 +57,18 @@ already emitted it). Every emitted pair is therefore emitted exactly once
 across both branches. A chain pair suppressed because its first banned
 matching band is a different block stays connected through that block's
 own chain, so cluster-level connectivity is preserved.
+
+``_first_band_pairs`` is the one band join and filter of the normal
+branch, the fold (``new_col``) and clean-clean linkage (pipeline/linkage.py);
+the chain branch shares its ``_pair_select`` projection.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, Row, Window
 from pyspark.sql import functions as F
+
+from .scoring import N_CHUNKS, sig_chunks_raw
 
 SIG_HEX_CHARS = 64  # 256 bits
 _CHUNK_HEX = 8      # 8 hex chars = 32 bits per chunk
@@ -115,13 +121,18 @@ def _band_slice(b: int, n_bands: int) -> tuple[int, int, int]:
     return chunk, shift, w_bits
 
 
-def _band_val_int(b: int, n_bands: int, side: str = "") -> Column:
+def _band_val_int(b: int, n_bands: int) -> Column:
     """Integer value of band b extracted from the signature chunk longs
-    c{i}[_side]: pure codegen bit arithmetic, no strings."""
+    c{i}: pure codegen bit arithmetic, no strings."""
     chunk, shift, w_bits = _band_slice(b, n_bands)
-    col = f"c{chunk}_{side}" if side else f"c{chunk}"
-    v = f"shiftright({col}, {shift})" if shift else col
+    v = f"shiftright(c{chunk}, {shift})" if shift else f"c{chunk}"
     return F.expr(f"{v} & {(1 << w_bits) - 1}")
+
+
+def _band_vals(n_bands: int) -> Column:
+    """All band values of a chunk-long row as one array. Build it once per
+    call: each of its n_bands expressions costs py4j round trips."""
+    return F.array(*[_band_val_int(b, n_bands) for b in range(n_bands)])
 
 
 def _band_match_sql(b: int, n_bands: int) -> str:
@@ -160,38 +171,79 @@ def shared_band_count(n_bands: int = 16) -> Column:
     return F.expr(f"CAST({terms} AS BIGINT)")
 
 
-def sig_chunks_raw():
-    """The 8 x 32-bit chunk expressions of sig_hex without side suffix
-    (single definition in scoring.sig_chunks_raw; re-exported here for the
-    band-slice call sites)."""
-    from .scoring import sig_chunks_raw as _raw
+# ---- the banded pair join: one core for batch, fold, chain and linkage --
 
-    return _raw()
+_BAND_ON = "a.band_id = b.band_id AND a.band_val = b.band_val"
+
+# bits [0, band_id): pure bit expression — `shiftleft(1L, band_id) - 1`
+# overflows under ANSI mode at band_id=63 (1<<63 = Long.MinValue, the -1
+# then underflows), so n_bands=64 would fail at runtime. bitwise_not of
+# a -1 shifted left has no arithmetic step: ~(-1 << 0) = 0, ~(-1 << 63)
+# = 2^63 - 1.
+_LOW_BITS = "~ shiftleft(-1L, band_id)"
 
 
-def _pair_projection(n_chunks: int, swap: Column):
-    """Select-list producing the canonical (conv_id_a < conv_id_b) wide
-    pair columns from a row carrying own + neighbor ("nb") payloads,
-    swapping sides when the neighbor sorts first."""
-    def pick(own: Column, nb: Column, a_side: bool):
-        take_own = ~swap if a_side else swap
-        return F.when(take_own, own).otherwise(nb)
+def _with_chunks(signatures: DataFrame, *extra: str) -> DataFrame:
+    """(conv_id, canon, *extra, c0..c7): the signature as its 8 chunk
+    longs (scoring.sig_chunks_raw), the band slices' source."""
+    chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(sig_chunks_raw())]
+    return signatures.select("conv_id", "canon", *extra, *chunk_cols)
 
-    cols = [
-        pick(F.col("conv_id"), F.col("nb.conv_id"), True).alias("conv_id_a"),
-        pick(F.col("conv_id"), F.col("nb.conv_id"), False).alias("conv_id_b"),
-        pick(F.col("canon"), F.col("nb.canon"), True).alias("canon_a"),
-        pick(F.col("canon"), F.col("nb.canon"), False).alias("canon_b"),
-    ]
-    for i in range(n_chunks):
-        cols.append(pick(F.col(f"c{i}"), F.col(f"nb.c{i}"), True).alias(f"c{i}_a"))
-        cols.append(pick(F.col(f"c{i}"), F.col(f"nb.c{i}"), False).alias(f"c{i}_b"))
-    # only the A-side banned mask is needed downstream: on every matching
-    # band both sides sit in the same block, so either side's bit is valid
-    cols.append(
-        pick(F.col("banned"), F.col("nb.banned"), True).alias("banned_a")
+
+def _band_rows(sigs_c: DataFrame, band_vals: Column, *extra) -> DataFrame:
+    """One row per (signature, band) of a _with_chunks table, carrying the
+    signature's payload so a band join emits wide pairs with no join back:
+    (conv_id, canon, *extra, c0..c7, band_id, band_val)."""
+    return sigs_c.select(
+        "conv_id", "canon", *extra,
+        *[f"c{i}" for i in range(N_CHUNKS)],
+        F.posexplode(band_vals).alias("band_id", "band_val"),
     )
-    return cols
+
+
+def _pair_select(own: str, other: str, swap: bool) -> list[str]:
+    """SQL select list of the wide pair columns (conv_id_a/b, canon_a/b,
+    then c{i}_a and c{i}_b) from a row carrying two payloads under the
+    column prefixes ``own`` and ``other``. Without ``swap`` own is side
+    A. With ``swap`` the sides are put in conv_id_a < conv_id_b order: own
+    is side A unless other's id sorts first."""
+    def side(col: str, a_side: bool) -> str:
+        if not swap:
+            return f"{own if a_side else other}{col}"
+        take_own = f"{other}conv_id < {own}conv_id"
+        if a_side:
+            take_own = f"NOT ({take_own})"
+        return f"CASE WHEN {take_own} THEN {own}{col} ELSE {other}{col} END"
+
+    return [
+        f"{side('conv_id', True)} AS conv_id_a",
+        f"{side('conv_id', False)} AS conv_id_b",
+        f"{side('canon', True)} AS canon_a",
+        f"{side('canon', False)} AS canon_b",
+        *[f"{side(f'c{i}', True)} AS c{i}_a" for i in range(N_CHUNKS)],
+        *[f"{side(f'c{i}', False)} AS c{i}_b" for i in range(N_CHUNKS)],
+    ]
+
+
+def _first_band_pairs(
+    a: DataFrame, b: DataFrame, on: str, swap: bool, n_bands: int
+) -> DataFrame:
+    """Join band rows ``a`` x ``b`` on the SQL condition ``on`` (over the
+    aliases a/b) and keep each pair only in the lowest band where it
+    matches and a's ``banned`` mask is clear: every pair exactly once, with
+    no pair-stream shuffle (module docstring). Returns the _pair_select
+    columns, swapped into id order when ``swap``."""
+    joined = a.alias("a").join(b.alias("b"), F.expr(on)).selectExpr(
+        "a.band_id AS band_id",
+        "a.banned AS banned_a",
+        *_pair_select("a.", "b.", swap),
+    )
+    eff = _match_mask(n_bands).bitwiseAND(F.bitwise_not(F.col("banned_a")))
+    return (
+        joined.withColumn("eff", eff)
+        .where(F.col("eff").bitwiseAND(F.expr(_LOW_BITS)) == 0)
+        .drop("eff", "band_id", "banned_a")
+    )
 
 
 def candidate_pairs_wide(
@@ -230,12 +282,9 @@ def candidate_pairs_wide(
     exceeds max_block (observability, per north_rule's "skew handled
     explicitly"; the runner writes it as the skipped_blocks table).
     """
-    from .scoring import N_CHUNKS
-
-    chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(sig_chunks_raw())]
     flag = [new_col] if new_col else []
-    sigs_c = signatures.select("conv_id", "canon", *flag, *chunk_cols)
-    band_vals = F.array(*[_band_val_int(b, n_bands) for b in range(n_bands)])
+    sigs_c = _with_chunks(signatures, *flag)
+    band_vals = _band_vals(n_bands)
 
     # ---- adaptive skew gate --------------------------------------------
     # Compute per-block sizes and collect the blocks above max_block ONCE,
@@ -273,67 +322,27 @@ def candidate_pairs_wide(
         # filters downstream keep the exactly-once guarantee unchanged
         sigs_b = sigs_c.withColumn("banned", F.lit(0).cast("long"))
 
-    bands = sigs_b.select(
-        "conv_id", "canon", "banned", *flag,
-        *[f"c{i}" for i in range(N_CHUNKS)],
-        F.posexplode(band_vals).alias("band_id", "band_val"),
-    )
-    # bits [0, band_id): pure bit expression — `shiftleft(1L, band_id) - 1`
-    # overflows under ANSI mode at band_id=63 (1<<63 = Long.MinValue, the -1
-    # then underflows), so n_bands=64 would fail at runtime. bitwise_not of
-    # a -1 shifted left has no arithmetic step: ~(-1 << 0) = 0, ~(-1 << 63)
-    # = 2^63 - 1.
-    low_bits = F.expr("~ shiftleft(-1L, band_id)")
+    bands = _band_rows(sigs_b, band_vals, "banned", *flag)
 
     # ---- normal branch: band rows whose own block is not oversize -------
     # (blocks of size 1 pass through; they produce no join output and are
     # not worth a count-window — the exchange volume is the same either
     # way and the bit-test below is free codegen)
     kept = bands.where(F.expr("(shiftright(banned, band_id) & 1) = 0"))
-    a = (kept.where(F.col(new_col)) if new_col else kept).alias("a")
-    b = kept.alias("b")
-    on = "a.band_id = b.band_id AND a.band_val = b.band_val"
+    on = _BAND_ON
     if new_col is None:
         on += " AND a.conv_id < b.conv_id"
-
-        def side(col: str, a_side: bool) -> str:
-            return f"a.{col}" if a_side else f"b.{col}"
     else:
         # new A side: new-new pairs once in id order, new-old pairs once
-        # whichever id is lower, swapped into canonical order below
+        # whichever id is lower, swapped into canonical order
         on += (
             " AND a.conv_id != b.conv_id"
             f" AND (a.conv_id < b.conv_id OR NOT b.{new_col})"
         )
-
-        def side(col: str, a_side: bool) -> str:
-            take_a = "NOT (b.conv_id < a.conv_id)" if a_side else "b.conv_id < a.conv_id"
-            return f"CASE WHEN {take_a} THEN a.{col} ELSE b.{col} END"
-
-    joined = a.join(b, F.expr(on)).selectExpr(
-        "a.band_id AS band_id",
-        f"{side('conv_id', True)} AS conv_id_a",
-        f"{side('conv_id', False)} AS conv_id_b",
-        f"{side('canon', True)} AS canon_a",
-        f"{side('canon', False)} AS canon_b",
-        "a.banned AS banned_a",
-        *[f"{side(f'c{i}', True)} AS c{i}_a" for i in range(N_CHUNKS)],
-        *[f"{side(f'c{i}', False)} AS c{i}_b" for i in range(N_CHUNKS)],
-    )
-    eff = _match_mask(n_bands).bitwiseAND(F.bitwise_not(F.col("banned_a")))
-    normal = (
-        joined.withColumn("eff", eff)
-        .where(F.col("eff").bitwiseAND(low_bits) == 0)
-        .drop("eff", "band_id", "banned_a")
-    )
-
-    out_cols = [
-        "conv_id_a", "conv_id_b", "canon_a", "canon_b",
-        *[f"c{i}_a" for i in range(N_CHUNKS)],
-        *[f"c{i}_b" for i in range(N_CHUNKS)],
-    ]
+    a = kept.where(F.col(new_col)) if new_col else kept
+    normal = _first_band_pairs(a, kept, on, new_col is not None, n_bands)
     if not oversize_rows:
-        return normal.select(*out_cols), oversize_rows
+        return normal, oversize_rows
 
     # ---- chain branch: oversize blocks, salted path instead of drop -----
     # input is ONLY the band rows of oversize blocks (usually none/few);
@@ -406,9 +415,13 @@ def candidate_pairs_wide(
         .drop("_nb_id")
     )
 
-    swap = F.col("nb.conv_id") < F.col("conv_id")
-    chain_rows = chain_src.select(
-        "band_id", *_pair_projection(N_CHUNKS, swap)
+    chain_rows = chain_src.selectExpr(
+        "band_id",
+        *_pair_select("", "nb.", True),
+        # only the A-side banned mask is needed downstream: on every matching
+        # band both sides sit in the same block, so either side's bit is valid
+        "CASE WHEN NOT (nb.conv_id < conv_id) THEN banned ELSE nb.banned END"
+        " AS banned_a",
     )
     cmatch = _match_mask(n_bands)
     chain = (
@@ -417,13 +430,12 @@ def candidate_pairs_wide(
         .withColumn("bmatch", F.col("match").bitwiseAND(F.col("banned_a")))
         .where(
             (F.col("eff") == 0)
-            & (F.col("bmatch").bitwiseAND(low_bits) == 0)
+            & (F.col("bmatch").bitwiseAND(F.expr(_LOW_BITS)) == 0)
         )
         .drop("match", "eff", "bmatch", "band_id", "banned_a")
     )
 
-    pairs = normal.select(*out_cols).unionByName(chain.select(*out_cols))
-    return pairs, oversize_rows
+    return normal.unionByName(chain), oversize_rows
 
 
 def candidate_pairs(

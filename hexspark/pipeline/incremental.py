@@ -36,7 +36,7 @@ reusing A2/A3 scoring semantics unchanged via scoring.score_wide.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from . import assemble, blocking, clustering, scoring, simhash
@@ -46,7 +46,7 @@ def incremental_candidate_pairs_wide(
     signatures: DataFrame,
     n_bands: int = 16,
     max_block: int = 2000,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row]]:
     """LSH candidate pairs restricted to pairs touching >= 1 NEW signature:
     the batch blocking engine (blocking.candidate_pairs_wide) run with the
     ``is_new`` boolean column of ``signatures`` as its new-row mask."""

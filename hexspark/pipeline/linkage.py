@@ -15,18 +15,20 @@ modes of entity resolution. Linkage differs in three load-bearing ways:
    are irreducible. The skew lever is therefore *execution layout*, not
    pair-count reduction: hot blocks are salt-spread across n_salts
    reducers (A side salted, B side replicated — the standard skew-join
-   move, same as ops/skewjoin.salted_equijoin) so no single task owns a
-   hot block's full cross product.
+   move) so no single task owns a hot block's full cross product. Only
+   the hot blocks' rows are salted and replicated; every other block
+   joins on salt 0. ops/skewjoin.salted_equijoin makes the same move for
+   a whole table, which here would replicate all of B n_salts times.
 3. **Cardinality**: linkage usually carries a one-to-one constraint;
    ``link_tables(one_to_one=True)`` composes matching.mutual_best_match
    over the scored edges.
 
 Exactly-once: a pair sharing k bands is generated k times by any band
-join; we keep it only in its FIRST matching band via the same codegen
-first-matching-band filter as the batch path (blocking.py) — zero
-pair-stream shuffles, no distinct. Salting cannot break this: within one
-band an A row carries exactly one salt value and the B row is replicated
-to every salt, so each (pair, band) joins exactly once.
+join; we keep it only in its FIRST matching band. The join and the filter
+are the batch path's own (blocking._first_band_pairs, with a zero banned
+mask) — zero pair-stream shuffles, no distinct. Salting cannot break
+this: within one band an A row carries exactly one salt value and the B
+row is replicated to every salt, so each (pair, band) joins exactly once.
 
 Reference anchor: the reference library's surface is 5 scalar calls
 (python_hexhamming.cc:421-428) with no table linkage; this module is part
@@ -36,26 +38,15 @@ unchanged via scoring.score_wide.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
-from .blocking import _band_val_int, _match_mask, sig_chunks_raw
+from .blocking import _BAND_ON, _band_rows, _band_vals, _first_band_pairs, _with_chunks
 from .matching import mutual_best_match
-from .scoring import DEFAULT_ALPHA, DEFAULT_MAX_DIST, N_CHUNKS, score_wide
+from .scoring import DEFAULT_ALPHA, DEFAULT_MAX_DIST, score_wide
 
 DEFAULT_HOT_PAIRS = 4_000_000  # block cross-product size that triggers salting
 DEFAULT_N_SALTS = 16
-
-
-def _prep(sigs: DataFrame, band_vals) -> DataFrame:
-    chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(sig_chunks_raw())]
-    s = sigs.select("conv_id", "canon", *chunk_cols)
-    return s.select(
-        "conv_id",
-        "canon",
-        *[f"c{i}" for i in range(N_CHUNKS)],
-        F.posexplode(band_vals).alias("band_id", "band_val"),
-    )
 
 
 def link_candidate_pairs_wide(
@@ -64,106 +55,68 @@ def link_candidate_pairs_wide(
     n_bands: int = 16,
     hot_pairs: int = DEFAULT_HOT_PAIRS,
     n_salts: int = DEFAULT_N_SALTS,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row]]:
     """LSH-blocked candidate pairs BETWEEN two signature tables, each pair
-    exactly once, A side always left. Output schema matches
-    blocking.candidate_pairs_wide (conv_id_a/b, canon_a/b, c{i}_a/b chunk
-    longs) so scoring.score_wide applies unchanged.
+    exactly once, A side always left. The pairs come out of blocking's
+    banded pair join, so they have candidate_pairs_wide's columns
+    (conv_id_a/b, canon_a/b, c{i}_a/b) and score_wide applies unchanged.
 
     Plan: one band exchange per side feeds a cross-table equi-join on
-    (band_id, band_val[, salt]); pair dedup is the codegen
-    first-matching-band filter (no distinct, no pair-stream shuffle). Hot
-    blocks — where the A-count x B-count cross product exceeds
-    ``hot_pairs`` — are detected by ONE tiny aggregated probe at
-    plan-build time (the same adaptive decide-at-runtime gate as
-    blocking.candidate_pairs_wide's skew gate); when none exist the salt
-    columns are zero literals and the whole salting subplan is left out of
-    the plan.
+    (band_id, band_val, salt) and the first-matching-band filter with a
+    zero banned mask (no distinct, no pair-stream shuffle). Hot blocks —
+    where the A-count x B-count cross product exceeds ``hot_pairs`` — are
+    found by ONE collect of the block sizes at plan-build time (the same
+    decide-at-runtime gate as candidate_pairs_wide's skew gate); when none
+    exist the salt columns are zero literals and the salting subplan is
+    left out of the plan.
 
-    Returns (pairs_wide, block_stats); block_stats carries per-block
-    (band_id, band_val, n_a, n_b, n_pairs, salted) for observability —
-    north_rule's "skew handled explicitly", linkage edition.
+    Returns (pairs_wide, block_stats); block_stats is the sorted list of
+    the hot (salted) blocks as collected Rows (band_id, band_val, n_a,
+    n_b, n_pairs) — empty when no block is hot (north_rule's "skew handled
+    explicitly", linkage edition).
     """
-    band_vals = F.array(*[_band_val_int(b, n_bands) for b in range(n_bands)])
-    bands_a = _prep(sigs_a, band_vals)
-    bands_b = _prep(sigs_b, band_vals)
+    band_vals = _band_vals(n_bands)
+    # only side A's mask is read (a.banned): linkage bans no band
+    bands_a = _band_rows(_with_chunks(sigs_a), band_vals, F.expr("0L AS banned"))
+    bands_b = _band_rows(_with_chunks(sigs_b), band_vals)
 
-    ca = bands_a.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n_a"))
-    cb = bands_b.groupBy("band_id", "band_val").agg(F.count(F.lit(1)).alias("n_b"))
+    # both sides' block sizes from ONE aggregate over the union of their
+    # band keys (joining two per-side aggregates costs AQE one more job)
     sizes = (
-        ca.join(cb, ["band_id", "band_val"], "full_outer")
-        .select(
-            "band_id",
-            "band_val",
-            F.coalesce("n_a", F.lit(0)).alias("n_a"),
-            F.coalesce("n_b", F.lit(0)).alias("n_b"),
-        )
+        bands_a.selectExpr("band_id", "band_val", "1L AS n_a", "0L AS n_b")
+        .unionByName(bands_b.selectExpr("band_id", "band_val", "0L AS n_a", "1L AS n_b"))
+        .groupBy("band_id", "band_val")
+        .agg(F.sum("n_a").alias("n_a"), F.sum("n_b").alias("n_b"))
         .withColumn("n_pairs", F.col("n_a") * F.col("n_b"))
     )
-    block_stats = sizes.withColumn("salted", F.col("n_pairs") > F.lit(hot_pairs))
     # tiny by construction (one row per hot block): collected once and fed
     # back as a local relation, so no subtree recomputes the aggregate and
     # no cache entry outlives the call (as blocking.candidate_pairs_wide)
-    hot_keys = sizes.where(F.col("n_pairs") > hot_pairs).select("band_id", "band_val")
-    hot_rows = hot_keys.collect()
+    hot_rows = sorted(sizes.where(F.col("n_pairs") > hot_pairs).collect())
 
     if hot_rows:
-        hot = sigs_a.sparkSession.createDataFrame(hot_rows, hot_keys.schema)
-        hot_marked = F.broadcast(hot.withColumn("_hot", F.lit(True)))
+        hot = sigs_a.sparkSession.createDataFrame(hot_rows, sizes.schema)
+        hot_marked = F.broadcast(hot.select("band_id", "band_val", F.lit(True).alias("_hot")))
         bands_a = bands_a.join(hot_marked, ["band_id", "band_val"], "left").withColumn(
             "salt",
-            F.when(
-                F.col("_hot").isNotNull(),
-                F.pmod(F.xxhash64("conv_id", F.lit("linksalt")), F.lit(n_salts)),
-            )
-            .otherwise(F.lit(0))
-            .cast("int"),
+            F.expr(
+                "CAST(CASE WHEN _hot IS NOT NULL"
+                f" THEN pmod(xxhash64(conv_id, 'linksalt'), {n_salts}) ELSE 0 END AS INT)"
+            ),
         ).drop("_hot")
-        bands_b = (
-            bands_b.join(hot_marked, ["band_id", "band_val"], "left")
-            .withColumn(
-                "salt",
-                F.explode(
-                    F.when(
-                        F.col("_hot").isNotNull(),
-                        F.sequence(F.lit(0), F.lit(n_salts - 1)),
-                    ).otherwise(F.array(F.lit(0)))
-                ),
-            )
-            .drop("_hot")
-        )
+        bands_b = bands_b.join(hot_marked, ["band_id", "band_val"], "left").withColumn(
+            "salt",
+            F.expr(
+                "explode(CASE WHEN _hot IS NOT NULL"
+                f" THEN sequence(0, {n_salts - 1}) ELSE array(0) END)"
+            ),
+        ).drop("_hot")
     else:
         bands_a = bands_a.withColumn("salt", F.lit(0))
         bands_b = bands_b.withColumn("salt", F.lit(0))
 
-    a = bands_a.alias("a")
-    b = bands_b.alias("b")
-    joined = a.join(
-        b,
-        (F.col("a.band_id") == F.col("b.band_id"))
-        & (F.col("a.band_val") == F.col("b.band_val"))
-        & (F.col("a.salt") == F.col("b.salt")),
-    )
-    sel = [
-        F.col("a.band_id").alias("band_id"),
-        F.col("a.conv_id").alias("conv_id_a"),
-        F.col("b.conv_id").alias("conv_id_b"),
-        F.col("a.canon").alias("canon_a"),
-        F.col("b.canon").alias("canon_b"),
-    ]
-    for i in range(N_CHUNKS):
-        sel.append(F.col(f"a.c{i}").alias(f"c{i}_a"))
-        sel.append(F.col(f"b.c{i}").alias(f"c{i}_b"))
-    # first-matching-band: drop the pair unless no earlier band matched
-    # (ANSI-safe bits-[0, band_id) mask, see blocking.py n_bands=64 note)
-    low_bits = F.expr("~ shiftleft(-1L, band_id)")
-    pairs = (
-        joined.select(*sel)
-        .withColumn("_match", _match_mask(n_bands))
-        .where(F.col("_match").bitwiseAND(low_bits) == 0)
-        .drop("_match", "band_id")
-    )
-    return pairs, block_stats
+    on = _BAND_ON + " AND a.salt = b.salt"
+    return _first_band_pairs(bands_a, bands_b, on, False, n_bands), hot_rows
 
 
 def link_tables(
@@ -176,7 +129,7 @@ def link_tables(
     one_to_one: bool = False,
     hot_pairs: int = DEFAULT_HOT_PAIRS,
     n_salts: int = DEFAULT_N_SALTS,
-) -> tuple[DataFrame, DataFrame]:
+) -> tuple[DataFrame, list[Row]]:
     """Full clean-clean linkage: block A x B, score with the A2+A3 hybrid
     (codegen hamming gate + Arrow Jaro-Winkler — scoring.score_wide,
     unchanged), optionally reduce to one-to-one mutual-best matches.

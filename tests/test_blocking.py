@@ -8,7 +8,7 @@ from __future__ import annotations
 import pytest
 from pyspark.sql import functions as F
 
-from hexspark.pipeline import blocking, clustering
+from hexspark.pipeline import blocking, clustering, scoring
 
 
 def _sigs_df(spark, rows):
@@ -150,7 +150,7 @@ def test_band_val_int_matches_hex_substring(spark):
     rows = [(f"c{i:02d}", _hex(rng.getrandbits(256))) for i in range(8)]
     sigs = _sigs_df(spark, rows)
 
-    chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(blocking.sig_chunks_raw())]
+    chunk_cols = [c.alias(f"c{i}") for i, c in enumerate(scoring.sig_chunks_raw())]
     band_vals = F.array(
         *[blocking._band_val_int(b, 16) for b in range(16)]
     )

@@ -5,7 +5,6 @@ and the one-to-one composition."""
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.linkage import link_candidate_pairs_wide, link_tables
 
@@ -93,7 +92,7 @@ def test_link_hot_block_salting_is_invisible(spark):
     ]
     A, B = _mk(spark, a_rows), _mk(spark, b_rows)
 
-    plain, _ = link_candidate_pairs_wide(A, B, hot_pairs=10**9)
+    plain, cold_stats = link_candidate_pairs_wide(A, B, hot_pairs=10**9)
     salted, stats = link_candidate_pairs_wide(A, B, hot_pairs=50, n_salts=4)
     p = sorted((r["conv_id_a"], r["conv_id_b"]) for r in plain.collect())
     s = sorted((r["conv_id_a"], r["conv_id_b"]) for r in salted.collect())
@@ -101,13 +100,27 @@ def test_link_hot_block_salting_is_invisible(spark):
     assert s == p
     assert set(p) == _expected_pairs(a_rows, b_rows)
 
-    flagged = {
-        (r["band_id"], r["band_val"])
-        for r in stats.where(F.col("salted")).collect()
-    }
+    # block_stats lists the salted (hot) blocks only, as collected Rows
+    assert cold_stats == []
+    flagged = {(r["band_id"], r["band_val"]): r for r in stats}
     assert flagged, "hot block not flagged in block_stats"
     # the planted block is band 0 with value int('beef', 16)
-    assert (0, int(hot_band, 16)) in flagged
+    beef = flagged[(0, int(hot_band, 16))]
+    assert (beef["n_a"], beef["n_b"], beef["n_pairs"]) == (12, 9, 108)
+    assert all(r["n_pairs"] > 50 for r in stats)
+
+
+def test_link_pairs_share_the_batch_pair_schema(spark):
+    """Linkage pairs come out of the same banded pair join as the batch
+    blocker: one column list (and order) for every banded join's pairs."""
+    from hexspark.pipeline.blocking import candidate_pairs_wide
+
+    a_rows, b_rows = _rand_tables(7)
+    A, B = _mk(spark, a_rows), _mk(spark, b_rows)
+    linked, _ = link_candidate_pairs_wide(A, B)
+    batch, _ = candidate_pairs_wide(A.unionByName(B))
+    assert linked.columns == batch.columns
+    assert linked.schema == batch.schema
 
 
 def test_link_tables_one_to_one_cardinality(spark):
