@@ -1192,8 +1192,8 @@ def q_pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     the lowest code) emits one all-integer row per (vector, subspace).
     The DuckDB oracle replays the ENTIRE training loop as assign→mean
     CTE pairs, like ivf_ann_topk replays kmeans_centroids — so the
-    driver hash pins the fit, not just the encode. The float ADC/recall
-    half of the family stays pytest-pinned (tests/test_pq.py)."""
+    driver hash pins the fit, not just the encode; tests/test_pq.py pins
+    the same fit against a numpy replay."""
     from hexspark.ops.ann import pq_codes_df
 
     return pq_codes_df(

@@ -304,19 +304,6 @@ def splitmix64(x: np.ndarray) -> np.ndarray:
     return x
 
 
-def hash_token_matrix(mat: np.ndarray, lengths: np.ndarray) -> np.ndarray:
-    """Polynomial rolling hash of each row of a padded (t, L) uint8 matrix,
-    finalized with splitmix64. Deterministic across runs/platforms."""
-    t, L = mat.shape
-    acc = np.zeros(t, dtype=np.uint64)
-    mult = np.uint64(1099511628211)  # FNV prime as the polynomial base
-    with np.errstate(over="ignore"):
-        for j in range(L):  # loop over max token length (small), not rows
-            acc = acc * mult + mat[:, j].astype(np.uint64)
-    acc ^= lengths.astype(np.uint64) * _GOLDEN
-    return splitmix64(acc)
-
-
 _POLY_P = np.uint64(1099511628211)  # FNV prime as the polynomial base
 _MAX_TOKEN_BYTES = 16
 with np.errstate(over="ignore"):
@@ -333,7 +320,7 @@ def hash_tokens_utf8(data: np.ndarray, doc_offsets: np.ndarray):
 
     Tokens are maximal [a-z0-9]+ runs after ASCII lowercasing (non-ASCII
     bytes act as separators). Each token's first 16 bytes are hashed with a
-    polynomial rolling hash (same construction as hash_token_matrix),
+    polynomial rolling hash (base _POLY_P, the FNV prime),
     length-mixed, splitmix64-finalized. The 16 Horner steps run over the
     tokens in descending order of capped length, so step j reads one byte
     of each token longer than j and nothing else.
@@ -563,29 +550,3 @@ def canon_keys_utf8(
         todo = todo[(doc_len[todo] > window) & (n_kept < max_len)]
         window *= 4
     return out, lens
-
-
-def simhash256_from_token_hashes(
-    token_h64: np.ndarray, doc_boundaries: np.ndarray
-) -> np.ndarray:
-    """256-bit SimHash per document from 64-bit token hashes.
-
-    token_h64       : (T,) uint64 — one hash per token, docs concatenated
-    doc_boundaries  : (D,) int64  — start offset of each doc's token run
-    returns         : (D, 32) uint8 — 256-bit signatures (big-endian bits)
-
-    Each 64-bit token hash is expanded to 4 independent 64-bit lanes with
-    splitmix64 (256 bits total), unpacked to ±1, segment-summed per doc
-    (np.add.reduceat — no per-row Python), and the sign becomes the bit.
-    Design width 256 bits = 64 hex chars, matching the reference's target
-    fingerprint width (README.rst:58).
-    """
-    T = token_h64.shape[0]
-    lanes = np.empty((T, 4), dtype=np.uint64)
-    for k in range(4):
-        lanes[:, k] = splitmix64(token_h64 + np.uint64(k + 1))
-    bits = np.unpackbits(lanes.view(np.uint8), axis=1)  # (T, 256)
-    signed = bits.astype(np.int32) * 2 - 1
-    sums = np.add.reduceat(signed, doc_boundaries, axis=0)  # (D, 256)
-    sig_bits = (sums > 0).astype(np.uint8)
-    return np.packbits(sig_bits, axis=1)  # (D, 32)

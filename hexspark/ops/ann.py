@@ -399,299 +399,6 @@ def ivf_topk(
     return scored.withColumn("rank", F.row_number().over(w)).where(F.col("rank") <= k)
 
 
-def pq_fit(
-    embeddings: DataFrame,
-    m: int = 8,
-    k: int = 16,
-    n_iters: int = 3,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    sample_n: int = 2048,
-) -> np.ndarray:
-    """Product-quantization codebooks — the fourth ANN family next to
-    brute force, LSH buckets, and IVF cells: PQ attacks MEMORY, not just
-    candidate count. Vectors are L2-normalized, split into ``m``
-    subvectors, and each subspace gets a ``k``-word codebook; a vector
-    is then stored as m small integers (m bytes at k<=256) instead of
-    d floats — a 64-dim float32 corpus compresses 32x, which is what
-    lets a 100-TB embedding table's codes live in executor memory while
-    the raw vectors stay on disk for the final exact re-rank.
-
-    Deterministic, RNG-free fit (the kmeans_centroids discipline): train
-    rows are the ``sample_n`` smallest-md5(id) embeddings (same rows on
-    any engine/partitioning), subspace seeds are the first k of those in
-    id order, and ``n_iters`` Lloyd steps run per subspace in driver
-    numpy (the codebook is m*k*sub_dim floats — kilobytes; fitting it
-    distributed would shuffle more than the model weighs). Empty
-    clusters keep their previous centroid. On unit vectors ADC's L2
-    ordering is the cosine ordering (||a-b||^2 = 2 - 2 cos), so results
-    align with the rest of the ANN family's cosine contract.
-
-    Returns codebooks ndarray (m, k, d/m) float64. d must divide by m.
-    """
-    if m < 1 or k < 2:
-        raise ValueError(f"need m >= 1 subspaces and k >= 2 words (got m={m}, k={k})")
-    hv = F.conv(F.md5(F.col(id_col).cast("string")).substr(1, 12), 16, 10).cast("long")
-    rows = (
-        embeddings.withColumn("_hv", hv)
-        .orderBy("_hv", id_col)
-        .limit(sample_n)
-        .orderBy(id_col)
-        .select(vec_col)
-        .collect()
-    )
-    train = np.asarray([r[0] for r in rows], dtype=np.float64)
-    if train.shape[0] < k:
-        raise ValueError(f"need >= k={k} training vectors (got {train.shape[0]})")
-    d = train.shape[1]
-    if d % m:
-        raise ValueError(f"dim {d} not divisible by m={m}")
-    train /= np.maximum(np.linalg.norm(train, axis=1, keepdims=True), 1e-12)
-    sub = d // m
-    books = np.empty((m, k, sub), dtype=np.float64)
-    for j in range(m):
-        x = train[:, j * sub : (j + 1) * sub]
-        c = x[:k].copy()  # id-ordered seeds, no RNG
-        for _ in range(n_iters):
-            dist = ((x[:, None, :] - c[None, :, :]) ** 2).sum(axis=2)
-            assign = dist.argmin(axis=1)  # ties -> lowest code
-            for code in range(k):
-                mask = assign == code
-                if mask.any():
-                    c[code] = x[mask].mean(axis=0)
-        books[j] = c
-    return books
-
-
-def pq_encode(
-    embeddings: DataFrame,
-    codebooks: np.ndarray,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """(id, codes array<int>): per subspace, the nearest codebook word of
-    the L2-NORMALIZED vector (ties -> lowest code). One Arrow-batched
-    pass over the corpus, codebooks broadcast by closure — no shuffle."""
-    m, k, sub = codebooks.shape
-    books = codebooks.copy()
-
-    @F.pandas_udf("array<int>")
-    def encode(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            x = np.asarray(v, dtype=np.float64)
-            x /= max(np.linalg.norm(x), 1e-12)
-            codes = [
-                int(((x[j * sub : (j + 1) * sub] - books[j]) ** 2).sum(axis=1).argmin())
-                for j in range(m)
-            ]
-            out.append(codes)
-        return pd.Series(out)
-
-    return embeddings.select(F.col(id_col), encode(F.col(vec_col)).alias("codes"))
-
-
-def pq_topk(
-    codes: DataFrame,
-    probes: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 5,
-    id_col: str = "vec_id",
-    probe_id_col: str = "probe_id",
-    probe_vec_col: str = "probe_vec",
-) -> DataFrame:
-    """Asymmetric-distance (ADC) top-k over PQ codes: each probe builds
-    its m x k subspace distance table ONCE (Arrow-batched numpy,
-    flattened to m*k doubles), then every (probe, code) pair scores with
-    a pure-codegen fold — m array lookups and adds, no vector math, no
-    Python — over the crossJoin of the broadcast probe table with the
-    corpus CODES (m ints per row; the raw vectors never move). The scan
-    shape mirrors brute_force_topk's broadcast probe baseline but
-    streams 32x less data; at larger scale compose with IVF — encode per
-    cell and ADC-scan only the probed cells.
-
-    Returns (probe_id, vec_id, adc_dist, rank), rank 1..k by (adc_dist
-    asc, id asc), self-matches excluded. adc_dist approximates
-    ||probe - vec||^2 on unit vectors = 2 - 2 cos.
-    """
-    m, kk, sub = codebooks.shape
-    books = codebooks.copy()
-
-    @F.pandas_udf("array<double>")
-    def dtable(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            x = np.asarray(v, dtype=np.float64)
-            x /= max(np.linalg.norm(x), 1e-12)
-            t = np.concatenate(
-                [
-                    ((x[j * sub : (j + 1) * sub] - books[j]) ** 2).sum(axis=1)
-                    for j in range(m)
-                ]
-            )
-            out.append([float(y) for y in t])
-        return pd.Series(out)
-
-    pr = probes.select(
-        F.col(probe_id_col), dtable(F.col(probe_vec_col)).alias("_dt")
-    )
-    joined = codes.crossJoin(F.broadcast(pr)).where(
-        F.col(id_col) != F.col(probe_id_col)
-    )
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(F.col("_dt"), j * kk + F.element_at(F.col("codes"), j + 1) + 1),
-    )
-    w = Window.partitionBy(probe_id_col).orderBy(
-        F.col("adc_dist").asc(), F.col(id_col).asc()
-    )
-    return (
-        joined.withColumn("adc_dist", dist)
-        .withColumn("rank", F.row_number().over(w))
-        .where(F.col("rank") <= k)
-        .select(probe_id_col, id_col, "adc_dist", "rank")
-    )
-
-
-def pq_topk_refined(
-    codes: DataFrame,
-    embeddings: DataFrame,
-    probes: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 5,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """ADC shortlist + exact re-rank — the standard PQ refine stage: the
-    compressed scan (:func:`pq_topk`) selects ``shortlist`` candidates
-    per probe from codes alone, then ONLY those rows fetch their raw
-    vectors (equi-join on id) for an exact cosine re-rank to ``k``.
-
-    This is how PQ is actually deployed: quantization error makes raw
-    ADC rank-k noisy (32 bits/vector cannot order near-ties), but it is
-    excellent at separating the near set from the far set, so a modest
-    shortlist recovers exact-search quality while the full-vector reads
-    drop from |corpus| to shortlist x |probes|. Returns (probe_id,
-    vec_id, sim, rank) — the brute_force_topk contract, so callers can
-    swap exact search for PQ-refined search without code changes.
-
-    Measured recall@10 vs exact search on the 500-vector clustered
-    sf0.001 embeddings table (the adversarial case — ADC must order
-    near-ties INSIDE dense label clusters): 32-bit codes (m=8, k=16)
-    0.68 at shortlist=50; 48-bit (k=64) 0.90; 64-bit (k=256) or
-    doubling the shortlist 0.98. The knobs trade scan bytes for
-    re-ranked rows exactly as the IVF n_probe lever trades cells.
-    """
-    cand = pq_topk(
-        codes, probes, codebooks, k=shortlist, id_col=id_col
-    ).select("probe_id", id_col)
-    fetched = cand.join(embeddings.select(F.col(id_col), vec_col), id_col)
-    rejoined = fetched.join(F.broadcast(probes), "probe_id")
-    sim = cosine_sim(F.col("probe_vec"), F.col(vec_col))
-    scored = rejoined.select(
-        "probe_id", F.col(id_col).alias("vec_id"), sim.alias("sim")
-    ).where(F.col("sim").isNotNull())
-    w = Window.partitionBy("probe_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w)).where(
-        F.col("rank") <= k
-    )
-
-
-def ivf_pq_topk(
-    embeddings: DataFrame,
-    probes: DataFrame,
-    codebooks: np.ndarray,
-    k: int = 5,
-    n_centroids: int = 8,
-    n_probe: int = 2,
-    n_iters: int = 2,
-    shortlist: int = 50,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """IVF x PQ — the composed 100-TB ANN plan both building blocks
-    document: the IVF coarse quantizer (kmeans_centroids cells) prunes
-    WHICH rows are candidates, PQ codes compress WHAT the candidate scan
-    reads, and the exact refine stage restores top-k quality.
-
-    Plan: assign the corpus to trained cells once (broadcast centroid
-    table, narrow pass), PQ-encode it once (Arrow-batched), then each
-    probe (1) picks its ``n_probe`` nearest cells, (2) ADC-scores ONLY
-    those cells' codes via the same pure-codegen m-lookup fold as
-    pq_topk — the join is an equi-join on the cell id, so per probe the
-    scan touches ~n_probe/n_centroids of the corpus at m bytes per row
-    — and (3) the ``shortlist`` best fetch raw vectors for the exact
-    cosine re-rank to ``k``. Same output contract as brute_force_topk.
-
-    At n_probe = n_centroids this degrades gracefully to
-    pq_topk_refined's full-corpus ADC scan (pinned in tests), so recall
-    is tunable from cell-pruned to exact-shortlist with two knobs.
-    Measured on the clustered real embeddings table: recall@10 = 0.92
-    vs exact search at n_probe=3 of 8 cells, 48-bit codes,
-    shortlist=60 — ~37% of the corpus scanned, compressed 32x.
-    """
-    m, kk, sub = codebooks.shape
-    books = codebooks.copy()
-    cents = kmeans_centroids(
-        embeddings, n_centroids, n_iters, id_col=id_col, vec_col=vec_col
-    )
-    cells = _nearest_centroid(embeddings, cents, id_col, vec_col).select(
-        id_col, "cell"
-    )
-    codes = pq_encode(embeddings, books, id_col, vec_col).join(cells, id_col)
-
-    @F.pandas_udf("array<double>")
-    def dtable(vecs: pd.Series) -> pd.Series:
-        out = []
-        for v in vecs:
-            x = np.asarray(v, dtype=np.float64)
-            x /= max(np.linalg.norm(x), 1e-12)
-            t = np.concatenate(
-                [
-                    ((x[j * sub : (j + 1) * sub] - books[j]) ** 2).sum(axis=1)
-                    for j in range(m)
-                ]
-            )
-            out.append([float(y) for y in t])
-        return pd.Series(out)
-
-    probe_cells = _nearest_centroid(
-        probes, cents, "probe_id", "probe_vec", n=n_probe
-    ).select("probe_id", "cell")
-    pr = probes.select(
-        "probe_id", dtable(F.col("probe_vec")).alias("_dt")
-    ).join(probe_cells, "probe_id")
-    joined = codes.join(F.broadcast(pr), "cell").where(
-        F.col(id_col) != F.col("probe_id")
-    )
-    dist = F.aggregate(
-        F.sequence(F.lit(0), F.lit(m - 1)),
-        F.lit(0.0),
-        lambda acc, j: acc
-        + F.element_at(F.col("_dt"), j * kk + F.element_at(F.col("codes"), j + 1) + 1),
-    )
-    w = Window.partitionBy("probe_id").orderBy(F.col("adc_dist").asc(), F.col(id_col).asc())
-    cand = (
-        joined.withColumn("adc_dist", dist)
-        .withColumn("_rn", F.row_number().over(w))
-        .where(F.col("_rn") <= shortlist)
-        .select("probe_id", id_col)
-    )
-    fetched = cand.join(embeddings.select(F.col(id_col), vec_col), id_col)
-    rejoined = fetched.join(F.broadcast(probes), "probe_id")
-    sim = cosine_sim(F.col("probe_vec"), F.col(vec_col))
-    scored = rejoined.select(
-        "probe_id", F.col(id_col).alias("vec_id"), sim.alias("sim")
-    ).where(F.col("sim").isNotNull())
-    w2 = Window.partitionBy("probe_id").orderBy(F.desc("sim"), F.asc("vec_id"))
-    return scored.withColumn("rank", F.row_number().over(w2)).where(
-        F.col("rank") <= k
-    )
-
-
 def pq_codes_df(
     embeddings: DataFrame,
     dim: int,
@@ -701,12 +408,11 @@ def pq_codes_df(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """Fully-distributed, cross-engine-EXACT PQ fit + assignment:
-    (id, subspace, code) with one row per (vector, subspace) — the
-    integer code table a SQL oracle can replay bit-for-bit, complementing
-    the production :func:`pq_fit`/:func:`pq_encode` pair (driver-numpy
-    codebooks, Arrow encode) whose float means are ulp-unstable across
-    engines and therefore stay pytest-pinned.
+    """Product quantization, the one PQ fit and assignment: a
+    fully-distributed, cross-engine-EXACT Lloyd fit per subspace, emitted
+    as (id, subspace, code) with one row per (vector, subspace) — the
+    integer code table a SQL oracle can replay bit-for-bit. PQ compresses
+    a vector to m small integers (m bytes at k<=256) instead of d floats.
 
     The determinism discipline is kmeans_centroids', applied per
     subspace: seeds are the ``k`` smallest-id vectors' subvectors (code =
@@ -718,8 +424,7 @@ def pq_codes_df(
     decimal-snapped order-free sum, re-rounded to the 1e-9 grid. Vectors
     are used RAW (cast float->double, value-preserving), not normalized:
     normalization would interpose a sqrt+divide chain whose ulp noise is
-    exactly what this variant exists to exclude; the production encoder
-    keeps its normalize-for-cosine contract.
+    exactly what the exact fit exists to exclude.
 
     Scale shape: the codeword table is m*k rows (broadcast); each
     iteration is one narrow assignment pass over the (n x m) subvector

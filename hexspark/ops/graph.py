@@ -252,316 +252,6 @@ def robust_components(
     return with_singletons(cc, all_nodes), rounds
 
 
-def merge_path(
-    edges: DataFrame,
-    src: str,
-    dst: str,
-    a: str = "id_a",
-    b: str = "id_b",
-    max_hops: int = 12,
-) -> list[tuple[str, str]]:
-    """Explain a merge: the SHORTEST chain of match edges connecting two
-    records, as an ordered list of (from, to) hops — the first artifact a
-    reviewer asks for when transitive closure glues records that look
-    unrelated ("which edges carried this?"). Returns [] when src == dst
-    or no path exists within ``max_hops``.
-
-    Distributed BFS over the canonical edge set: each level is ONE
-    node-keyed equi-join of the symmetric edges against the frontier, a
-    min() parent pick (deterministic tie-break: lexicographically
-    smallest parent), and an anti-join against the visited set; levels
-    are localCheckpoint()ed so the loop's plan stays flat (same
-    discipline as clustering's rounds). The graph side never leaves the
-    cluster — only the final path, at most ``max_hops`` edges, is
-    collected, via one single-row lookup per hop. Depth is bounded by
-    ``max_hops`` (duplicate-cluster graphs have tiny diameters; a path
-    longer than ~12 hops is itself a finding), so the visited set grows
-    at most ``max_hops`` neighborhood-balls deep, not component-wide.
-
-    The returned hops are ordered src -> dst; each consecutive pair
-    shares its middle node, and the path is simple (BFS parents never
-    revisit)."""
-    if src == dst:
-        return []
-    canon = canonical_edges(edges, a, b).localCheckpoint(eager=True)
-    sym = canon.unionByName(
-        canon.select(F.col("v").alias("u"), F.col("u").alias("v"))
-    )
-    spark = edges.sparkSession
-    visited = spark.createDataFrame([(src, None)], "node string, parent string")
-    frontier = visited.select("node")
-    found = False
-    for _ in range(max_hops):
-        nxt = (
-            sym.join(frontier.select(F.col("node").alias("u")), "u")
-            .groupBy(F.col("v").alias("node"))
-            .agg(F.min("u").alias("parent"))
-            .join(visited.select("node"), "node", "left_anti")
-            .localCheckpoint(eager=True)
-        )
-        if nxt.isEmpty():
-            return []
-        visited = visited.unionByName(nxt).localCheckpoint(eager=True)
-        frontier = nxt.select("node")
-        if not nxt.where(F.col("node") == dst).isEmpty():
-            found = True
-            break
-    if not found:
-        return []
-    # walk the parent pointers back from dst: <= max_hops one-row lookups
-    hops: list[tuple[str, str]] = []
-    cur = dst
-    while cur != src:
-        parent = visited.where(F.col("node") == cur).collect()[0]["parent"]
-        hops.append((parent, cur))
-        cur = parent
-    hops.reverse()
-    return hops
-
-
-def k_core(
-    edges: DataFrame,
-    k: int,
-    a: str = "id_a",
-    b: str = "id_b",
-    max_iter: int = 50,
-) -> tuple[DataFrame, DataFrame, int]:
-    """The k-core of the match graph: the maximal subgraph where every
-    node keeps degree >= k — the third structural-precision lens next to
-    triangle corroboration (local) and bootstrap stability (global). A
-    record inside the 3-core has three independent in-core match partners
-    no matter which single edges are wrong; periphery records that cling
-    to an entity through one or two edges peel off. Classic use: cluster
-    on the k-core, route the peeled shell to review.
-
-    Returns (core_nodes(node), core_edges(u, v) with u < v, rounds).
-
-    Distributed peeling, the standard iterative formulation: each round
-    is ONE degree aggregation over the surviving symmetric edges + one
-    anti-join dropping nodes under k + two semi-joins shrinking the edge
-    set; rounds are localCheckpoint()ed (same loop discipline as
-    clustering). Terminates when a round peels nothing; the peel count is
-    bounded by the peeling DEPTH (in practice a handful of rounds on
-    duplicate-cluster graphs), not the node count, and each round's
-    shuffles are keyed on node ids only. Raises past ``max_iter`` rather
-    than returning a non-core subgraph."""
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    cur = canonical_edges(edges, a, b).localCheckpoint(eager=True)
-    rounds = 0
-    while True:
-        sym = cur.select("u", "v").unionByName(
-            cur.select(F.col("v").alias("u"), F.col("u").alias("v"))
-        )
-        deg = sym.groupBy("u").agg(F.count(F.lit(1)).alias("deg"))
-        low = deg.where(F.col("deg") < k).select("u")
-        if low.isEmpty():
-            break
-        rounds += 1
-        if rounds > max_iter:
-            raise RuntimeError(
-                f"k-core peeling did not converge within max_iter={max_iter}"
-            )
-        cur = (
-            cur.join(low, "u", "left_anti")
-            .join(low.select(F.col("u").alias("v")), "v", "left_anti")
-            .select("u", "v")
-            .localCheckpoint(eager=True)
-        )
-    nodes = (
-        cur.select("u").unionByName(cur.select(F.col("v").alias("u")))
-        .distinct()
-        .select(F.col("u").alias("node"))
-    )
-    return nodes, cur, rounds
-
-
-def articulation_points(
-    edges: DataFrame,
-    a: str = "id_a",
-    b: str = "id_b",
-    max_component: int = 5000,
-) -> tuple[DataFrame, DataFrame]:
-    """Cut vertices of the match graph — the NODE-side complement to
-    bridge_edges: a record whose removal disconnects its cluster is the
-    single point of failure gluing everything behind it (often the dirty
-    record that matched into two true entities at once). Routes straight
-    into the same review queue as bridges and low-cohesion members.
-
-    Returns (points, skipped):
-      points(component, node, split_into) — every articulation point,
-      with the number of components its removal leaves behind
-      (2 for a simple cut, more for a hub); component = the containing
-      connected component's min id.
-      skipped(component, n_members) — components larger than
-      ``max_component`` (not analyzed; same honest-cap discipline as
-      medoids/HAC — a DFS over a mega-component belongs in a dedicated
-      run, not hidden inside this operator).
-
-    Shape: one distributed connected-components run defines the work
-    units; each component's edge list is one applyInPandas group running
-    an ITERATIVE Tarjan lowlink DFS (no recursion-depth hazard) — the
-    "huge graph, entity-sized components" pattern, the only Python in the
-    plan."""
-    # node/component columns are STRINGS in the output (the pandas-group
-    # schema is fixed); non-string ids are cast — least/greatest ran on
-    # the original type, so ordering semantics are the input's own
-    canon = (
-        canonical_edges(edges, a, b)
-        .select(F.col("u").cast("string"), F.col("v").cast("string"))
-        .localCheckpoint(eager=True)
-    )
-    cc, _ = _cc(canon)
-    comp = cc.select(
-        F.col("conv_id").alias("u"), F.col("cluster_id").alias("component")
-    )
-    sizes = comp.groupBy("component").agg(F.count(F.lit(1)).alias("n_members"))
-    skipped = sizes.where(F.col("n_members") > max_component)
-    keep_edges = (
-        canon.join(comp, "u")
-        .join(skipped.select("component"), "component", "left_anti")
-    )
-
-    def _tarjan(pdf):
-        import pandas as pd
-
-        adj: dict[str, list[str]] = {}
-        for u, v in zip(pdf["u"], pdf["v"]):
-            adj.setdefault(u, []).append(v)
-            adj.setdefault(v, []).append(u)
-        for n in adj:
-            adj[n].sort()
-        comp_id = min(adj)
-        disc: dict[str, int] = {}
-        low: dict[str, int] = {}
-        cut: dict[str, int] = {}
-        timer = 0
-        for root in sorted(adj):
-            if root in disc:
-                continue
-            root_children = 0
-            # iterative DFS: stack of (node, parent, child iterator)
-            disc[root] = low[root] = timer
-            timer += 1
-            stack = [(root, None, iter(adj[root]))]
-            while stack:
-                node, parent, it = stack[-1]
-                advanced = False
-                for nxt in it:
-                    if nxt == parent:
-                        continue
-                    if nxt in disc:
-                        low[node] = min(low[node], disc[nxt])
-                        continue
-                    disc[nxt] = low[nxt] = timer
-                    timer += 1
-                    stack.append((nxt, node, iter(adj[nxt])))
-                    advanced = True
-                    break
-                if advanced:
-                    continue
-                stack.pop()
-                if parent is not None:
-                    low[parent] = min(low[parent], low[node])
-                    if parent == root:
-                        root_children += 1
-                    elif low[node] >= disc[parent]:
-                        cut[parent] = cut.get(parent, 1) + 1
-            if root_children > 1:
-                cut[root] = root_children
-        return pd.DataFrame(
-            [(comp_id, n, k) for n, k in sorted(cut.items())],
-            columns=["component", "node", "split_into"],
-        )
-
-    points = keep_edges.groupBy("component").applyInPandas(
-        _tarjan, "component string, node string, split_into int"
-    )
-    return points, skipped
-
-
-def _cc(canon: DataFrame):
-    """Connected components over canonical (u, v) edges, reusing the
-    pipeline's star loop (min-id component labels)."""
-    from ..pipeline.clustering import connected_components
-
-    return connected_components(
-        canon.select(
-            F.col("u").alias("conv_id_a"), F.col("v").alias("conv_id_b")
-        )
-    )
-
-
-def pagerank(
-    edges: DataFrame,
-    a: str = "conv_id_a",
-    b: str = "conv_id_b",
-    damping: float = 0.85,
-    n_iter: int = 10,
-) -> DataFrame:
-    """Record authority over the undirected match graph — fixed-iteration
-    PageRank, the ranking operator the survivorship family lacks: min-id
-    (B9) and golden-record heuristics pick canonicals by value recency or
-    completeness; authority picks the record the REST of the evidence
-    points at (the hub of its duplicate neighborhood), which is the right
-    canonical under heavy transcript re-ingestion where near-copies chain
-    off one original. Returns (node, rank); ranks over a component sum to
-    (1 - damping) * n/N + damping-weighted flow, the standard PR measure
-    (uniform teleport over the full node set N).
-
-    Distributed shape: each undirected edge contributes in both
-    directions; per iteration one node-keyed join (ranks -> adjacency)
-    and one node-keyed sum — the classic Spark power-iteration, with
-    localCheckpoint per round to keep the plan flat (the k_core loop
-    discipline). Deterministic: FIXED iteration count, no float
-    convergence test; dangling mass cannot exist on an undirected graph
-    (every node with an edge has out-degree >= 1; isolated nodes never
-    enter). Float sums make this pytest-pinned (NMI epistemics), not
-    hash-gated.
-
-    Reference anchor: no analogue in hexhamming; composes with
-    pipeline/canonicalize.py as an alternative canonical-selection key.
-    """
-    if not 0.0 < damping < 1.0:
-        raise ValueError(f"damping must be in (0, 1), got {damping}")
-    if n_iter < 1:
-        raise ValueError(f"n_iter must be >= 1, got {n_iter}")
-    canon = canonical_edges(edges, a, b)  # → (u, v), u < v, deduped
-    adj = canon.select(
-        F.col("u").alias("src"), F.col("v").alias("dst")
-    ).unionByName(canon.select(F.col("v").alias("src"), F.col("u").alias("dst")))
-    adj = adj.localCheckpoint(eager=True)
-    deg = adj.groupBy("src").agg(F.count(F.lit(1)).alias("out_deg"))
-    adj = adj.join(deg, "src").localCheckpoint(eager=True)
-    nodes = adj.select(F.col("src").alias("node")).distinct().localCheckpoint(eager=True)
-    n_total = nodes.count()
-    if n_total == 0:
-        return nodes.withColumn("rank", F.lit(0.0))
-    base = (1.0 - damping) / n_total
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n_total))
-    for _ in range(n_iter):
-        contribs = (
-            adj.join(ranks, adj["src"] == ranks["node"])
-            .select(
-                F.col("dst").alias("node"),
-                (F.col("rank") / F.col("out_deg")).alias("c"),
-            )
-            .groupBy("node")
-            .agg(F.sum("c").alias("flow"))
-        )
-        ranks = (
-            nodes.join(contribs, "node", "left")
-            .select(
-                "node",
-                (F.lit(base) + F.lit(damping) * F.coalesce("flow", F.lit(0.0))).alias(
-                    "rank"
-                ),
-            )
-            .localCheckpoint(eager=True)
-        )
-    return ranks
-
-
 def lpa_communities(
     edges: DataFrame,
     a: str = "conv_id_a",
@@ -588,7 +278,7 @@ def lpa_communities(
 
     Shape per round: one node-keyed join (labels -> symmetric adjacency)
     + one (node, label) count + one per-node argmax window — all keyed on
-    node ids, localCheckpoint()ed (k_core loop discipline). Convergence
+    node ids, localCheckpoint()ed (clustering's loop discipline). Convergence
     check is one aggregate over the joined old/new labels.
     """
     if max_iter < 1:

@@ -9,18 +9,19 @@ Stage map (SURVEY.md §2.3):
     B5  skew handling   blocking.candidate_pairs_wide (salted chain of
                         oversize blocks), AQE
     B6  scoring         scoring.score_wide
-    B7  match filter    scoring.match_edges
+    B7  match filter    scoring.score_wide (its hamming_dist <= max_dist
+                        gate)
     B8  clustering      clustering.connected_components
     B9  canonical ids   clustering (min conv_id per component)
     B10 sinks+lineage   runner.Runner / metrics.record_stage
-    B11 probe query     probe.first_match_index
+    B11 probe query     streaming.probe.probe_stream
     B12 evaluation      evaluate.pairwise_f1
 """
 
 from .assemble import assemble_conversations
 from .simhash import signatures
 from .blocking import candidate_pairs_wide
-from .scoring import score_wide, match_edges
+from .scoring import score_wide
 from .clustering import connected_components
 from .evaluate import pairwise_f1
 
@@ -29,7 +30,6 @@ __all__ = [
     "signatures",
     "candidate_pairs_wide",
     "score_wide",
-    "match_edges",
     "connected_components",
     "pairwise_f1",
 ]

@@ -103,8 +103,8 @@ def representative_signature(
     clusters instead of records).
 
     Majority is per bit; ties (exactly half the members set the bit) go to
-    0, mirroring the SimHash kernel's own ``sums > 0`` vote
-    (kernels.simhash256_from_token_hashes). For a singleton cluster the
+    0, mirroring the SimHash kernel's own ``2 * sums > n`` vote
+    (kernels.simhash256_from_utf8). For a singleton cluster the
     representative IS the member signature; more generally the
     representative minimizes the summed hamming distance to the members
     (per-bit majority is the L1 medoid of the hamming cube), so
@@ -169,132 +169,4 @@ def representative_signature(
     )
     return rep.select(
         "cluster_id", F.unhex("sig_hex").alias("sig"), "sig_hex", "n_members"
-    )
-
-
-def cluster_medoids(
-    clusters: DataFrame,
-    records: DataFrame,
-    id_col: str,
-    text_col: str,
-    max_cluster_size: int = 256,
-) -> DataFrame:
-    """Medoid survivorship: per cluster, the member whose TOTAL edit
-    distance to every other member is minimal — the string that best
-    represents the cluster under the metric the matcher actually used
-    (golden_records picks by heuristic preference; the medoid is the
-    metric-optimal choice, the 1-center of the cluster under Levenshtein).
-
-    clusters(id_col, cluster_id) × records(id_col, text_col) → one row per
-    cluster_id: (cluster_id, medoid_id, medoid_text, total_dist, n_members,
-    exact). Ties broken by ascending id. Everything is an integer sum of
-    codegen ``levenshtein`` values — deterministic and SQL-replayable.
-
-    Scale: the within-cluster self-join is quadratic IN THE CLUSTER, so it
-    is gated by ``max_cluster_size`` — clusters above the cap (post-CC
-    mega-clusters are a blocking-quality bug, but they happen) fall back to
-    the min-id member with exact=false instead of detonating a 10^10-row
-    stage. The join is keyed on cluster_id, so each cluster's pair block is
-    one partition-local nested loop after a single hash exchange; no pair
-    ever crosses clusters.
-    """
-    m = clusters.select(F.col(id_col).alias("rid"), "cluster_id").join(
-        records.select(F.col(id_col).alias("rid"), F.col(text_col).alias("txt")),
-        "rid",
-    )
-    sizes = m.groupBy("cluster_id").agg(F.count(F.lit(1)).alias("n_members"))
-    m = m.join(sizes, "cluster_id")
-    small = m.where(F.col("n_members") <= max_cluster_size)
-    a = small.select("cluster_id", F.col("rid").alias("ra"), F.col("txt").alias("ta"))
-    b = small.select("cluster_id", F.col("rid").alias("rb"), F.col("txt").alias("tb"))
-    totals = (
-        a.join(b, "cluster_id")
-        .where(F.col("ra") != F.col("rb"))
-        .groupBy("cluster_id", "ra", "ta")
-        .agg(F.sum(F.levenshtein("ta", "tb")).alias("total_dist"))
-    )
-    w = Window.partitionBy("cluster_id").orderBy(F.asc("total_dist"), F.asc("ra"))
-    exact = (
-        totals.withColumn("_rk", F.row_number().over(w))
-        .where(F.col("_rk") == 1)
-        .select(
-            "cluster_id",
-            F.col("ra").alias("medoid_id"),
-            F.col("ta").alias("medoid_text"),
-            "total_dist",
-            F.lit(True).alias("exact"),
-        )
-    )
-    # singleton clusters never enter the self-join's a!=b pairs: emit them
-    # directly with total_dist 0 (they are exact trivially)
-    singles = (
-        small.where(F.col("n_members") == 1)
-        .select(
-            "cluster_id",
-            F.col("rid").alias("medoid_id"),
-            F.col("txt").alias("medoid_text"),
-            F.lit(0).cast("long").alias("total_dist"),
-            F.lit(True).alias("exact"),
-        )
-    )
-    big = (
-        m.where(F.col("n_members") > max_cluster_size)
-        .groupBy("cluster_id")
-        .agg(F.min(F.struct("rid", "txt")).alias("_m"))
-        .select(
-            "cluster_id",
-            F.col("_m.rid").alias("medoid_id"),
-            F.col("_m.txt").alias("medoid_text"),
-            F.lit(None).cast("long").alias("total_dist"),
-            F.lit(False).alias("exact"),
-        )
-    )
-    out = exact.unionByName(singles).unionByName(big)
-    return out.join(sizes, "cluster_id").select(
-        "cluster_id", "medoid_id", "medoid_text", "total_dist", "n_members", "exact"
-    )
-
-
-def authority_canonicals(
-    clusters: DataFrame,
-    edges: DataFrame,
-    id_col: str = "conv_id",
-    edge_a: str = "conv_id_a",
-    edge_b: str = "conv_id_b",
-    damping: float = 0.85,
-    n_iter: int = 10,
-) -> DataFrame:
-    """Authority survivorship — the third record-level strategy: the
-    canonical is the member with the highest PageRank on the match graph
-    (ops/graph.pagerank), i.e. the record the rest of the duplicate
-    evidence points at. Under heavy re-ingestion, near-copies chain off
-    an original; min-id and preference heuristics pick arbitrary chain
-    members, the authority pick is the hub.
-
-    clusters(id_col, cluster_id) × edges → one row per cluster:
-    (cluster_id, canonical_id, rank, n_members). Members without edges
-    (singletons folded in by with_singletons) rank 0; ties (symmetric
-    neighborhoods — common in clean duplicate pairs) break by ascending
-    id, so the result is total-order deterministic. Shape: the PR rounds
-    plus ONE cluster-keyed top-1 window — same envelope as
-    golden_records.
-    """
-    from hexspark.ops.graph import pagerank
-
-    ranks = pagerank(edges, edge_a, edge_b, damping=damping, n_iter=n_iter)
-    members = clusters.join(
-        ranks.select(F.col("node").alias(id_col), "rank"), id_col, "left"
-    ).withColumn("rank", F.coalesce("rank", F.lit(0.0)))
-    w = Window.partitionBy("cluster_id").orderBy(
-        F.col("rank").desc(), F.col(id_col).asc()
-    )
-    return (
-        members.withColumn("_rn", F.row_number().over(w))
-        .withColumn(
-            "n_members", F.count(F.lit(1)).over(Window.partitionBy("cluster_id"))
-        )
-        .where(F.col("_rn") == 1)
-        .select(
-            "cluster_id", F.col(id_col).alias("canonical_id"), "rank", "n_members"
-        )
     )

@@ -22,11 +22,10 @@ def _pair_outcomes(
     clusters: DataFrame,
     candidate_pairs: DataFrame | None = None,
 ) -> DataFrame:
-    """Shared pair-classification core of pairwise_f1_df and
-    f1_subsample_ci: one row per pair in the predicted-or-labeled-positive
-    universe, columns (conv_id_a, conv_id_b, _pred, _pos) with 1/NULL
-    markers. Full-outer join of predicted-same-cluster pairs against
-    labeled-positive pairs, so the join pipeline runs once per consumer."""
+    """Pair-classification core of pairwise_f1_df: one row per pair in the
+    predicted-or-labeled-positive universe, columns (conv_id_a, conv_id_b,
+    _pred, _pos) with 1/NULL markers. Full-outer join of
+    predicted-same-cluster pairs against labeled-positive pairs."""
     labels = labeled_pairs.select("conv_id_a", "conv_id_b", "is_match")
     if candidate_pairs is not None:
         labels = labels.join(candidate_pairs, ["conv_id_a", "conv_id_b"], "inner")
@@ -476,90 +475,6 @@ def adjusted_rand_index_df(
     )
 
 
-def blanc_df(
-    clusters: DataFrame, truth: DataFrame, id_col: str = "conv_id"
-) -> DataFrame:
-    """BLANC (Recasens & Hovy 2011) — the bilateral Rand-style coreference
-    score: F1 over coreferent pairs and F1 over NON-coreferent pairs,
-    averaged. Completes the coreference metric suite next to MUC (link-
-    based, singleton-blind), B-cubed (per-record), and ARI (chance-
-    corrected): BLANC is the one that explicitly credits keeping separate
-    records separate.
-
-    clusters(id_col, cluster_id) × truth(id_col, entity_id) → ONE row
-    (n_records, blanc_fc, blanc_fn, blanc).
-
-    Every pair count derives from the same contingency cells as ARI:
-    tp = Σ_cells C(o,2); system links = Σ_clusters C(size,2); truth links
-    = Σ_entities C(size,2); agreed non-links = C(n,2) - links_r - links_k
-    + tp. The marginal sums are exact longs; C(n,2) and the non-link
-    arithmetic run in DECIMAL(38,0) — a BIGINT C(n,2) overflows at ~4.3e9
-    records, within this repo's design scale — and only the final one-row
-    ratio expressions touch doubles. Degenerate sides follow the
-    reference scorer's conventions: a side with no key links (or no key
-    non-links) contributes only the other side's F; if both sides are
-    empty BLANC is 1.0 when the partitions agree trivially."""
-    asg = clusters.select(id_col, "cluster_id").join(
-        truth.select(id_col, "entity_id"), id_col
-    )
-    cells = asg.groupBy("cluster_id", "entity_id").agg(
-        F.count(F.lit(1)).alias("o")
-    )
-
-    def comb2(col: str):
-        return F.expr(f"{col} * ({col} - 1L) div 2")
-
-    core = cells.agg(
-        F.sum("o").alias("n_records"),
-        F.sum(comb2("o")).alias("tp"),
-    )
-    links_r = (
-        cells.groupBy("cluster_id")
-        .agg(F.sum("o").alias("sz"))
-        .agg(F.sum(comb2("sz")).alias("links_r"))
-    )
-    links_k = (
-        cells.groupBy("entity_id")
-        .agg(F.sum("o").alias("sz"))
-        .agg(F.sum(comb2("sz")).alias("links_k"))
-    )
-    one = core.crossJoin(links_r).crossJoin(links_k)
-    dec = "decimal(38,0)"
-    n = F.col("n_records").cast(dec)
-    total = (n * (n - F.lit(1).cast(dec))) / F.lit(2).cast(dec)
-    lr = F.col("links_r").cast(dec)
-    lk = F.col("links_k").cast(dec)
-    tp = F.col("tp").cast(dec)
-    tn = total - lr - lk + tp  # exact: inclusion-exclusion over pairs
-
-    def ratio(num, den):
-        return F.when(den > 0, num.cast("double") / den.cast("double"))
-
-    pc, rc = ratio(tp, lr), ratio(tp, lk)
-    fc = F.when(pc + rc > 0, 2 * pc * rc / (pc + rc)).otherwise(
-        F.when(lr + lk > 0, F.lit(0.0))
-    )
-    nr, nk = total - lr, total - lk
-    pn, rn = ratio(tn, nr), ratio(tn, nk)
-    fn = F.when(pn + rn > 0, 2 * pn * rn / (pn + rn)).otherwise(
-        F.when(nr + nk > 0, F.lit(0.0))
-    )
-    # reference-scorer convention: average the defined sides; if neither
-    # side has any key/response pair mass, the score is trivially 1.0
-    blanc = (
-        F.when(fc.isNotNull() & fn.isNotNull(), (fc + fn) / 2)
-        .when(fc.isNotNull(), fc)
-        .when(fn.isNotNull(), fn)
-        .otherwise(F.lit(1.0))
-    )
-    return one.select(
-        "n_records",
-        F.round(fc, 6).alias("blanc_fc"),
-        F.round(fn, 6).alias("blanc_fn"),
-        F.round(blanc, 6).alias("blanc"),
-    )
-
-
 def pairwise_f1(
     labeled_pairs: DataFrame,
     clusters: DataFrame,
@@ -582,320 +497,3 @@ def pairwise_f1(
         "fp": float(row["fp"]),
         "fn": float(row["fn"]),
     }
-
-
-def threshold_sweep_df(
-    scored_pairs: DataFrame,
-    labeled_pairs: DataFrame,
-    thresholds,
-    score_col: str = "score",
-) -> DataFrame:
-    """EDGE-level decision-threshold sweep: precision/recall/F1 at EVERY
-    threshold in one pass over the pair stream — the tool that picks
-    ``max_dist`` / ``min_score`` / ``fs_threshold`` empirically instead of
-    by folklore. Rerunning the pipeline per candidate threshold costs a
-    full scoring pass each; this costs one.
-
-    Semantics: predicted(t) = scored pairs with score >= t (pass a negated
-    distance to sweep a "<= dist" gate); positives = labeled is_match
-    pairs. A true pair absent from scored_pairs (e.g. lost at blocking)
-    counts as fn at every t, so the sweep reflects end-to-end recall, not
-    just the scorer's. scored_pairs must be unique per pair key.
-
-    Plan: one pair-keyed left join of labels onto scored pairs, each pair
-    bucketed to the HIGHEST threshold <= its score (codegen when-chain),
-    ONE map-side-combinable count aggregate to (bucket, n_scored, n_true)
-    — at most len(thresholds)+1 rows — then a descending cumulative window
-    and the metric arithmetic on that tiny table (the single-partition
-    window sees <= len(thresholds) rows, never data). Output: one row per
-    threshold (threshold, tp, fp, fn, precision, recall, f1), ascending.
-    """
-    ts = sorted({float(t) for t in thresholds})
-    if not ts:
-        raise ValueError("thresholds must be non-empty")
-    from pyspark.sql import Window
-
-    labels = (
-        labeled_pairs.where(F.col("is_match"))
-        .select("conv_id_a", "conv_id_b")
-        .withColumn("_pos", F.lit(1))
-    )
-    sp = scored_pairs.select(
-        "conv_id_a", "conv_id_b", F.col(score_col).alias("_s")
-    )
-    joined = sp.join(labels, ["conv_id_a", "conv_id_b"], "left")
-    bucket = F.when(F.col("_s") >= ts[-1], F.lit(len(ts) - 1))
-    for i in range(len(ts) - 2, -1, -1):
-        bucket = bucket.when(F.col("_s") >= ts[i], F.lit(i))
-    bucket = bucket.otherwise(F.lit(-1))
-    hist = (
-        joined.groupBy(bucket.alias("_b"))
-        .agg(
-            F.count(F.lit(1)).alias("_n"),
-            F.count(F.col("_pos")).alias("_t"),
-        )
-        .where(F.col("_b") >= 0)  # below every threshold: predicted nowhere
-    )
-    spark = scored_pairs.sparkSession
-    thr = spark.createDataFrame(
-        [(i, t) for i, t in enumerate(ts)], "_b int, threshold double"
-    )
-    total_true = labels.agg(F.count(F.lit(1)).alias("_total_true"))
-    w = Window.orderBy(F.col("_b").desc()).rowsBetween(
-        Window.unboundedPreceding, Window.currentRow
-    )
-    per_t = (
-        thr.join(hist, "_b", "left")
-        .select(
-            "_b",
-            "threshold",
-            F.coalesce(F.col("_n"), F.lit(0)).alias("_n"),
-            F.coalesce(F.col("_t"), F.lit(0)).alias("_t"),
-        )
-        .withColumn("_pred", F.sum("_n").over(w))
-        .withColumn("tp", F.sum("_t").over(w))
-        .join(F.broadcast(total_true))
-    )
-    tp = F.col("tp")
-    fp = (F.col("_pred") - tp).alias("fp")
-    fn = (F.col("_total_true") - tp).alias("fn")
-    out = per_t.select("threshold", tp, fp, fn)
-    prec = F.when(
-        F.col("tp") + F.col("fp") > 0, F.col("tp") / (F.col("tp") + F.col("fp"))
-    ).otherwise(F.lit(1.0))
-    rec = F.when(
-        F.col("tp") + F.col("fn") > 0, F.col("tp") / (F.col("tp") + F.col("fn"))
-    ).otherwise(F.lit(1.0))
-    return (
-        out.withColumn("precision", prec)
-        .withColumn("recall", rec)
-        .withColumn(
-            "f1",
-            F.when(
-                F.col("precision") + F.col("recall") > 0,
-                2 * F.col("precision") * F.col("recall")
-                / (F.col("precision") + F.col("recall")),
-            ).otherwise(F.lit(0.0)),
-        )
-        .orderBy("threshold")
-    )
-
-
-def per_pass_blocking_quality(
-    labeled_pairs: DataFrame,
-    union_pairs: DataFrame,
-) -> DataFrame:
-    """Attribute blocking quality to each pass of a multi-pass blocker.
-
-    ``union_pairs`` is blocking.union_candidates output — (conv_id_a,
-    conv_id_b, passes array<string>, n_passes). Returns one row per pass
-    PLUS a ``__union__`` row for the deduped union, with exact-integer
-    counts only (ratios belong at the consumer's edge, where float
-    rounding can't leak into a hash gate):
-
-    * ``pass``            — pass name, or ``__union__``
-    * ``n_candidates``    — pairs this pass emitted
-    * ``n_covered``       — true matches among them
-    * ``n_true_matches``  — label positives (same on every row)
-
-    This is THE multi-pass tuning readout: a pass whose n_covered is a
-    subset of the others' adds cost without recall and should be dropped;
-    the union row minus the best single pass is what multi-pass buys.
-
-    Plan: explode the (tiny) per-pair pass list, union one literal-tagged
-    copy for the union row, ONE left join against the positive labels on
-    the pair key, one groupBy on the pass name — counts are map-side
-    combinable; the positives total rides in as a one-row cross join
-    (same shape as blocking_quality_df).
-    """
-    per = union_pairs.select(
-        "conv_id_a", "conv_id_b", F.explode("passes").alias("pass")
-    )
-    tagged = per.unionByName(
-        union_pairs.select(
-            "conv_id_a", "conv_id_b", F.lit("__union__").alias("pass")
-        )
-    )
-    pos = (
-        labeled_pairs.where(F.col("is_match"))
-        .select("conv_id_a", "conv_id_b")
-        .withColumn("_pos", F.lit(1))
-    )
-    counts = (
-        tagged.join(pos, ["conv_id_a", "conv_id_b"], "left")
-        .groupBy("pass")
-        .agg(
-            F.count(F.lit(1)).alias("n_candidates"),
-            F.count(F.when(F.col("_pos").isNotNull(), 1)).alias("n_covered"),
-        )
-    )
-    n_true = pos.agg(F.count(F.lit(1)).alias("n_true_matches"))
-    return counts.crossJoin(n_true).select(
-        "pass", "n_candidates", "n_covered", "n_true_matches"
-    )
-
-
-def mutual_info_df(
-    clusters: DataFrame, truth: DataFrame, id_col: str = "conv_id"
-) -> DataFrame:
-    """Information-theoretic partition agreement: normalized mutual
-    information and variation of information between the predicted
-    clustering and the ground-truth partition — the third agreement family
-    next to pairwise F1 (pair-counting) and B-cubed (element-centric), and
-    the one robust to the quadratic weighting both of those give
-    mega-clusters.
-
-    clusters(id_col, cluster_id) × truth(id_col, entity_id) → ONE row:
-      n_records, mi, h_pred, h_true, nmi, vi
-    with MI = Σ_ij (n_ij/n) ln(n·n_ij/(a_i·b_j)), entropies in nats,
-    NMI = MI / max(H_pred, H_true) (1.0 when both entropies are 0 — two
-    identical trivial partitions), VI = H_pred + H_true - 2·MI (a true
-    metric on partitions; 0 iff identical).
-
-    Plan shape: ONE contingency aggregate keyed on the (cluster, entity)
-    cell plus two marginal re-aggregations of those cells — the same
-    envelope as the ARI above. Cell counts are exact longs; the log terms
-    are evaluated per cell and summed as doubles, so the result is
-    float-deterministic only up to summation order — fine for pytest
-    pins and human dashboards, NOT wired into a cross-engine hash gate
-    (that is what the integer-exact ARI/B-cubed rows are for).
-    """
-    asg = clusters.select(id_col, "cluster_id").join(
-        truth.select(id_col, "entity_id"), id_col
-    )
-    cells = asg.groupBy("cluster_id", "entity_id").agg(
-        F.count(F.lit(1)).alias("o")
-    )
-    a = cells.groupBy("cluster_id").agg(F.sum("o").alias("a"))
-    b = cells.groupBy("entity_id").agg(F.sum("o").alias("b"))
-    n = cells.agg(F.sum("o").alias("n"))
-    joined = cells.join(a, "cluster_id").join(b, "entity_id").crossJoin(n)
-    nd = F.col("n").cast("double")
-    mi_term = (F.col("o") / nd) * F.log(
-        nd * F.col("o") / (F.col("a") * F.col("b"))
-    )
-    agg = joined.groupBy().agg(
-        F.max("n").alias("n_records"),
-        F.sum(mi_term).alias("mi"),
-    )
-    h_pred = (
-        a.crossJoin(n)
-        .agg(F.sum((F.col("a") / nd) * -F.log(F.col("a") / nd)).alias("h_pred"))
-    )
-    h_true = (
-        b.crossJoin(n)
-        .agg(F.sum((F.col("b") / nd) * -F.log(F.col("b") / nd)).alias("h_true"))
-    )
-    one = agg.crossJoin(h_pred).crossJoin(h_true)
-    hmax = F.greatest("h_pred", "h_true")
-    nmi = F.when(hmax == 0, F.lit(1.0)).otherwise(F.col("mi") / hmax)
-    vi = F.col("h_pred") + F.col("h_true") - 2 * F.col("mi")
-    return one.select(
-        "n_records",
-        F.round("mi", 9).alias("mi"),
-        F.round("h_pred", 9).alias("h_pred"),
-        F.round("h_true", 9).alias("h_true"),
-        F.round(nmi, 9).alias("nmi"),
-        F.round(vi, 9).alias("vi"),
-    )
-
-
-def f1_subsample_ci(
-    labeled_pairs: DataFrame,
-    clusters: DataFrame,
-    candidate_pairs: DataFrame | None = None,
-    n_samples: int = 20,
-    keep_frac: float = 0.8,
-    seed: int = 7,
-    ci: float = 0.95,
-) -> DataFrame:
-    """Subsampling confidence interval for pairwise precision/recall/F1
-    (the Politis-Romano m-out-of-n resampling family, with DETERMINISTIC
-    content-hash replicates — same device as stability.replicate_kept, so
-    every replicate's pair set is independently reconstructable): a point
-    F1 alone cannot say whether mode A beats mode B or the gap is label
-    noise; non-overlapping intervals can.
-
-    Each of ``n_samples`` replicates keeps a pair iff
-    pmod(xxhash64(pair, rep, seed), 1000) < keep_frac*1000, computes
-    P/R/F1 over the kept pairs, and the interval is the empirical
-    [(1-ci)/2, 1-(1-ci)/2] percentile band over replicates.
-
-    ONE extra exchange over the point metric: the classified pair
-    universe (one row per pair, built once by the shared _pair_outcomes
-    core) explodes by replicate AFTER classification, the per-replicate
-    conditional counts are map-side combinable, and the percentile
-    aggregate runs over n_samples rows. Returns ONE row: (n_samples,
-    keep_frac, f1, precision, recall, f1_mean, f1_lo, f1_hi,
-    precision_lo, precision_hi, recall_lo, recall_hi) where the unbanded
-    columns are the full-data point estimates."""
-    if n_samples < 2:
-        raise ValueError(f"n_samples must be >= 2, got {n_samples}")
-    if not 0.0 < keep_frac <= 1.0:
-        raise ValueError(f"keep_frac must be in (0, 1], got {keep_frac}")
-    if not 0.0 < ci < 1.0:
-        raise ValueError(f"ci must be in (0, 1), got {ci}")
-    merged = _pair_outcomes(labeled_pairs, clusters, candidate_pairs)
-    reps = merged.select(
-        "conv_id_a", "conv_id_b", "_pred", "_pos",
-        F.explode(F.sequence(F.lit(0), F.lit(int(n_samples) - 1))).alias("_rep"),
-    ).where(
-        F.pmod(
-            F.xxhash64(
-                F.least("conv_id_a", "conv_id_b"),
-                F.greatest("conv_id_a", "conv_id_b"),
-                F.col("_rep"),
-                F.lit(int(seed)),
-            ),
-            F.lit(1000),
-        )
-        < F.lit(int(round(keep_frac * 1000)))
-    )
-    per = reps.groupBy("_rep").agg(
-        F.count(F.when(F.col("_pred").isNotNull() & F.col("_pos").isNotNull(), 1)).alias("tp"),
-        F.count(F.when(F.col("_pred").isNotNull() & F.col("_pos").isNull(), 1)).alias("fp"),
-        F.count(F.when(F.col("_pred").isNull() & F.col("_pos").isNotNull(), 1)).alias("fn"),
-    )
-    tp, fp, fn = F.col("tp"), F.col("fp"), F.col("fn")
-    prec = F.when(tp + fp > 0, tp / (tp + fp)).otherwise(F.lit(1.0))
-    rec = F.when(tp + fn > 0, tp / (tp + fn)).otherwise(F.lit(1.0))
-    scored = per.withColumn("p", prec).withColumn("r", rec).withColumn(
-        "f",
-        F.when(
-            F.col("p") + F.col("r") > 0,
-            2 * F.col("p") * F.col("r") / (F.col("p") + F.col("r")),
-        ).otherwise(F.lit(0.0)),
-    )
-    lo, hi = (1.0 - ci) / 2.0, 1.0 - (1.0 - ci) / 2.0
-
-    def band(col: str, name: str):
-        return [
-            F.expr(f"percentile({col}, {lo})").alias(f"{name}_lo"),
-            F.expr(f"percentile({col}, {hi})").alias(f"{name}_hi"),
-        ]
-
-    bands = scored.agg(
-        F.count(F.lit(1)).alias("n_reps"),
-        F.avg("f").alias("f1_mean"),
-        *band("f", "f1"),
-        *band("p", "precision"),
-        *band("r", "recall"),
-    )
-    point = pairwise_f1_df(labeled_pairs, clusters, candidate_pairs).select(
-        "precision", "recall", "f1"
-    )
-    return point.crossJoin(bands).select(
-        F.lit(int(n_samples)).alias("n_samples"),
-        "n_reps",
-        F.lit(float(keep_frac)).alias("keep_frac"),
-        "precision",
-        "recall",
-        "f1",
-        "f1_mean",
-        "f1_lo",
-        "f1_hi",
-        "precision_lo",
-        "precision_hi",
-        "recall_lo",
-        "recall_hi",
-    )

@@ -15,8 +15,7 @@ ONE applyInPandas group per component running deterministic
 Lance-Williams average-linkage HAC (Arrow-batched; the only Python in the
 plan, and it only ever sees one entity-neighborhood of edges at a time).
 Components above ``max_component`` fall back to their closure cluster
-with exact=false rather than a quadratic blow-up — the same honest-cap
-discipline as medoid survivorship.
+with exact=false rather than a quadratic blow-up.
 
 Pairs inside a component that were never scored (not candidates) enter
 the matrix at ``missing_dist`` (default 2x threshold): far, but finite,

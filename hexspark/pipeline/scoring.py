@@ -160,15 +160,3 @@ def edit_similarity(a, b):
     return F.when(denom == 0, F.lit(1.0)).otherwise(
         F.lit(1.0) - F.levenshtein(a, b) / denom
     )
-
-
-def match_edges(
-    scored: DataFrame,
-    max_dist: int = DEFAULT_MAX_DIST,
-    min_score: float = 0.0,
-) -> DataFrame:
-    """A3's within-distance gate as a Catalyst filter (dist <= max_dist,
-    cc:62-64), plus an optional hybrid-score floor."""
-    return scored.where(
-        (F.col("hamming_dist") <= F.lit(max_dist)) & (F.col("score") >= F.lit(min_score))
-    )

@@ -9,11 +9,9 @@ in evaluate.bcubed_df is verified, not assumed.
 
 from __future__ import annotations
 
-import itertools
 import random
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.evaluate import bcubed_df, blocking_quality_df
 
@@ -226,98 +224,3 @@ def test_ari_perfect_and_degenerate(spark):
     pred2 = dict(pred, extra="cX")
     row = adjusted_rand_index_df(*_asg_dfs(spark, pred2, pred)).collect()[0]
     assert row["n_records"] == 8
-
-
-# ---------------------------------------------------------------------------
-# threshold sweep
-# ---------------------------------------------------------------------------
-
-
-def _sweep_oracle(scored, true_pairs, thresholds):
-    """Literal per-threshold P/R/F1: predicted(t) = {pair: score >= t}."""
-    out = {}
-    for t in thresholds:
-        pred = {p for p, s in scored.items() if s >= t}
-        tp = len(pred & true_pairs)
-        fp = len(pred - true_pairs)
-        fn = len(true_pairs - pred)
-        prec = tp / (tp + fp) if tp + fp else 1.0
-        rec = tp / (tp + fn) if tp + fn else 1.0
-        f1 = 2 * prec * rec / (prec + rec) if prec + rec else 0.0
-        out[t] = (tp, fp, fn, prec, rec, f1)
-    return out
-
-
-def _sweep_dfs(spark, scored, labeled):
-    sp = spark.createDataFrame(
-        [(a, b, s) for (a, b), s in sorted(scored.items())],
-        "conv_id_a string, conv_id_b string, score double",
-    )
-    lb = spark.createDataFrame(
-        [(a, b, m) for (a, b), m in sorted(labeled.items())],
-        "conv_id_a string, conv_id_b string, is_match boolean",
-    )
-    return sp, lb
-
-
-def test_threshold_sweep_hand_case(spark):
-    """Ties sit AT a threshold (>= keeps them), an unlabeled pair is fp
-    above its score, and a true pair never scored is fn at every t."""
-    from hexspark.pipeline.evaluate import threshold_sweep_df
-
-    scored = {("a", "b"): 0.9, ("a", "c"): 0.5, ("b", "d"): 0.5, ("c", "d"): 0.1}
-    labeled = {("a", "b"): True, ("a", "c"): True, ("x", "y"): True, ("c", "d"): False}
-    sp, lb = _sweep_dfs(spark, scored, labeled)
-    rows = {
-        r["threshold"]: r
-        for r in threshold_sweep_df(sp, lb, [0.5, 0.8]).collect()
-    }
-    # t=0.5: pred={ab,ac,bd} tp=2 fp=1 fn=1 (xy never scored)
-    r5 = rows[0.5]
-    assert (r5["tp"], r5["fp"], r5["fn"]) == (2, 1, 1)
-    assert r5["precision"] == pytest.approx(2 / 3)
-    assert r5["recall"] == pytest.approx(2 / 3)
-    # t=0.8: pred={ab} tp=1 fp=0 fn=2
-    r8 = rows[0.8]
-    assert (r8["tp"], r8["fp"], r8["fn"]) == (1, 0, 2)
-    assert r8["precision"] == 1.0
-    assert r8["recall"] == pytest.approx(1 / 3)
-    with pytest.raises(ValueError):
-        threshold_sweep_df(sp, lb, [])
-
-
-def test_threshold_sweep_matches_bruteforce(spark):
-    """Differential vs the literal definition on random scores/labels,
-    thresholds both between and exactly at score values; recall and the
-    predicted count must be non-increasing in t."""
-    from hexspark.pipeline.evaluate import threshold_sweep_df
-
-    rng = random.Random(20240819)
-    ids = [f"r{i:02d}" for i in range(24)]
-    scored, labeled = {}, {}
-    for _ in range(140):
-        a, b = sorted(rng.sample(ids, 2))
-        scored[(a, b)] = rng.choice([0.1, 0.25, 0.4, 0.55, 0.7, 0.85, 1.0])
-        labeled[(a, b)] = rng.random() < 0.4
-    # some true pairs outside the scored set
-    for _ in range(10):
-        a, b = sorted(rng.sample(ids, 2))
-        if (a, b) not in scored:
-            labeled[(a, b)] = True
-    thresholds = [0.05, 0.25, 0.3, 0.55, 0.9, 1.0]
-    sp, lb = _sweep_dfs(spark, scored, labeled)
-    got = threshold_sweep_df(sp, lb, thresholds).collect()
-    true_pairs = {p for p, m in labeled.items() if m}
-    exp = _sweep_oracle(scored, true_pairs, thresholds)
-    assert len(got) == len(thresholds)
-    prev_pred, prev_rec = None, None
-    for r in got:
-        e = exp[r["threshold"]]
-        assert (r["tp"], r["fp"], r["fn"]) == e[:3], r["threshold"]
-        assert r["precision"] == pytest.approx(e[3])
-        assert r["recall"] == pytest.approx(e[4])
-        assert r["f1"] == pytest.approx(e[5])
-        pred = r["tp"] + r["fp"]
-        if prev_pred is not None:
-            assert pred <= prev_pred and r["recall"] <= prev_rec + 1e-12
-        prev_pred, prev_rec = pred, r["recall"]

@@ -297,19 +297,3 @@ def test_hac_python_is_one_grouped_pandas_stage(spark):
     assert len(re.findall(r"\n\(\d+\) FlatMapGroupsInPandas", plan)) == 1
     # Python never touches the inexact fallback branch
     assert "BatchEvalPython" not in plan
-
-
-def test_kcore_round_is_node_keyed_only(spark):
-    """One k-core peel round never exchanges on pair content: every
-    hash-exchange key in the surviving-edge plan is a node id column
-    (u or v), not a struct of both."""
-    from hexspark.ops.graph import k_core
-
-    edges = spark.createDataFrame(
-        [(f"n{i}", f"n{j}") for i in range(8) for j in range(i + 1, 8)],
-        "id_a string, id_b string",
-    )
-    nodes, core_edges, _ = k_core(edges, 3)
-    plan = _plan(core_edges)
-    for key in re.findall(r"hashpartitioning\(([^,]+),", plan):
-        assert key.split("#")[0].strip() in ("u", "v"), key

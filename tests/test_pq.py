@@ -1,13 +1,13 @@
-"""Product quantization ANN: deterministic fit, encode argmin parity,
-ADC fold parity vs numpy replay, planted-neighbor recall, guards."""
+"""Product quantization (ops/ann.pq_codes_df), the one PQ fit and
+assignment: exact parity with a driver-numpy replay of the same
+decimal-grid algorithm, determinism across invocations, and guards."""
 
 from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
-from hexspark.ops.ann import pq_encode, pq_fit, pq_topk
+from hexspark.ops.ann import pq_codes_df
 
 
 @pytest.fixture(scope="module")
@@ -20,142 +20,11 @@ def embeddings(spark):
     return df, vecs
 
 
-def _norm(x):
-    x = np.asarray(x, dtype=np.float64)
-    return x / max(np.linalg.norm(x), 1e-12)
-
-
-def test_fit_deterministic_and_shaped(spark, embeddings):
-    df, _ = embeddings
-    b1 = pq_fit(df, m=8, k=16, n_iters=2)
-    b2 = pq_fit(df, m=8, k=16, n_iters=2)
-    assert b1.shape == (8, 16, 8)
-    assert np.array_equal(b1, b2)
-    with pytest.raises(ValueError, match="divisible"):
-        pq_fit(df, m=7)
-    with pytest.raises(ValueError, match="m >= 1"):
-        pq_fit(df, m=0)
-
-
-def test_encode_matches_numpy_argmin(spark, embeddings):
-    df, vecs = embeddings
-    books = pq_fit(df, m=8, k=16, n_iters=2)
-    got = {r["vec_id"]: r["codes"] for r in pq_encode(df, books).collect()}
-    sub = 8
-    for i in (0, 7, 100, 199):
-        x = _norm(vecs[i])
-        exp = [
-            int(((x[j * sub : (j + 1) * sub] - books[j]) ** 2).sum(axis=1).argmin())
-            for j in range(8)
-        ]
-        assert got[i] == exp
-
-
-def test_adc_distances_match_replay_and_recall(spark, embeddings):
-    df, vecs = embeddings
-    books = pq_fit(df, m=8, k=16, n_iters=3)
-    codes_df = pq_encode(df, books).cache()
-    probes = df.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-    )
-    out = pq_topk(codes_df, probes, books, k=3).collect()
-    codes = {r["vec_id"]: r["codes"] for r in codes_df.collect()}
-    sub = 8
-    by_probe: dict[int, list] = {}
-    for r in out:
-        by_probe.setdefault(r["probe_id"], []).append(r)
-        # replay the ADC fold: table lookups over the probe's own table
-        x = _norm(vecs[r["probe_id"]])
-        table = np.concatenate(
-            [((x[j * sub : (j + 1) * sub] - books[j]) ** 2).sum(axis=1) for j in range(8)]
-        )
-        exp = sum(table[j * 16 + codes[r["vec_id"]][j]] for j in range(8))
-        assert r["adc_dist"] == pytest.approx(exp, rel=1e-12)
-    # planted near-identical neighbor i+100 must be rank 1 for every probe
-    for pid, rows in by_probe.items():
-        assert len(rows) == 3
-        assert min(rows, key=lambda r: r["rank"])["vec_id"] == pid + 100
-
-
-def test_topk_plan_codegen_fold_no_vector_shuffle(spark, embeddings):
-    df, _ = embeddings
-    books = pq_fit(df, m=8, k=16, n_iters=1)
-    codes_df = pq_encode(df, books)
-    probes = df.limit(2).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-    )
-    plan = pq_topk(codes_df, probes, books, k=2)._jdf.queryExecution().executedPlan().toString()
-    # the probe side (with its Python-built distance table) broadcasts;
-    # the scoring fold itself is JVM-side (aggregate over the codes)
-    assert "BroadcastNestedLoopJoin" in plan or "BroadcastExchange" in plan
-    assert "aggregate(" in plan or "Aggregate" in plan
-
-
-def test_refined_search_recovers_exact_ranks(spark, embeddings):
-    from hexspark.ops.ann import brute_force_topk, pq_topk_refined
-
-    df, _ = embeddings
-    books = pq_fit(df, m=8, k=16, n_iters=3)
-    codes_df = pq_encode(df, books)
-    probes = df.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-    )
-    refined = pq_topk_refined(codes_df, df, probes, books, k=3, shortlist=40)
-    exact = brute_force_topk(df, probes, k=3)
-    # output contract matches brute_force_topk exactly
-    assert set(refined.columns) == set(exact.columns)
-    ref = {(r["probe_id"], r["rank"]): r["vec_id"] for r in refined.collect()}
-    exa = {(r["probe_id"], r["rank"]): r["vec_id"] for r in exact.collect()}
-    # re-ranked sims are exact, so any candidate the shortlist recovers
-    # lands at its exact-search rank; the planted rank-1 neighbor always
-    # survives a 20%-of-corpus shortlist
-    assert all(ref[(p, 1)] == exa[(p, 1)] for p in range(5))
-    hits = sum(1 for key in exa if ref.get(key) == exa[key])
-    assert hits >= 12  # >= 80% of the 15 (probe, rank) cells identical
-
-
-def test_ivf_pq_composition(spark, embeddings):
-    from hexspark.ops.ann import brute_force_topk, ivf_pq_topk, pq_topk_refined
-
-    df, _ = embeddings
-    books = pq_fit(df, m=8, k=16, n_iters=3)
-    probes = df.where(F.col("vec_id") < 5).select(
-        F.col("vec_id").alias("probe_id"), F.col("embedding").alias("probe_vec")
-    )
-    # cell-pruned scan: planted rank-1 neighbor survives (a near-identical
-    # vector shares its probe's nearest cell by construction)
-    out = ivf_pq_topk(
-        df, probes, books, k=3, n_centroids=8, n_probe=2, shortlist=40
-    )
-    by_probe = {}
-    for r in out.collect():
-        by_probe.setdefault(r["probe_id"], []).append(r)
-    exact = {
-        (r["probe_id"], r["rank"]): r["vec_id"]
-        for r in brute_force_topk(df, probes, k=3).collect()
-    }
-    for pid, rows in by_probe.items():
-        assert min(rows, key=lambda r: r["rank"])["vec_id"] == pid + 100
-        assert len(rows) == 3
-    # graceful degradation: probing EVERY cell ≡ the full-corpus
-    # ADC-shortlist + refine path (same candidates, same exact re-rank)
-    full = ivf_pq_topk(
-        df, probes, books, k=3, n_centroids=8, n_probe=8, shortlist=40
-    )
-    codes_df = pq_encode(df, books)
-    ref = pq_topk_refined(codes_df, df, probes, books, k=3, shortlist=40)
-    a = {(r["probe_id"], r["rank"]): r["vec_id"] for r in full.collect()}
-    b = {(r["probe_id"], r["rank"]): r["vec_id"] for r in ref.collect()}
-    assert a == b
-
-
 def test_pq_codes_df_matches_numpy_replay(spark, embeddings):
     """The distributed decimal-exact fit+assign (pq_codes_df) agrees with
     a driver-numpy replay of the same algorithm (raw vectors, smallest-id
     seeds, snapped means, squared-L2 argmin with ties to lowest code) —
     and is deterministic across invocations."""
-    from hexspark.ops.ann import pq_codes_df
-
     df, vecs = embeddings
     m, k, sub = 4, 8, 16
     out = {
@@ -204,8 +73,6 @@ def test_pq_codes_df_matches_numpy_replay(spark, embeddings):
 
 
 def test_pq_codes_df_guards(spark, embeddings):
-    from hexspark.ops.ann import pq_codes_df
-
     df, _ = embeddings
     with pytest.raises(ValueError, match="divisible"):
         pq_codes_df(df, dim=64, m=7)
@@ -218,8 +85,6 @@ def test_pq_codes_df_randomized_replay_parity(spark):
     random corpora and (m, k, n_iters) shapes — the decimal-grid argmin
     and snapped means must agree EXACTLY (no tolerance) on every seed,
     which is the whole point of the SQL-replayable variant."""
-    from hexspark.ops.ann import pq_codes_df
-
     def replay(x, m, k, n_iters):
         n, dim = x.shape
         sub = dim // m
