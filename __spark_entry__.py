@@ -1736,7 +1736,7 @@ def q_bloom_prune_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     bloom = bloom_build(build, F.col("c_custkey"), n_words=64, n_hashes=3)
     probe = orders.select("o_orderkey", "o_custkey", "o_orderstatus")
     # literal-filter path: the probe side is ONE codegen projection — no
-    # explode/join/aggregate (bloom_may_contain remains the no-collect form)
+    # explode/join/aggregate
     passed = bloom_prune(probe, F.col("o_custkey"), bloom_literal(bloom, 64), 3)
     n_pass = passed.groupBy("o_orderstatus").agg(F.count(F.lit(1)).alias("n_pass"))
     n_true = (

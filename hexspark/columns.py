@@ -1,11 +1,11 @@
 """Arrow-batched pandas-UDF Column functions — the engine's Spark surface
-for the reference's scalar operators (SURVEY.md §2.1 A1-A3) plus the
-fingerprint/similarity functions the ER pipeline needs.
+for the reference's hex-string operator (SURVEY.md §2.1 A1) plus the
+Jaro-Winkler similarity the ER pipeline's scoring needs.
 
 Design rule (BASELINE.json input_hint): *no per-row Python*. Every UDF body
 is numpy/pandas C-level vectorized over the whole Arrow batch; the only
 Python-level loops are over fixed small dimensions (distinct row widths,
-max-token-length, Jaro scan positions), never over rows.
+Jaro scan positions), never over rows.
 
 Null/invalid policy: the reference raises ValueError per call
 (python_hexhamming.cc:100-116). In a columnar engine, per-row raise would
@@ -20,7 +20,7 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 from pyspark.sql import functions as F
-from pyspark.sql.types import BinaryType, BooleanType, DoubleType, LongType
+from pyspark.sql.types import DoubleType, LongType
 
 from . import kernels
 
@@ -64,80 +64,6 @@ def hamming_hex(a: pd.Series, b: pd.Series) -> pd.Series:
 
 
 # ---------------------------------------------------------------------------
-# A2: hamming distance over binary fingerprints (the hot scoring kernel)
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(LongType())
-def hamming_bytes(a: pd.Series, b: pd.Series) -> pd.Series:
-    """Column form of hamming_distance_bytes (cc:133-166) on BinaryType."""
-    la = a.str.len()
-    lb = b.str.len()
-    ok = a.notna() & b.notna() & (la == lb)
-    out = np.full(len(a), np.nan)
-    widths = la[ok].unique()
-    for w in widths:
-        mask = (ok & (la == w)).to_numpy()
-        idx = np.flatnonzero(mask)
-        dist = kernels.hamming_bytes_fixed(a.iloc[idx].tolist(), b.iloc[idx].tolist(), int(w))
-        out[idx] = dist.astype(np.float64)
-    return pd.Series(out).astype("Int64")
-
-
-# ---------------------------------------------------------------------------
-# A3: within-distance predicate (quirk-exact)
-# ---------------------------------------------------------------------------
-
-
-@F.pandas_udf(BooleanType())
-def within_dist_hex(a: pd.Series, b: pd.Series, max_dist: pd.Series) -> pd.Series:
-    """Column form of check_hexstrings_within_dist with quirks q1-q3
-    (cc:177-234 + cc:31-68): equal-string shortcut, max_dist>len shortcut,
-    dist<=max_dist otherwise. Reference-raising rows (negative max_dist,
-    invalid hex seen before the early-exit point, length mismatch) → NULL."""
-    out = np.full(len(a), None, dtype=object)
-    md_all = max_dist.to_numpy()
-    for idx, la, lb, w in _by_width(a, b):
-        md = md_all[idx].astype(np.int64)
-        neg = md < 0
-        within, raise_invalid = kernels.within_dist_hex_fixed(la, lb, w, md)
-        vals = np.where(raise_invalid | neg, None, within).astype(object)
-        out[idx] = vals
-    return pd.Series(out, dtype=object)
-
-
-# ---------------------------------------------------------------------------
-# SimHash fingerprint (pipeline stage B3)
-# ---------------------------------------------------------------------------
-
-def simhash256_series(text: pd.Series) -> np.ndarray:
-    """(n, 32) uint8 SimHash signatures of a string series. The series is
-    converted to one Arrow string array so tokenization + hashing run over
-    the raw utf8 byte buffer (kernels.hash_tokens_utf8) — no per-row or
-    per-token Python anywhere."""
-    import pyarrow as pa
-
-    from . import arrow_kernels as ak
-
-    arr = pa.array(text.fillna(""), type=pa.string())
-    offs, data = ak._offsets_and_data(arr)
-    # normalize slice base so offsets are relative to data[offs[0]:]
-    base = offs[0]
-    return kernels.simhash256_from_utf8(data[base : offs[-1]], offs - base)
-
-
-@F.pandas_udf(BinaryType())
-def simhash256(text: pd.Series) -> pd.Series:
-    """256-bit SimHash of the document text → 32-byte BinaryType signature.
-    Width matches the reference's design fingerprint (README.rst:58: 64 hex
-    chars = 256 bits)."""
-    if len(text) == 0:
-        return pd.Series([], dtype=object)
-    sigs = simhash256_series(text)
-    return pd.Series([r.tobytes() for r in sigs])
-
-
-# ---------------------------------------------------------------------------
 # Jaro-Winkler similarity (pipeline stage B6's secondary signal)
 # ---------------------------------------------------------------------------
 
@@ -145,7 +71,6 @@ _JW_MAXLEN = 64
 _JW_PREFIX_SCALE = 0.1
 _JW_MAX_PREFIX = 4
 _JW_BOOST_THRESHOLD = 0.7  # Winkler's original boost condition: jaro > 0.7
-_BIG = np.int64(1 << 30)
 
 
 _CTZ_DEBRUIJN = np.uint64(0x03F79D71B4CB0A89)
@@ -269,18 +194,12 @@ _DUCK_CON = None
 def _resolve_jw_impl() -> str:
     global _JW_IMPL
     if _JW_IMPL is None:
-        import os
+        try:
+            import duckdb  # noqa: F401
 
-        forced = os.environ.get("HEXSPARK_JW_IMPL")
-        if forced:
-            _JW_IMPL = forced
-        else:
-            try:
-                import duckdb  # noqa: F401
-
-                _JW_IMPL = "duckdb"
-            except Exception:
-                _JW_IMPL = "numpy"
+            _JW_IMPL = "duckdb"
+        except Exception:
+            _JW_IMPL = "numpy"
     return _JW_IMPL
 
 
@@ -309,7 +228,8 @@ def jw_arrow(ca, cb) -> np.ndarray:
     the numpy formulation, no per-row Python either way); the numpy
     ``_jw_core`` bitmask kernel is the fallback and the differential
     oracle. Both implement the strcmp95 convention with Winkler boost at
-    jaro > 0.7. Override with HEXSPARK_JW_IMPL={duckdb,numpy}.
+    jaro > 0.7. The numpy kernel runs where duckdb does not import; the
+    differential test selects each kernel by setting ``_JW_IMPL``.
     """
     import pyarrow as pa
 
@@ -381,9 +301,3 @@ def sig_hex(sig_col):
     (reference hex-string encoding rules, cc:52-53: case-insensitive input,
     we standardize on lowercase)."""
     return F.lower(F.hex(sig_col))
-
-
-def valid_hex(col):
-    """Vectorized ingest-time analogue of the reference's per-call hex
-    validation (cc:112-116): JVM-side rlike, no UDF."""
-    return col.rlike("^[0-9a-fA-F]*$")

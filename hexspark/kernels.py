@@ -34,8 +34,6 @@ POPCNT8 = np.array([bin(i).count("1") for i in range(256)], dtype=np.uint8)
 # going from the nibble LOOKUP to SSE shuffles (h:243-259).
 POPCNT16 = np.array([bin(i).count("1") for i in range(65536)], dtype=np.uint8)
 
-_INVALID = np.uint64(0xFFFFFFFFFFFFFFFF)  # UINT64_MAX sentinel, h:230-232
-
 # ---------------------------------------------------------------------------
 # set_algo kernel dispatch (SURVEY §2.1 A5)
 #

@@ -1,5 +1,5 @@
 """Training-data-pipeline operators over document/embedding tables:
-deduplication families (exact, MinHash/SimHash/n-gram near-dup,
+deduplication families (exact, MinHash/SimHash near-dup,
 span-level exact-substring), similarity search (brute force, LSH, IVF)
 and an exact product-quantization code table, text analysis and quality
 (features, Gopher repetition filters, bigram- and KN-trigram-LM

@@ -1,4 +1,4 @@
-"""Deduplication operators (exact, MinHash+LSH, SimHash, n-gram Jaccard).
+"""Deduplication operators (exact, MinHash+LSH, SimHash).
 
 Design notes for 100 TB:
 - exact dedup is one hash-aggregate on a digest column — the digest is
@@ -12,8 +12,6 @@ Design notes for 100 TB:
   min-hashes) and self-joins on (band, band hash) — same shape as the
   signature LSH blocking in pipeline/blocking.py, same skew story (hot
   minhash values = boilerplate docs; cap with max_block).
-- n-gram Jaccard is transform(sequence) + array_distinct + cardinality
-  arithmetic, all built-in.
 """
 
 from __future__ import annotations
@@ -235,27 +233,6 @@ def _minhash_finish(out: DataFrame, b_cnt: int, band_rows: int) -> DataFrame:
             F.pow(F.col("n_shared") / F.lit(float(b_cnt)), 1.0 / band_rows),
         )
     )
-
-
-def ngram_set(text_col, n: int = 3):
-    """Column: distinct character n-grams of a string (empty for short strings)."""
-    return F.array_distinct(
-        F.when(
-            F.length(text_col) >= n,
-            F.transform(
-                F.sequence(F.lit(1), F.length(text_col) - (n - 1)),
-                lambda i: F.substring(text_col, i, n),
-            ),
-        ).otherwise(F.array().cast("array<string>"))
-    )
-
-
-def ngram_jaccard(a_col, b_col, n: int = 3):
-    """Column: Jaccard similarity of the distinct character-n-gram sets."""
-    sa, sb = ngram_set(a_col, n), ngram_set(b_col, n)
-    inter = F.size(F.array_intersect(sa, sb)).cast("double")
-    union = F.size(F.array_union(sa, sb)).cast("double")
-    return F.when(union > 0, inter / union).otherwise(F.lit(1.0))
 
 
 def simhash_neardup_pairs(

@@ -40,7 +40,6 @@ FEATURE_SCHEMA = (
 
 _FEATURE_DIM = 16
 _BMP_HEADER = 54
-_WAV_HEADER = 44
 
 
 # ---------------------------------------------------------------------------
@@ -174,140 +173,6 @@ def extract_features(media: DataFrame, fake_decode: bool = False) -> DataFrame:
     return media.mapInPandas(run, FEATURE_SCHEMA)
 
 
-def encode_bmp_pixels(pixels: np.ndarray) -> bytes:
-    """Exact-pixel 24-bit BMP writer: pixels is (h, w, 3) uint8 in the
-    format's native bottom-up row order, rows padded to 4 bytes."""
-    h, w, _ = pixels.shape
-    row = ((w * 3 + 3) // 4) * 4
-    buf = np.zeros((h, row), dtype=np.uint8)
-    buf[:, : w * 3] = pixels.reshape(h, w * 3)
-    data = buf.tobytes()
-    header = struct.pack("<2sIHHI", b"BM", _BMP_HEADER + len(data), 0, 0, _BMP_HEADER)
-    info = struct.pack(
-        "<IiiHHIIiiII", 40, w, h, 1, 24, 0, len(data), 2835, 2835, 0, 0
-    )
-    return header + info + data
-
-
-def decode_bmp_pixels(payload: bytes) -> np.ndarray:
-    """(h, w, 3) uint8 pixel array from an uncompressed 24-bit BMP, in the
-    stored (bottom-up) row order — the inverse of encode_bmp_pixels."""
-    if payload[:2] != b"BM":
-        raise NotImplementedError("not a BMP payload")
-    off = int.from_bytes(payload[10:14], "little")
-    w = int.from_bytes(payload[18:22], "little", signed=True)
-    h = abs(int.from_bytes(payload[22:26], "little", signed=True))
-    bpp = int.from_bytes(payload[28:30], "little")
-    if bpp != 24:
-        raise NotImplementedError(f"only 24-bit BMPs supported, got {bpp}-bit")
-    row = ((w * 3 + 3) // 4) * 4
-    mat = np.frombuffer(payload, dtype=np.uint8, count=h * row, offset=off)
-    return mat.reshape(h, row)[:, : w * 3].reshape(h, w, 3).copy()
-
-
-def decode_wav_samples(payload: bytes) -> tuple[int, np.ndarray]:
-    """(sample_rate, int16 sample array) from a mono 16-bit PCM WAV."""
-    if payload[:4] != b"RIFF" or payload[8:12] != b"WAVE":
-        raise NotImplementedError("not a WAV payload")
-    pos, rate, data = 12, 0, b""
-    while pos + 8 <= len(payload):
-        cid = payload[pos : pos + 4]
-        sz = int.from_bytes(payload[pos + 4 : pos + 8], "little")
-        if cid == b"fmt ":
-            rate = int.from_bytes(payload[pos + 12 : pos + 16], "little")
-        elif cid == b"data":
-            data = payload[pos + 8 : pos + 8 + sz]
-        pos += 8 + sz + (sz & 1)
-    return rate, np.frombuffer(data, dtype="<i2")
-
-
-def resize_images(media: DataFrame, out_w: int, out_h: int) -> DataFrame:
-    """Nearest-neighbor resize of every image payload to (out_w, out_h) —
-    REAL pixel work (decode 24-bit BMP → index-map → re-encode), not a
-    metadata rewrite. Non-image rows pass through untouched, so the
-    operator composes over a mixed-modality media table.
-
-    Plan shape: one mapInPandas over Arrow batches; payload bytes never
-    shuffle (the operator is a map, no exchange), and the metadata columns
-    are updated in the same pass so downstream pushdown filters stay
-    truthful. The index-map is vectorized numpy per file — the per-file
-    loop inside a batch is how any decoder works (cf. extract_features)."""
-    if out_w <= 0 or out_h <= 0:
-        raise ValueError(f"target dims must be positive, got {out_w}x{out_h}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            payloads, widths, heights = [], [], []
-            for kind, payload, mw, mh in zip(
-                pdf["kind"], pdf["payload"], pdf["width"], pdf["height"]
-            ):
-                if kind != "image":
-                    payloads.append(payload)
-                    widths.append(mw)
-                    heights.append(mh)
-                    continue
-                px = decode_bmp_pixels(payload)
-                h, w, _ = px.shape
-                yi = (np.arange(out_h) * h) // out_h
-                xi = (np.arange(out_w) * w) // out_w
-                out = px[yi][:, xi]
-                payloads.append(encode_bmp_pixels(out))
-                widths.append(out_w)
-                heights.append(out_h)
-            out_pdf = pdf.copy()
-            out_pdf["payload"] = payloads
-            out_pdf["width"] = pd.Series(widths, dtype="int32", index=pdf.index)
-            out_pdf["height"] = pd.Series(heights, dtype="int32", index=pdf.index)
-            yield out_pdf
-
-    return media.mapInPandas(run, MEDIA_SCHEMA)
-
-
-FRAME_SCHEMA = "media_id long, frame_idx int, t_ms long, amplitude int"
-
-
-def sample_audio_frames(media: DataFrame, n_frames: int) -> DataFrame:
-    """Evenly-spaced frame sampling over audio payloads — the audio/video
-    analogue of video frame-sampling for feature pipelines: each audio row
-    explodes into up to ``n_frames`` rows (media_id, frame_idx, t_ms,
-    amplitude), with frame positions floor(i * n_samples / n_frames). Real
-    PCM decode (RIFF walk + int16 view); non-audio rows emit nothing.
-
-    Output rows are fixed-width and tiny — the explode happens AFTER decode
-    inside the worker, so the shuffle-facing stream carries 20-byte rows,
-    never payload bytes."""
-    if n_frames <= 0:
-        raise ValueError(f"n_frames must be positive, got {n_frames}")
-
-    def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            ids, idxs, ts, amps = [], [], [], []
-            for mid, kind, payload in zip(
-                pdf["media_id"], pdf["kind"], pdf["payload"]
-            ):
-                if kind != "audio":
-                    continue
-                rate, samples = decode_wav_samples(payload)
-                if not len(samples) or not rate:
-                    continue
-                k = min(n_frames, len(samples))
-                pos = (np.arange(k, dtype=np.int64) * len(samples)) // k
-                ids.extend([mid] * k)
-                idxs.extend(range(k))
-                ts.extend(((pos * 1000) // rate).tolist())
-                amps.extend(samples[pos].astype(int).tolist())
-            yield pd.DataFrame(
-                {
-                    "media_id": pd.Series(ids, dtype="int64"),
-                    "frame_idx": pd.Series(idxs, dtype="int32"),
-                    "t_ms": pd.Series(ts, dtype="int64"),
-                    "amplitude": pd.Series(amps, dtype="int32"),
-                }
-            )
-
-    return media.mapInPandas(run, FRAME_SCHEMA)
-
-
 def media_from_documents(docs: DataFrame) -> DataFrame:
     """Deterministic media table derived from documents(doc_id, text):
     even doc_ids become 24-bit BMPs (dims from text length, pixels from the
@@ -356,31 +221,3 @@ def media_from_documents(docs: DataFrame) -> DataFrame:
             )
 
     return src.mapInPandas(build, MEDIA_SCHEMA)
-
-
-def synthetic_media(spark, n: int = 64, seed: int = 5) -> DataFrame:
-    """Deterministic fake media table for tests: valid BMPs (kind=image),
-    valid WAVs (kind=audio), and opaque random payloads (kind=video, the
-    compressed-codec stand-in that must raise without fake_decode)."""
-    rng = np.random.default_rng(seed)
-    rows = []
-    kinds = ["image", "audio", "video"]
-    for i in range(n):
-        kind = kinds[i % 3]
-        if kind == "image":
-            w, h = int(rng.integers(4, 64)), int(rng.integers(4, 64))
-            payload = encode_bmp(w, h, rng.integers(0, 256, 64, dtype=np.uint8))
-            dur = 0
-        elif kind == "audio":
-            ns = int(rng.integers(100, 4000))
-            payload = encode_wav(8000, rng.integers(-500, 500, ns).astype(np.int16))
-            w = h = 0
-            dur = (ns * 2 * 1000) // 16000
-        else:
-            w, h, dur = 0, 0, int(rng.integers(0, 600000))
-            payload = rng.bytes(int(rng.integers(1024, 65536)))
-        rows.append((i, kind, payload, "application/octet-stream", w, h, dur))
-    pdf = pd.DataFrame(
-        rows, columns=["media_id", "kind", "payload", "mime", "width", "height", "duration_ms"]
-    )
-    return spark.createDataFrame(pdf, MEDIA_SCHEMA)

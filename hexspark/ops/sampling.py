@@ -12,8 +12,8 @@ every draw off a HASH OF THE ROW'S OWN KEY instead:
 * the same row lands in the same split on any engine that can compute md5
   (which is exactly what makes the DuckDB oracles possible);
 * it's a pure Catalyst projection — no RNG state, no UDF, no shuffle for
-  the bernoulli form; the stratified form costs the one hash exchange any
-  per-group top-k costs.
+  mixture_sample's per-domain bernoulli filter; the stratified form costs
+  the one hash exchange any per-group top-k costs.
 
 Hash choice: the first 12 hex chars of md5(salt || key) as a 48-bit uniform
 integer. md5 is overkill-strong for sampling but is the one keyed hash both
@@ -39,23 +39,6 @@ def _key_hash(key_col, salt: str):
     """Uniform 48-bit integer from md5(salt || key), as a long column."""
     hx = F.md5(F.concat(F.lit(salt), key_col.cast("string")))
     return F.conv(F.substring(hx, 1, 12), 16, 10).cast("long")
-
-
-def sample_fraction(
-    df: DataFrame, key: str, fraction: float, salt: str = "s0"
-) -> DataFrame:
-    """Content-stable Bernoulli sample: keep a row iff
-    md5(salt || key) / 2^48 < fraction. Same key → same decision, on every
-    run, every partitioning, every engine. Changing ``salt`` draws an
-    independent sample (e.g. disjoint-ish train/holdout re-rolls).
-
-    Pure codegen filter on top of the scan — pushes down past column
-    pruning, costs no shuffle, and composes with any downstream plan.
-    """
-    if not 0.0 <= fraction <= 1.0:
-        raise ValueError(f"fraction must be in [0, 1], got {fraction}")
-    thresh = int(fraction * _HASH_MAX)
-    return df.where(_key_hash(F.col(key), salt) < F.lit(thresh))
 
 
 def split_assign(
@@ -148,9 +131,9 @@ def mixture_sample(
     the mixing contract); target domains missing from the corpus fail
     loud rather than silently skewing the mixture.
 
-    The keep decision is the same content-stable 48-bit md5 rule as
-    :func:`sample_fraction` (per-domain thresholds in ONE codegen CASE
-    filter), so the cut is reproducible across runs, partitionings, and
+    The keep decision is the content-stable 48-bit md5 rule, keep iff
+    md5(salt || key) / 2^48 < rate (per-domain thresholds in ONE codegen
+    CASE filter), so the cut is reproducible across runs, partitionings, and
     engines; the only pre-pass is one map-side-combinable domain count.
 
     Returns (sampled_df, plan) where plan[d] = {"count": corpus count,

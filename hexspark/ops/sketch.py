@@ -79,11 +79,10 @@ def cms_estimate(
     never under the true count). The sketch side is tiny by construction
     and broadcast, so probing is exchange-free on the probe side.
 
-    Probe rows must be UNIQUE across ``probes.columns`` (same contract as
-    ``bloom_may_contain``): the output grain is reconstructed via a
-    groupBy over every probe column, so duplicate probe rows collapse into
-    one output row. Deduplicate first, or add a row-id column, if your
-    probe set can repeat."""
+    Probe rows must be UNIQUE across ``probes.columns``: the output grain
+    is reconstructed via a groupBy over every probe column, so duplicate
+    probe rows collapse into one output row. Deduplicate first, or add a
+    row-id column, if your probe set can repeat."""
     cols = [
         F.struct(
             F.lit(j).alias("row"), (_hash48(key, f"c{j}") % width).alias("bucket")
@@ -122,42 +121,6 @@ def bloom_build(
         )
         .groupBy("word")
         .agg(F.bit_or(F.expr("shiftleft(CAST(1 AS BIGINT), CAST(bit AS INT))")).alias("bits"))
-    )
-
-
-def bloom_may_contain(
-    bloom: DataFrame,
-    probes: DataFrame,
-    key: Column,
-    n_words: int = 32,
-    n_hashes: int = 3,
-) -> DataFrame:
-    """Filter ``probes`` to rows whose key MIGHT be in the build set (all
-    n_hashes bits set; false positives possible, false negatives not).
-    The filter table is broadcast — the probe side sees a codegen'd
-    broadcast join + a count aggregate on its own grain, no shuffle of
-    probe content. Probe rows must be unique per `probes` row for the
-    groupBy reconstruction; pass a key-distinct or id-bearing frame."""
-    m = n_words * BLOOM_BITS_PER_WORD
-    pos_structs = F.array(*[
-        F.struct(
-            ((_hash48(key, f"b{i}") % m) / BLOOM_BITS_PER_WORD).cast("int").alias("word"),
-            ((_hash48(key, f"b{i}") % m) % BLOOM_BITS_PER_WORD).cast("int").alias("bit"),
-        )
-        for i in range(n_hashes)
-    ])
-    probed = probes.withColumn("_wb", F.explode(pos_structs)).select(
-        *probes.columns, F.col("_wb.word").alias("word"), F.col("_wb.bit").alias("bit")
-    )
-    hit = F.col("bits").isNotNull() & (
-        F.col("bits").bitwiseAND(F.expr("shiftleft(CAST(1 AS BIGINT), bit)")) != 0
-    )
-    return (
-        probed.join(F.broadcast(bloom), ["word"], "left")
-        .groupBy(*probes.columns)
-        .agg(F.sum(F.when(hit, 1).otherwise(0)).alias("_hits"))
-        .where(F.col("_hits") == n_hashes)
-        .drop("_hits")
     )
 
 
@@ -259,9 +222,8 @@ def bloom_prune(
     explode, no join, no aggregate: the probe stream stays narrow, which
     is the plan Spark's own runtime bloom pushdown produces and the right
     shape at 100 TB (the filter rides the closure to every executor; the
-    big side is never reshaped just to be tested). Same maybe-contained
-    semantics as bloom_may_contain — false positives possible, false
-    negatives never."""
+    big side is never reshaped just to be tested). Maybe-contained
+    semantics: false positives possible, false negatives never."""
     n_words = len(bits)
     m = n_words * BLOOM_BITS_PER_WORD
     words_arr = F.array(*[F.lit(b).cast("long") for b in bits])

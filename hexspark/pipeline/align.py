@@ -281,19 +281,3 @@ def contained_map(sigs: DataFrame, depth_cap: int = 256) -> DataFrame:
             F.col("rep_n").alias("rep_n_turns"),
         )
     )
-
-
-def containment_pairs(
-    transcripts: DataFrame,
-    conv_col: str = "conv_id",
-    order_cols: Sequence[str] = ("turn_idx",),
-    content_cols: Sequence[str] = ("role", "text"),
-    depth_cap: int = 256,
-) -> DataFrame:
-    """End-to-end convenience: transcripts -> exact/prefix duplicate pairs
-    (resumed-session detection). Candidates come from the lossless prefix
-    index, so every containment pair at any length is present; the
-    'partial' filter only discards md5-collision false candidates."""
-    sigs = turn_signatures(transcripts, conv_col, order_cols, content_cols)
-    aligned = align_pairs(prefix_block_pairs(sigs, depth_cap=depth_cap), sigs)
-    return aligned.where(F.col("relationship") != "partial")

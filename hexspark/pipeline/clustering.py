@@ -473,54 +473,3 @@ def with_singletons(clusters: DataFrame, all_nodes: DataFrame) -> DataFrame:
         .select(F.col("conv_id"), F.col("conv_id").alias("cluster_id"))
     )
     return clusters.unionByName(singles)
-
-
-def threshold_components(
-    scored_edges: DataFrame,
-    thresholds: list[int],
-    dist_col: str = "dist",
-    all_nodes: DataFrame | None = None,
-    max_iter: int = 20,
-) -> DataFrame:
-    """Hierarchical ER: connected components at SEVERAL distance cutoffs in
-    one call — the dendrogram slices a precision/recall trade-off study
-    needs (tight threshold → high-precision micro-clusters, loose → the
-    high-recall closure), without re-scoring a single pair.
-
-    scored_edges(conv_id_a, conv_id_b, <dist_col>) → one row per
-    (threshold, conv_id): (threshold, conv_id, cluster_id), cluster_id the
-    component's min member id at that cutoff. With ``all_nodes``, nodes
-    unmatched at a cutoff appear as singletons AT that cutoff, so every
-    slice is a total partition and slices refine monotonically as the
-    threshold tightens.
-
-    Scale shape: the pair stream is filtered ONCE to the loosest cutoff and
-    locally checkpointed — each tighter slice re-filters that (much
-    smaller) cached edge set, so the full candidate stream is read exactly
-    once no matter how many thresholds are requested. Each slice then runs
-    the same connected_components as production clustering: on the driver
-    when the slice fits its bound, else O(log^2 n) star rounds whose
-    exchanges are keyed on node ids only. k slices = k small CC runs over
-    nested edge sets, embarrassingly independent."""
-    if not thresholds:
-        raise ValueError("thresholds must be non-empty")
-    ts = sorted(set(thresholds))
-    base = (
-        scored_edges.select(
-            "conv_id_a", "conv_id_b", F.col(dist_col).alias("_d")
-        )
-        .where(F.col("_d") <= ts[-1])
-        .localCheckpoint(eager=True)
-    )
-    slices = []
-    for t in ts:
-        cc, _ = connected_components(
-            base.where(F.col("_d") <= t), max_iter=max_iter
-        )
-        if all_nodes is not None:
-            cc = with_singletons(cc, all_nodes)
-        slices.append(cc.select(F.lit(t).alias("threshold"), "conv_id", "cluster_id"))
-    out = slices[0]
-    for s in slices[1:]:
-        out = out.unionByName(s)
-    return out

@@ -60,9 +60,6 @@ from hexspark.pipeline.clustering import connected_components
 from hexspark.pipeline.io import TableIO, write_json_atomic
 from hexspark.pipeline.metrics import read_stage, record_stage
 
-_STAGES = ("scrubbed", "quality", "deduped", "corpus")
-
-
 @dataclass(frozen=True)
 class CorpusConfig:
     id_col: str = "doc_id"

@@ -6,8 +6,9 @@ sits beside the distance-threshold gate the reference's predicate
 instead of one hamming cutoff, each comparison FIELD contributes a
 log-likelihood-ratio weight — log2(m/u) when the field agrees,
 log2((1-m)/(1-u)) when it disagrees — where m = P(agree | match) and
-u = P(agree | non-match). The summed weight is thresholded into
-match / possible / non-match.
+u = P(agree | non-match). The summed weight is gated at one threshold
+(:func:`score_wide_fs`, by default the posterior-0.5 point of
+:func:`default_threshold`).
 
 Scale design:
 
@@ -76,27 +77,6 @@ def match_weight(
         total = term if total is None else total + term
     assert total is not None, "params must not be empty"
     return pairs.withColumn(weight_col, total)
-
-
-def classify(
-    pairs: DataFrame,
-    params: dict[str, FieldParams],
-    upper: float,
-    lower: float,
-    weight_col: str = "fs_weight",
-) -> DataFrame:
-    """Three-way Fellegi-Sunter decision: weight >= upper → 'match',
-    weight <= lower → 'non_match', in between → 'possible' (the clerical-
-    review band). Pure projection on top of :func:`match_weight`."""
-    if lower > upper:
-        raise ValueError(f"lower ({lower}) must be <= upper ({upper})")
-    w = F.col(weight_col)
-    return match_weight(pairs, params, weight_col).withColumn(
-        "fs_decision",
-        F.when(w >= upper, F.lit("match"))
-        .when(w <= lower, F.lit("non_match"))
-        .otherwise(F.lit("possible")),
-    )
 
 
 def estimate_mu(

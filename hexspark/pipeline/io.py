@@ -30,9 +30,9 @@ exists anywhere on this sandbox image (searched / and the pyspark jars
 dir) and the sandbox has no network route to Maven Central
 (`Name or service not known`), so the Iceberg branch cannot be executed
 against a real catalog here. It is contract-tested against a duck-typed
-fake catalog in tests/test_io_iceberg.py (probe, writeTo/partitionedBy/
-bucket-transform call shapes, read-back, exists, the `files` metadata
-read, the keyed-rows append and the driver-rows replace) — the strongest
+fake catalog in tests/test_io_iceberg.py (probe, writeTo/partitionedBy
+call shapes, read-back, exists, the `files` metadata read, the
+keyed-rows append and the driver-rows replace) — the strongest
 evidence available without the jar.
 """
 
@@ -177,42 +177,3 @@ class TableIO:
         pq.write_table(_arrow_table(rows, schema), os.path.join(tmp, "part-00000.parquet"))
         open(os.path.join(tmp, "_SUCCESS"), "w").close()
         self._swap_in(tmp, self._path(name))
-
-    def write_bucketed(
-        self, df: DataFrame, name: str, bucket_cols: list[str], n_buckets: int
-    ) -> str:
-        """Write a stage table bucketed (and sorted) by ``bucket_cols`` so
-        downstream equi-joins on those columns are CO-LOCATED: two tables
-        bucketed the same way join with ZERO exchanges (the 100TB move for
-        join keys reused across stages — e.g. signatures ⋈ clusters on
-        conv_id — where a shuffle of the big side would dominate the job).
-
-        Iceberg mode uses a bucket(...) partition transform; parquet mode
-        uses Spark's native bucketBy, which requires a catalog table entry
-        (saveAsTable) — the data lands under the workdir, the catalog entry
-        carries the bucketing metadata Spark's planner needs to elide the
-        exchange. Returns the table identifier to read/join on.
-        """
-        if self.use_iceberg:
-            from pyspark.sql.functions import bucket, col
-
-            ident = f"{self.catalog}.{self.namespace}.{name}"
-            # bucket-transform EVERY bucket column so multi-column callers
-            # get the same co-location semantics as the parquet path's
-            # bucketBy(n, *cols) (previously only cols[0] was bucketed,
-            # silently diverging between backends)
-            transforms = [bucket(n_buckets, col(c)) for c in bucket_cols]
-            df.writeTo(ident).partitionedBy(
-                transforms[0], *transforms[1:]
-            ).createOrReplace()
-            return ident
-        ident = f"hexspark_bucketed_{name}"
-        self.spark.sql(f"DROP TABLE IF EXISTS {ident}")
-        (
-            df.write.mode("overwrite")
-            .bucketBy(n_buckets, *bucket_cols)
-            .sortBy(*bucket_cols)
-            .option("path", self._path(f"bucketed_{name}"))
-            .saveAsTable(ident)
-        )
-        return ident

@@ -20,8 +20,7 @@ modes of entity resolution. Linkage differs in three load-bearing ways:
    joins on salt 0. ops/skewjoin.salted_equijoin makes the same move for
    a whole table, which here would replicate all of B n_salts times.
 3. **Cardinality**: linkage usually carries a one-to-one constraint;
-   ``link_tables(one_to_one=True)`` composes matching.mutual_best_match
-   over the scored edges.
+   matching.mutual_best_match reduces the scored edges to one-to-one.
 
 Exactly-once: a pair sharing k bands is generated k times by any band
 join; we keep it only in its FIRST matching band. The join and the filter
@@ -32,8 +31,8 @@ row is replicated to every salt, so each (pair, band) joins exactly once.
 
 Reference anchor: the reference library's surface is 5 scalar calls
 (python_hexhamming.cc:421-428) with no table linkage; this module is part
-of the axes-A+B pipeline generalization, reusing A2/A3 scoring semantics
-unchanged via scoring.score_wide.
+of the axes-A+B pipeline generalization: its pairs are scored by
+scoring.score_wide, A2/A3 semantics unchanged.
 """
 
 from __future__ import annotations
@@ -42,8 +41,6 @@ from pyspark.sql import DataFrame, Row
 from pyspark.sql import functions as F
 
 from .blocking import _BAND_ON, _band_rows, _band_vals, _first_band_pairs, _with_chunks
-from .matching import mutual_best_match
-from .scoring import DEFAULT_ALPHA, DEFAULT_MAX_DIST, score_wide
 
 DEFAULT_HOT_PAIRS = 4_000_000  # block cross-product size that triggers salting
 DEFAULT_N_SALTS = 16
@@ -117,29 +114,3 @@ def link_candidate_pairs_wide(
 
     on = _BAND_ON + " AND a.salt = b.salt"
     return _first_band_pairs(bands_a, bands_b, on, False, n_bands), hot_rows
-
-
-def link_tables(
-    sigs_a: DataFrame,
-    sigs_b: DataFrame,
-    n_bands: int = 16,
-    max_dist: int = DEFAULT_MAX_DIST,
-    alpha: float = DEFAULT_ALPHA,
-    min_score: float = 0.0,
-    one_to_one: bool = False,
-    hot_pairs: int = DEFAULT_HOT_PAIRS,
-    n_salts: int = DEFAULT_N_SALTS,
-) -> tuple[DataFrame, list[Row]]:
-    """Full clean-clean linkage: block A x B, score with the A2+A3 hybrid
-    (codegen hamming gate + Arrow Jaro-Winkler — scoring.score_wide,
-    unchanged), optionally reduce to one-to-one mutual-best matches.
-
-    Returns (links, block_stats). ``links`` columns: conv_id_a (from A),
-    conv_id_b (from B), hamming_dist, jw, score."""
-    pairs, block_stats = link_candidate_pairs_wide(
-        sigs_a, sigs_b, n_bands=n_bands, hot_pairs=hot_pairs, n_salts=n_salts
-    )
-    scored = score_wide(pairs, max_dist=max_dist, alpha=alpha, min_score=min_score)
-    if one_to_one:
-        scored = mutual_best_match(scored, "conv_id_a", "conv_id_b", "score")
-    return scored, block_stats

@@ -23,7 +23,7 @@ systems ship for the one-pass case.
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -49,64 +49,3 @@ def mutual_best_match(
         .where((F.col("_rl") == 1) & (F.col("_rr") == 1))
         .drop("_rl", "_rr")
     )
-
-
-def group_linkage(
-    member_sims: DataFrame,
-    sizes_a: DataFrame,
-    sizes_b: DataFrame,
-    min_score: float = 0.0,
-) -> DataFrame:
-    """Group linkage (On et al., "Group Linkage", ICDE'07): score a pair of
-    GROUPS by a one-to-one matching between their members — for transcript
-    tables, the natural "are these two conversations the same session?"
-    measure built from per-TURN similarities instead of one flattened
-    document fingerprint.
-
-    member_sims: (group_a, group_b, member_a, member_b, sim) — candidate
-    member pairs with sims in [0, 1], e.g. per-turn digest equality or
-    normalized edit similarity from align.turn_signatures; only pairs from
-    candidate GROUP pairs should be present (group blocking happens
-    upstream).
-    sizes_a/sizes_b: (group_a, n_a) / (group_b, n_b) member counts.
-
-    Member assignment is the mutual-best fixed point computed WITHIN each
-    group pair (two row_number windows keyed on (group_a, group_b,
-    member)), so assignment never leaks across group pairs. The group
-    score is the Jaccard-normalized matching value
-        sim_sum / (n_a + n_b - n_matched)
-    — 1.0 iff the groups are identical under a perfect matching, with
-    unmatched members diluting the score symmetrically.
-
-    Returns (group_a, group_b, n_matched, sim_sum, n_a, n_b, score),
-    filtered to score >= min_score. Plan: two window exchanges keyed on
-    (group pair, member), one aggregate on the group pair, two joins
-    against the (group-keyed, typically broadcastable) size tables.
-    """
-    w_a = Window.partitionBy("group_a", "group_b", "member_a").orderBy(
-        F.desc("sim"), F.asc("member_b")
-    )
-    w_b = Window.partitionBy("group_a", "group_b", "member_b").orderBy(
-        F.desc("sim"), F.asc("member_a")
-    )
-    assigned = (
-        member_sims.withColumn("_ra", F.row_number().over(w_a))
-        .withColumn("_rb", F.row_number().over(w_b))
-        .where((F.col("_ra") == 1) & (F.col("_rb") == 1))
-    )
-    agg = assigned.groupBy("group_a", "group_b").agg(
-        F.count(F.lit(1)).alias("n_matched"),
-        F.sum("sim").alias("sim_sum"),
-    )
-    out = (
-        agg.join(sizes_a, "group_a")
-        .join(sizes_b, "group_b")
-        .withColumn(
-            "score",
-            F.col("sim_sum") / (F.col("n_a") + F.col("n_b") - F.col("n_matched")),
-        )
-        .select(
-            "group_a", "group_b", "n_matched", "sim_sum", "n_a", "n_b", "score"
-        )
-    )
-    return out.where(F.col("score") >= F.lit(min_score))

@@ -1,30 +1,16 @@
 """B11 — the 1-vs-many probe query: A4 (check_bytes_arrays_within_dist,
-python_hexhamming.cc:246-284) as a distributed service.
+python_hexhamming.cc:246-284) over a resolved corpus snapshot.
 
-The reference scans a packed byte buffer sequentially and returns the FIRST
-index within max_dist (cc:276-283). Distributed, "first" is an ordering
-property, not a scan property: filter candidates within distance, take
-min(idx) — an order-free aggregation that Catalyst executes with partial
-(map-side) min, no sort. The probe is a one-row broadcast.
+`reps_with_radius` builds the per-cluster representatives and radii the
+probe service (streaming.probe.probe_stream) screens against;
+`probe_clusters` is the exact two-stage search in Catalyst, kept as the
+batch oracle the service's tests check against.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .. import columns as C
-
-
-def first_match_index(candidates: DataFrame, probe_sig: bytes, max_dist: int) -> DataFrame:
-    """candidates(idx long, sig binary) → one row (first_idx long); -1 when
-    no candidate is within max_dist (cc:283)."""
-    probed = candidates.withColumn(
-        "dist", C.hamming_bytes(F.col("sig"), F.lit(probe_sig))
-    )
-    return probed.where(F.col("dist") <= F.lit(max_dist)).agg(
-        F.coalesce(F.min("idx"), F.lit(-1)).alias("first_idx")
-    )
 
 
 def _hex_dist(a, b):

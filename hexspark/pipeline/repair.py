@@ -1,4 +1,4 @@
-"""Post-clustering repair: per-cluster diagnostics and low-cohesion node
+"""Post-clustering repair: per-node cohesion and low-cohesion node
 eviction, then re-clustering of the surviving edges.
 
 Why this stage exists: transitive closure (B8) is maximally recall-biased —
@@ -62,54 +62,6 @@ def within_cluster_edges(
         .where(F.col("_cl_a") == F.col("_cl_b"))
         .withColumn("cluster_id", F.col("_cl_a"))
         .drop("_cl_a", "_cl_b")
-    )
-
-
-def cluster_diagnostics(
-    clusters: DataFrame,
-    edges: DataFrame,
-    a: str = "conv_id_a",
-    b: str = "conv_id_b",
-    score: str = "score",
-) -> DataFrame:
-    """Per-cluster cohesion report:
-
-      cluster_id, size, n_edges, possible_pairs (= C(size,2)),
-      density (n_edges/possible_pairs; 1.0 for singletons — vacuously
-      complete), min_score, avg_score (within-cluster edge scores; null
-      for singletons).
-
-    density < 1 means the cluster exists only through transitive chains;
-    low min_score flags the weakest link a reviewer should look at first.
-    One groupBy(cluster_id) over members + one over within-edges.
-    """
-    sizes = clusters.groupBy("cluster_id").agg(F.count("*").alias("size"))
-    within = within_cluster_edges(clusters, edges, a=a, b=b)
-    estats = within.groupBy("cluster_id").agg(
-        F.count("*").alias("n_edges"),
-        F.min(score).alias("min_score"),
-        F.avg(score).alias("avg_score"),
-    )
-    possible = (F.col("size") * (F.col("size") - F.lit(1)) / F.lit(2)).cast("long")
-    return (
-        sizes.join(estats, "cluster_id", "left")
-        .withColumn("n_edges", F.coalesce(F.col("n_edges"), F.lit(0)))
-        .withColumn("possible_pairs", possible)
-        .withColumn(
-            "density",
-            F.when(F.col("possible_pairs") == 0, F.lit(1.0)).otherwise(
-                F.col("n_edges") / F.col("possible_pairs")
-            ),
-        )
-        .select(
-            "cluster_id",
-            "size",
-            "n_edges",
-            "possible_pairs",
-            "density",
-            "min_score",
-            "avg_score",
-        )
     )
 
 
@@ -196,31 +148,3 @@ def reclustered(
     )
     cc, _rounds = clustering.connected_components(kept_edges, max_iter=cc_max_iter)
     return clustering.with_singletons(cc, clusters.select("conv_id"))
-
-
-def repair_clusters(
-    clusters: DataFrame,
-    edges: DataFrame,
-    min_avg_score: float,
-    a: str = "conv_id_a",
-    b: str = "conv_id_b",
-    score: str = "score",
-    cc_max_iter: int = 20,
-) -> tuple[DataFrame, DataFrame]:
-    """Evict low-cohesion members and re-cluster the rest — the one-call
-    composition of evicted_nodes + reclustered (the Runner materializes
-    them as two resumable stages instead).
-
-    Returns (repaired_clusters(conv_id, cluster_id),
-             evicted(conv_id, cluster_id, n_within, avg_within)).
-
-    NOTE eager (see reclustered). min_avg_score <= 0 evicts nobody and
-    returns a re-canonicalized copy of the input partition.
-    """
-    evicted = evicted_nodes(
-        clusters, edges, min_avg_score, a=a, b=b, score=score
-    ).localCheckpoint(eager=True)
-    repaired = reclustered(
-        clusters, edges, evicted, a=a, b=b, cc_max_iter=cc_max_iter
-    )
-    return repaired, evicted

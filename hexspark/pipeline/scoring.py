@@ -27,7 +27,6 @@ from pyspark.sql import functions as F
 from .. import columns as C
 
 SIG_BITS = 256
-SIG_BYTES = 32
 DEFAULT_MAX_DIST = 20
 DEFAULT_ALPHA = 0.75
 
@@ -134,29 +133,3 @@ def score_wide(
     )
     scored = gated.mapInArrow(_jw_batches(alpha), _JW_SCHEMA)
     return scored.where(F.col("score") >= F.lit(min_score))
-
-
-def edit_distance(a, b, max_dist: int | None = None):
-    """Levenshtein edit distance as a pure-Catalyst Column — the third
-    scorer family next to hamming (A2) and Jaro-Winkler, for pairs whose
-    canon keys drift by insertions/deletions that hamming over-penalizes.
-
-    ``max_dist`` maps the reference's bounded-distance idea
-    (check_hexstrings_within_dist's mid-scan early exit,
-    python_hexhamming.cc:62-64) onto edit distance: Spark's 3-arg
-    ``levenshtein(a, b, t)`` runs the banded O(len·t) DP inside codegen and
-    returns -1 once the band is exceeded, so a match gate never pays the
-    full O(len²) table for obvious non-matches. Unbounded form for
-    reporting; bounded form for gating."""
-    if max_dist is None:
-        return F.levenshtein(a, b)
-    return F.levenshtein(a, b, max_dist)
-
-
-def edit_similarity(a, b):
-    """Normalized edit similarity 1 - lev/greatest(len_a, len_b) in
-    [0, 1]; 1.0 for two empty strings (no edits needed on equal inputs)."""
-    denom = F.greatest(F.length(a), F.length(b))
-    return F.when(denom == 0, F.lit(1.0)).otherwise(
-        F.lit(1.0) - F.levenshtein(a, b) / denom
-    )

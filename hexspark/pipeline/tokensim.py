@@ -1,8 +1,8 @@
 """Monge-Elkan token-level string comparison, pure Catalyst.
 
-Field-level scorers (Jaro-Winkler, Levenshtein — scoring.py:146,
-edit_distance) treat a value as one string, so token reorderings
-("Robert Smith" vs "Smith, Robert") and multi-token typos score poorly.
+Field-level scorers (Jaro-Winkler, Levenshtein) treat a value as one
+string, so token reorderings ("Robert Smith" vs "Smith, Robert") and
+multi-token typos score poorly.
 Monge & Elkan (1996) fix this with a two-level scheme: tokenize both
 values, score every token of A against its BEST counterpart in B with an
 inner character-level similarity, and average the bests:

@@ -78,8 +78,12 @@ def test_align_relationships(spark, corpus):
 
 
 def test_containment_pairs_end_to_end(spark, corpus):
+    """Prefix-index candidates aligned, 'partial' dropped: every exact and
+    prefix pair, and nothing else."""
+    sigs = align.turn_signatures(corpus)
+    aligned = align.align_pairs(align.prefix_block_pairs(sigs), sigs)
     got = {(r["conv_id_a"], r["conv_id_b"]): r["relationship"]
-           for r in align.containment_pairs(corpus).collect()}
+           for r in aligned.where(F.col("relationship") != "partial").collect()}
     assert got == {("a", "b"): "exact", ("a", "c"): "prefix",
                    ("b", "c"): "prefix"}
 

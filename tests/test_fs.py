@@ -1,5 +1,5 @@
 """Fellegi-Sunter probabilistic scoring (pipeline/fs): match weights,
-three-way classification, and EM parameter estimation."""
+the threshold gate, and EM parameter estimation."""
 
 from __future__ import annotations
 
@@ -9,7 +9,7 @@ import random
 import pytest
 from pyspark.sql import functions as F
 
-from hexspark.pipeline.fs import FieldParams, classify, estimate_mu, match_weight
+from hexspark.pipeline.fs import FieldParams, estimate_mu, match_weight
 
 _PARAMS = {
     "agr_name": FieldParams(m=0.95, u=0.05),
@@ -64,19 +64,9 @@ def test_match_weight_plan_is_projection(spark, pair_df):
     assert "BatchEvalPython" not in plan
 
 
-def test_classify_three_way(spark, pair_df):
-    out = classify(pair_df, _PARAMS, upper=4.0, lower=-4.0)
-    got = {r["pair_id"]: r["fs_decision"] for r in out.collect()}
-    assert got[1] == "match"        # all agree: strongly positive
-    assert got[3] == "non_match"    # all disagree: strongly negative
-    assert got[5] == "possible"     # all null: weight 0, review band
-
-
 def test_param_validation(spark, pair_df):
     with pytest.raises(ValueError):
         match_weight(pair_df, {"agr_name": FieldParams(m=1.0, u=0.1)})
-    with pytest.raises(ValueError):
-        classify(pair_df, _PARAMS, upper=-1.0, lower=1.0)
 
 
 def test_em_recovers_planted_parameters(spark):
@@ -120,8 +110,8 @@ def test_em_handles_nulls(spark):
 
 def test_em_then_classify_end_to_end(spark):
     """The production loop: estimate parameters from unlabeled pairs, then
-    classify with them — planted matches land in 'match', planted
-    non-matches in 'non_match'."""
+    weigh the pairs with them — planted matches clear the weight-2 match
+    gate, planted non-matches almost never do."""
     rng = random.Random(0x7)
     rows = []
     for i in range(4000):
@@ -139,14 +129,16 @@ def test_em_then_classify_end_to_end(spark):
         rows, "pair_id long, truth boolean, a boolean, b boolean, c boolean"
     )
     params, _ = estimate_mu(df, ["a", "b", "c"])
-    out = classify(df, params, upper=2.0, lower=-2.0)
+    out = match_weight(df, params)
     agg = (
-        out.groupBy("truth", "fs_decision").count().collect()
+        out.groupBy("truth", (F.col("fs_weight") >= 2.0).alias("is_match"))
+        .count()
+        .collect()
     )
-    tally = {(r["truth"], r["fs_decision"]): r["count"] for r in agg}
-    n_match_right = tally.get((True, "match"), 0)
+    tally = {(r["truth"], r["is_match"]): r["count"] for r in agg}
+    n_match_right = tally.get((True, True), 0)
     n_match_all = sum(v for (t, _), v in tally.items() if t)
-    n_non_wrong = tally.get((False, "match"), 0)
+    n_non_wrong = tally.get((False, True), 0)
     n_non_all = sum(v for (t, _), v in tally.items() if not t)
     assert n_match_right / n_match_all > 0.8
     assert n_non_wrong / n_non_all < 0.05

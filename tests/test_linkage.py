@@ -6,7 +6,9 @@ import random
 
 import pytest
 
-from hexspark.pipeline.linkage import link_candidate_pairs_wide, link_tables
+from hexspark.pipeline.linkage import link_candidate_pairs_wide
+from hexspark.pipeline.matching import mutual_best_match
+from hexspark.pipeline.scoring import score_wide
 
 N_BANDS = 16
 W = 64 // N_BANDS
@@ -125,8 +127,9 @@ def test_link_pairs_share_the_batch_pair_schema(spark):
 
 def test_link_tables_one_to_one_cardinality(spark):
     a_rows, b_rows = _rand_tables(23, n_base=24)
-    links, _ = link_tables(
-        _mk(spark, a_rows), _mk(spark, b_rows), max_dist=40, one_to_one=True
+    pairs, _ = link_candidate_pairs_wide(_mk(spark, a_rows), _mk(spark, b_rows))
+    links = mutual_best_match(
+        score_wide(pairs, max_dist=40), "conv_id_a", "conv_id_b", "score"
     )
     rows = links.collect()
     assert rows, "no links survived the gate"
@@ -146,7 +149,8 @@ def test_link_tables_scores_match_thin_recompute(spark):
 
     a_rows, b_rows = _rand_tables(5, n_base=16)
     A, B = _mk(spark, a_rows), _mk(spark, b_rows)
-    links, _ = link_tables(A, B, max_dist=64)
+    pairs, _ = link_candidate_pairs_wide(A, B)
+    links = score_wide(pairs, max_dist=64)
     got = {
         (r["conv_id_a"], r["conv_id_b"]): r["hamming_dist"] for r in links.collect()
     }

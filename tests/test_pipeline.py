@@ -101,7 +101,7 @@ def test_signature_shape(spark, data):
     bad = sigs.where(
         (F.length("sig") != 32)
         | (F.length("sig_hex") != 64)
-        | ~C.valid_hex(F.col("sig_hex"))
+        | ~F.col("sig_hex").rlike("^[0-9a-fA-F]*$")
     ).count()
     assert bad == 0
 
@@ -112,12 +112,12 @@ def test_lsh_pigeonhole_guarantee(spark, data):
     reference's early-exit pruning (cc:62-64) at plan level."""
     _, labels, _, result = data
     sigs = result.tables["signatures"]
-    s1 = sigs.select(F.col("conv_id").alias("conv_id_a"), F.col("sig").alias("sig_a"))
-    s2 = sigs.select(F.col("conv_id").alias("conv_id_b"), F.col("sig").alias("sig_b"))
+    s1 = sigs.select(F.col("conv_id").alias("conv_id_a"), F.col("sig_hex").alias("hex_a"))
+    s2 = sigs.select(F.col("conv_id").alias("conv_id_b"), F.col("sig_hex").alias("hex_b"))
     close = (
         labels.join(s1, "conv_id_a")
         .join(s2, "conv_id_b")
-        .withColumn("d", C.hamming_bytes("sig_a", "sig_b"))
+        .withColumn("d", C.hamming_hex("hex_a", "hex_b"))
         .where(F.col("d") < 16)
         .select("conv_id_a", "conv_id_b")
     )

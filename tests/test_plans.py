@@ -180,56 +180,6 @@ def test_top_orders_plan_broadcasts_both_dims(spark):
     assert "hashpartitioning(o_custkey" in plan, plan[:3000]
 
 
-def test_bucketed_join_has_no_exchange(spark, tmp_path):
-    """Two stage tables bucketed on the same key must equi-join with ZERO
-    exchanges — the co-located-join property bucketing exists to buy. The
-    same join on plain parquet shuffles both sides (control)."""
-    from hexspark.pipeline.io import TableIO
-
-    sigs = _sigs(spark, n_base=40)
-    clusters = sigs.select("conv_id", F.col("conv_id").alias("cluster_id"))
-    io = TableIO(spark, str(tmp_path))
-    t_sigs = io.write_bucketed(sigs, "sigs", ["conv_id"], 8)
-    t_clus = io.write_bucketed(clusters, "clus", ["conv_id"], 8)
-
-    # merge hint pins SortMergeJoin on both variants so the comparison
-    # isolates the exchange question (a broadcast join would hide it)
-    joined = spark.table(t_sigs).join(
-        spark.table(t_clus).hint("merge"), "conv_id"
-    )
-    plan = _plan(joined)
-    assert "SortMergeJoin" in plan, plan[:3000]
-    assert len(re.findall(r"\(\d+\) \w*Exchange", plan)) == 0, plan[:3000]
-
-    # control: identical join over non-bucketed parquet shuffles both sides
-    io.write(sigs, "sigs_plain")
-    io.write(clusters, "clus_plain")
-    control = io.read("sigs_plain").join(
-        io.read("clus_plain").hint("merge"), "conv_id"
-    )
-    cplan = _plan(control)
-    assert len(re.findall(r"\(\d+\) Exchange\b", cplan)) == 2, cplan[:3000]
-    assert "hashpartitioning(conv_id" in cplan, cplan[:3000]
-    for t in (t_sigs, t_clus):
-        spark.sql(f"DROP TABLE IF EXISTS {t}")
-
-
-def test_bloom_probe_is_broadcast_no_probe_shuffle(spark):
-    """Bloom semi-join pruning's physical point: the probe side must see a
-    BroadcastHashJoin against the (tiny) filter table — never a sort-merge
-    join that shuffles probe content on the word key. The only exchange on
-    the probe stream is the groupBy reconstructing probe grain."""
-    from hexspark.ops.sketch import bloom_build, bloom_may_contain
-
-    build = spark.range(0, 500).select(F.col("id").alias("k"))
-    probe = spark.range(0, 5000).select(F.col("id").alias("k"))
-    bf = bloom_build(build, F.col("k"), n_words=32, n_hashes=3)
-    out = bloom_may_contain(bf, probe, F.col("k"), n_words=32, n_hashes=3)
-    plan = _plan(out)
-    assert "BroadcastHashJoin" in plan
-    assert "SortMergeJoin" not in plan
-
-
 def test_cms_build_is_single_aggregate_exchange(spark):
     """The CMS build must be ONE partial-aggregate pipeline: exactly one
     exchange (the final row/bucket hash aggregate), with partial_count

@@ -8,16 +8,19 @@ tested on its own and is either wired into a surface or deleted later.
 The guard fails on any other unreached module, and on a listed module
 that a surface now reaches (so the list only shrinks).
 
-The same holds per function: every top-level function and class under
-hexspark/, public or private (single leading underscore), must be named
-in code (an identifier or attribute, not a comment, docstring, string or
-re-export import) of a non-test file, outside its own definition. The
-scan runs to a fixed point: a name used only inside unreached
-definitions, or only inside the UNREACHED modules, is unreached too, so
-a deletion cannot leave an orphaned private helper behind. streaming/
-and compat.py are product surfaces themselves and are not checked.
-UNREACHED_FUNCS lists the ones still kept, and only shrinks, as
-UNREACHED does."""
+The same holds per definition: every top-level function and class, every
+class method and every module constant (a top-level assignment) under
+hexspark/, public or private (single leading underscore; dunders are
+exempt), must be read in code (an identifier or attribute, not a
+comment, docstring, string, re-export import or assignment target) of a
+non-test file, outside its own definition. The scan runs to a fixed
+point: a name used only inside unreached definitions, or only inside the
+UNREACHED modules, is unreached too, so a deletion cannot leave an
+orphaned private helper or constant behind. Uses are matched by name, so
+a method counts as reached when any live code reads an attribute of that
+name. streaming/ and compat.py are product surfaces themselves and are
+not checked. UNREACHED_FUNCS lists the functions still kept, and only
+shrinks, as UNREACHED does; no method or constant is exempt."""
 
 from __future__ import annotations
 
@@ -37,29 +40,8 @@ SURFACES = ("hexspark.streaming", "hexspark.compat")
 # probe.probe_clusters (with its _hex_dist) stays as the exact oracle of
 # test_streaming_probe and test_cluster_probe
 UNREACHED_FUNCS = {
-    "hexspark.columns.hamming_bytes", "hexspark.columns.simhash256",
-    "hexspark.columns.simhash256_series", "hexspark.columns.valid_hex",
-    "hexspark.columns.within_dist_hex", "hexspark.ops.dedup.ngram_jaccard",
-    "hexspark.ops.dedup.ngram_set",
-    "hexspark.ops.multimodal.decode_bmp_pixels",
-    "hexspark.ops.multimodal.decode_wav_samples",
-    "hexspark.ops.multimodal.encode_bmp_pixels",
-    "hexspark.ops.multimodal.resize_images",
-    "hexspark.ops.multimodal.sample_audio_frames",
-    "hexspark.ops.multimodal.synthetic_media",
-    "hexspark.ops.sampling.sample_fraction",
-    "hexspark.ops.sketch.bloom_may_contain",
-    "hexspark.pipeline.align.containment_pairs",
     "hexspark.pipeline.blocking.band_projection",
-    "hexspark.pipeline.clustering.threshold_components",
-    "hexspark.pipeline.fs.classify", "hexspark.pipeline.linkage.link_tables",
-    "hexspark.pipeline.matching.group_linkage",
-    "hexspark.pipeline.probe.first_match_index",
     "hexspark.pipeline.probe.probe_clusters",
-    "hexspark.pipeline.repair.cluster_diagnostics",
-    "hexspark.pipeline.repair.repair_clusters",
-    "hexspark.pipeline.scoring.edit_distance",
-    "hexspark.pipeline.scoring.edit_similarity",
 }
 
 
@@ -98,31 +80,54 @@ def test_every_hexspark_module_is_reached_from_a_product_surface():
     assert sorted(set(files) - seen) == sorted(UNREACHED)
 
 
-def _unreached_funcs() -> set[str]:
-    defs = {}  # "module.name" -> (module, first line, last line)
+def _first_line(node: ast.FunctionDef | ast.ClassDef) -> int:
+    return min([node.lineno] + [d.lineno for d in node.decorator_list])
+
+
+def _defs(tree: ast.Module, mod: str):
+    """(key, kind, first line, last line) of each checked definition."""
+    for node in tree.body:
+        if isinstance(node, (ast.FunctionDef, ast.ClassDef)):
+            if not node.name.startswith("__"):
+                yield f"{mod}.{node.name}", "func", _first_line(node), node.end_lineno
+            for m in node.body if isinstance(node, ast.ClassDef) else []:
+                if isinstance(m, ast.FunctionDef) and not m.name.startswith("__"):
+                    yield (f"{mod}.{node.name}.{m.name}", "method", _first_line(m),
+                           m.end_lineno)
+        elif isinstance(node, (ast.Assign, ast.AnnAssign)):
+            targets = node.targets if isinstance(node, ast.Assign) else [node.target]
+            for t in targets:
+                for n in ast.walk(t):
+                    if (isinstance(n, ast.Name) and isinstance(n.ctx, ast.Store)
+                            and not n.id.startswith("__")):
+                        yield f"{mod}.{n.id}", "const", node.lineno, node.end_lineno
+
+
+def _unreached() -> dict[str, set[str]]:
+    """Unreached definitions by kind: "func", "method", "const"."""
+    defs = {}  # key -> (kind, module, first line, last line)
     uses = defaultdict(list)  # identifier -> [(module, line)]
     for path in {p for g in NON_TEST for p in REPO.glob(g)}:
         tree = ast.parse(path.read_text())
         mod = _module(path)
         for node in ast.walk(tree):
-            if isinstance(node, ast.Name):
+            # a store (`X = ...`, `obj.x = ...`) names a target, it reads nothing
+            if isinstance(node, ast.Name) and not isinstance(node.ctx, ast.Store):
                 uses[node.id].append((mod, node.lineno))
-            elif isinstance(node, ast.Attribute):
+            elif (isinstance(node, ast.Attribute)
+                    and not isinstance(node.ctx, ast.Store)):
                 uses[node.attr].append((mod, node.lineno))
         if (not mod.startswith("hexspark") or mod in UNREACHED
                 or mod.startswith(SURFACES)):
             continue
-        for node in tree.body:
-            if (isinstance(node, (ast.FunctionDef, ast.ClassDef))
-                    and not node.name.startswith("__")):
-                first = min([node.lineno] + [d.lineno for d in node.decorator_list])
-                defs[f"{mod}.{node.name}"] = (mod, first, node.end_lineno)
+        for key, kind, first, last in _defs(tree, mod):
+            defs[key] = (kind, mod, first, last)
 
     dead: set[str] = set()
 
     def live(key: str, mod: str, line: int) -> bool:
         return mod not in UNREACHED and not any(
-            defs[k][0] == mod and defs[k][1] <= line <= defs[k][2]
+            defs[k][1] == mod and defs[k][2] <= line <= defs[k][3]
             for k in dead | {key}
         )
 
@@ -130,11 +135,23 @@ def _unreached_funcs() -> set[str]:
         new = {k for k in set(defs) - dead
                if not any(live(k, m, n) for m, n in uses[k.rsplit(".", 1)[1]])}
         if not new:
-            return dead
+            break
         dead |= new
+    out = {"func": set(), "method": set(), "const": set()}
+    for k in dead:
+        out[defs[k][0]].add(k)
+    return out
 
 
 def test_every_public_function_is_reached_from_non_test_code():
-    dead = _unreached_funcs()
+    dead = _unreached()["func"]
     assert sorted(dead - UNREACHED_FUNCS) == [], "new unreached function"
     assert sorted(UNREACHED_FUNCS - dead) == [], "listed function now reached"
+
+
+def test_every_method_is_reached_from_non_test_code():
+    assert sorted(_unreached()["method"]) == [], "unreached method"
+
+
+def test_every_module_constant_is_read_by_non_test_code():
+    assert sorted(_unreached()["const"]) == [], "unread module constant"

@@ -1,4 +1,4 @@
-"""Cluster repair (pipeline/repair.py): diagnostics, cohesion, eviction.
+"""Cluster repair (pipeline/repair.py): cohesion, eviction, re-clustering.
 
 Fixture: two dense true entities {a1,a2,a3} and {b1,b2,b3} (all internal
 pairs scored 0.9+) glued into ONE transitive cluster by a node g whose two
@@ -17,6 +17,15 @@ from hexspark.pipeline.clustering import connected_components, with_singletons
 
 def _edges(spark, rows):
     return spark.createDataFrame(rows, "conv_id_a string, conv_id_b string, score double")
+
+
+def _repair(clusters, edges, min_avg_score):
+    """Evict low-cohesion members, then re-cluster the rest: the two stages
+    the Runner materializes in repair mode."""
+    evicted = repair.evicted_nodes(clusters, edges, min_avg_score).localCheckpoint(
+        eager=True
+    )
+    return repair.reclustered(clusters, edges, evicted), evicted
 
 
 @pytest.fixture(scope="module")
@@ -50,21 +59,6 @@ def test_glued_fixture_is_one_cluster(glued):
     assert sizes == {"a1": 7, "lone": 1}
 
 
-def test_diagnostics_exact(glued):
-    edges, clusters = glued
-    d = {r["cluster_id"]: r.asDict() for r in repair.cluster_diagnostics(clusters, edges).collect()}
-    big = d["a1"]
-    assert big["size"] == 7 and big["n_edges"] == 8
-    assert big["possible_pairs"] == 21
-    assert big["density"] == pytest.approx(8 / 21)
-    assert big["min_score"] == pytest.approx(0.30)
-    assert big["avg_score"] == pytest.approx(sum([0.95, 0.92, 0.94, 0.91, 0.93, 0.96, 0.30, 0.30]) / 8)
-    lone = d["lone"]
-    assert lone["size"] == 1 and lone["n_edges"] == 0
-    assert lone["possible_pairs"] == 0 and lone["density"] == 1.0
-    assert lone["min_score"] is None and lone["avg_score"] is None
-
-
 def test_node_cohesion_exact(glued):
     edges, clusters = glued
     coh = {r["conv_id"]: r.asDict() for r in repair.node_cohesion(clusters, edges).collect()}
@@ -77,7 +71,7 @@ def test_node_cohesion_exact(glued):
 
 def test_repair_splits_glued_cluster(glued):
     edges, clusters = glued
-    repaired, evicted = repair.repair_clusters(clusters, edges, min_avg_score=0.5)
+    repaired, evicted = _repair(clusters, edges, 0.5)
     assert [r["conv_id"] for r in evicted.collect()] == ["g"]
     got = {
         r["cluster_id"]: sorted(r["members"])
@@ -95,7 +89,7 @@ def test_repair_splits_glued_cluster(glued):
 
 def test_repair_is_partition_of_input_nodes(glued):
     edges, clusters = glued
-    repaired, _ = repair.repair_clusters(clusters, edges, min_avg_score=0.5)
+    repaired, _ = _repair(clusters, edges, 0.5)
     # exactly one row per original node
     assert repaired.count() == clusters.count()
     assert repaired.select("conv_id").distinct().count() == clusters.count()
@@ -106,7 +100,7 @@ def test_repair_is_partition_of_input_nodes(glued):
 
 def test_repair_noop_below_all_scores(glued):
     edges, clusters = glued
-    repaired, evicted = repair.repair_clusters(clusters, edges, min_avg_score=0.0)
+    repaired, evicted = _repair(clusters, edges, 0.0)
     assert evicted.isEmpty()
     # same partition as the input (canonical min-id labels on both sides)
     got = sorted((r["conv_id"], r["cluster_id"]) for r in repaired.collect())
@@ -121,19 +115,19 @@ def test_repair_evicts_zero_edge_member_of_foreign_partition(spark):
     clusters = spark.createDataFrame(
         [("x1", "x1"), ("x2", "x1"), ("x3", "x1")], "conv_id string, cluster_id string"
     )
-    repaired, evicted = repair.repair_clusters(clusters, edges, min_avg_score=0.5)
+    repaired, evicted = _repair(clusters, edges, 0.5)
     assert [r["conv_id"] for r in evicted.collect()] == ["x3"]
     got = {r["conv_id"]: r["cluster_id"] for r in repaired.collect()}
     assert got == {"x1": "x1", "x2": "x1", "x3": "x3"}
 
 
-def test_diagnostics_ignores_cross_cluster_edges(spark):
+def test_cohesion_ignores_cross_cluster_edges(spark):
     # an edge between two different clusters must count for neither
     edges = _edges(spark, [("p1", "p2", 0.9), ("p2", "q1", 0.8), ("q1", "q2", 0.7)])
     clusters = spark.createDataFrame(
         [("p1", "p1"), ("p2", "p1"), ("q1", "q1"), ("q2", "q1")],
         "conv_id string, cluster_id string",
     )
-    d = {r["cluster_id"]: r.asDict() for r in repair.cluster_diagnostics(clusters, edges).collect()}
-    assert d["p1"]["n_edges"] == 1 and d["p1"]["min_score"] == pytest.approx(0.9)
-    assert d["q1"]["n_edges"] == 1 and d["q1"]["min_score"] == pytest.approx(0.7)
+    coh = {r["conv_id"]: r.asDict() for r in repair.node_cohesion(clusters, edges).collect()}
+    assert coh["p2"]["n_within"] == 1 and coh["p2"]["avg_within"] == pytest.approx(0.9)
+    assert coh["q1"]["n_within"] == 1 and coh["q1"]["avg_within"] == pytest.approx(0.7)

@@ -1,63 +1,18 @@
 """Deterministic sampling operators: content-stability, distribution
-sanity, incremental-append stability, and plan shape."""
+sanity and incremental-append stability."""
 
 from __future__ import annotations
 
 import pytest
 from pyspark.sql import functions as F
 
-from hexspark.ops.sampling import sample_fraction, split_assign, stratified_sample_n
+from hexspark.ops.sampling import split_assign, stratified_sample_n
 
 
 @pytest.fixture(scope="module")
 def people(spark):
     rows = [(i, f"user_{i}", i % 7) for i in range(5000)]
     return spark.createDataFrame(rows, "id long, name string, grp int")
-
-
-def test_sample_fraction_is_deterministic(spark, people):
-    a = {r["id"] for r in sample_fraction(people, "id", 0.3).collect()}
-    b = {r["id"] for r in sample_fraction(people, "id", 0.3).collect()}
-    c = {
-        r["id"]
-        for r in sample_fraction(people.repartition(17), "id", 0.3).collect()
-    }
-    assert a == b == c  # rerun- and partitioning-independent
-
-
-def test_sample_fraction_rate_close(spark, people):
-    n = sample_fraction(people, "id", 0.3).count()
-    assert 0.25 * 5000 < n < 0.35 * 5000
-
-
-def test_sample_fraction_monotone_in_rate(spark, people):
-    """A row kept at rate p is kept at every rate q > p (nested samples)."""
-    s20 = {r["id"] for r in sample_fraction(people, "id", 0.2).collect()}
-    s50 = {r["id"] for r in sample_fraction(people, "id", 0.5).collect()}
-    assert s20 <= s50
-
-
-def test_sample_fraction_salt_gives_different_sample(spark, people):
-    a = {r["id"] for r in sample_fraction(people, "id", 0.3, salt="x").collect()}
-    b = {r["id"] for r in sample_fraction(people, "id", 0.3, salt="y").collect()}
-    assert a != b
-    # independent draws: overlap near 9% of the table, not 0 or 30%
-    assert 0.02 * 5000 < len(a & b) < 0.2 * 5000
-
-
-def test_sample_fraction_edges(spark, people):
-    assert sample_fraction(people, "id", 0.0).count() == 0
-    assert sample_fraction(people, "id", 1.0).count() == 5000
-    with pytest.raises(ValueError):
-        sample_fraction(people, "id", 1.5)
-
-
-def test_sample_fraction_append_stable(spark, people):
-    """Decisions made on the first half don't change when more data arrives."""
-    first = people.where(F.col("id") < 2500)
-    sel_first = {r["id"] for r in sample_fraction(first, "id", 0.4).collect()}
-    sel_all = {r["id"] for r in sample_fraction(people, "id", 0.4).collect()}
-    assert sel_first == {i for i in sel_all if i < 2500}
 
 
 def test_split_assign_exhaustive_disjoint(spark, people):
@@ -76,18 +31,6 @@ def test_split_assign_validates(spark, people):
         split_assign(people, "id", {"a": -1.0, "b": 2.0})
     with pytest.raises(ValueError):
         split_assign(people, "id", {"a": 0.0})
-
-
-def test_split_assign_consistent_with_sample_fraction(spark, people):
-    """Same salt ⇒ the 'first' split IS the fraction sample (shared hash)."""
-    s = {r["id"] for r in sample_fraction(people, "id", 0.8, salt="z").collect()}
-    tr = {
-        r["id"]
-        for r in split_assign(people, "id", {"train": 0.8, "rest": 0.2}, salt="z")
-        .where(F.col("split") == "train")
-        .collect()
-    }
-    assert s == tr
 
 
 def test_stratified_sample_exact_n(spark, people):
@@ -120,9 +63,3 @@ def test_stratified_sample_reservoir_property(spark, people):
     s_all = {r["id"] for r in stratified_sample_n(people, "grp", "id", 25).collect()}
     # every old row still sampled after the append was sampled before
     assert {i for i in s_all if i < 4000} <= s_old
-
-
-def test_sample_fraction_plan_is_scan_plus_filter(spark, people):
-    out = sample_fraction(people, "id", 0.3)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "Exchange" not in plan  # pure codegen filter, no shuffle

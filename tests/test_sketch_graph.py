@@ -42,15 +42,18 @@ def test_cms_never_undercounts_and_is_tight_when_sparse(spark):
 
 
 def test_bloom_no_false_negatives_and_bounded_fp(spark):
-    from hexspark.ops.sketch import bloom_build, bloom_may_contain
+    """bloom_prune over the collected filter keeps every member, passes few
+    non-members, and is a pure narrow filter on the probe: zero exchanges,
+    joins, generates or aggregates."""
+    from hexspark.ops.sketch import bloom_build, bloom_literal, bloom_prune
 
     members = list(range(0, 400, 2))
     build = spark.createDataFrame([(k,) for k in members], "k long")
     probe = spark.createDataFrame([(k,) for k in range(400)], "k long")
 
     bf = bloom_build(build, F.col("k"), n_words=64, n_hashes=3)
-    kept = {r["k"] for r in
-            bloom_may_contain(bf, probe, F.col("k"), n_words=64, n_hashes=3).collect()}
+    pruned = bloom_prune(probe, F.col("k"), bloom_literal(bf, 64), n_hashes=3)
+    kept = {r["k"] for r in pruned.collect()}
 
     assert set(members) <= kept  # a Bloom filter NEVER drops a member
     fps = kept - set(members)
@@ -61,6 +64,10 @@ def test_bloom_no_false_negatives_and_bounded_fp(spark):
     rows = bf.collect()
     assert len(rows) <= 64
     assert all(0 <= r["word"] < 64 for r in rows)
+
+    plan = pruned._jdf.queryExecution().executedPlan().toString()
+    for bad in ("Exchange", "Join", "Generate", "Aggregate"):
+        assert bad not in plan, bad
 
 
 def test_bloom_filter_is_deterministic(spark):
@@ -319,34 +326,6 @@ def test_robust_components_vs_union_find(spark):
     clusters, _ = robust_components(df)
     got = {r["conv_id"]: r["cluster_id"] for r in clusters.collect()}
     assert got == want
-
-
-def test_bloom_prune_literal_equals_join_form(spark):
-    """The literal-filter projection form must keep exactly the same rows
-    as the join-based bloom_may_contain, and its plan must be a pure
-    narrow filter: zero exchanges, joins, or generates on the probe."""
-    from hexspark.ops.sketch import (
-        bloom_build,
-        bloom_literal,
-        bloom_may_contain,
-        bloom_prune,
-    )
-
-    build = spark.createDataFrame([(i * 3,) for i in range(80)], "k long")
-    probe = spark.createDataFrame([(i,) for i in range(300)], "k long")
-    bf = bloom_build(build, F.col("k"), n_words=16, n_hashes=3)
-
-    via_join = {r["k"] for r in
-                bloom_may_contain(bf, probe, F.col("k"), 16, 3).collect()}
-    bits = bloom_literal(bf, 16)
-    via_lit = {r["k"] for r in bloom_prune(probe, F.col("k"), bits, 3).collect()}
-    assert via_lit == via_join
-    assert {i * 3 for i in range(80)} <= via_lit
-
-    plan = bloom_prune(probe, F.col("k"), bits, 3)._jdf.queryExecution() \
-        .executedPlan().toString()
-    for bad in ("Exchange", "Join", "Generate", "Aggregate"):
-        assert bad not in plan, bad
 
 
 def test_graph_ops_accept_precomputed_triangles(spark):
