@@ -32,8 +32,7 @@ explodes each document's bigrams in-row (codegen HOFs) and pays two
 equi-joins against the count tables (broadcastable when the model is
 capped, shuffle joins otherwise) plus one doc_id-keyed aggregate. Log
 arithmetic is float, so this family is pytest-pinned by an
-identical-arithmetic oracle (same epistemics as NMI / SoftTFIDF), not
-driver-hash-gated.
+identical-arithmetic oracle, not driver-hash-gated.
 
 Reference anchor: no analogue in hexhamming; training-data surface per
 the round brief.

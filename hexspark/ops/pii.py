@@ -47,8 +47,8 @@ def _luhn_ok(digits_col):
 
     Reverse the digit array, double every second digit (index 1, 3, ...),
     subtract 9 when the double exceeds 9, sum mod 10 == 0. transform +
-    aggregate keep the whole check inside whole-stage codegen — the same
-    HOF device tokensim.py uses for Monge-Elkan.
+    aggregate keep the whole check inside whole-stage codegen, with no
+    Python UDF.
     """
     rev = F.reverse(F.split(digits_col, ""))
     terms = F.transform(

@@ -12,20 +12,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _hex_dist(a, b):
-    """Hamming distance between two 64-hex-char signature columns, pure
-    codegen: 8 x (conv substring -> long, XOR, bit_count). The JVM twin of
-    columns.hamming_hex for the fixed 256-bit pipeline width."""
-    from .scoring import _CHUNK_HEX, N_CHUNKS
-
-    d = None
-    for i in range(N_CHUNKS):
-        ca = F.conv(F.substring(a, i * _CHUNK_HEX + 1, _CHUNK_HEX), 16, 10).cast("long")
-        cb = F.conv(F.substring(b, i * _CHUNK_HEX + 1, _CHUNK_HEX), 16, 10).cast("long")
-        t = F.bit_count(ca.bitwiseXOR(cb))
-        d = t if d is None else d + t
-    return d.cast("long")
+from .scoring import _CHUNK_HEX, N_CHUNKS, hamming_jvm, sig_chunks
 
 
 def reps_with_radius(clusters: DataFrame, signatures: DataFrame) -> DataFrame:
@@ -41,16 +28,12 @@ def reps_with_radius(clusters: DataFrame, signatures: DataFrame) -> DataFrame:
 
     reps = canonicalize.representative_signature(clusters, signatures)
     members = clusters.join(
-        signatures.select("conv_id", F.col("sig_hex").alias("_member_hex")),
-        "conv_id",
+        signatures.select("conv_id", *sig_chunks("m")), "conv_id"
     )
     radii = (
-        members.join(
-            reps.select("cluster_id", F.col("sig_hex").alias("_rep_hex")),
-            "cluster_id",
-        )
+        members.join(reps.select("cluster_id", *sig_chunks("r")), "cluster_id")
         .groupBy("cluster_id")
-        .agg(F.max(_hex_dist(F.col("_member_hex"), F.col("_rep_hex"))).alias("radius"))
+        .agg(F.max(hamming_jvm("m", "r")).alias("radius"))
     )
     return reps.select("cluster_id", "sig_hex", "n_members").join(radii, "cluster_id")
 
@@ -87,13 +70,19 @@ def probe_clusters(
         raise ValueError(
             f"probe_sig_hex must be 64 hex chars (256 bits), got {len(probe_sig_hex)}"
         )
-    probe = F.lit(probe_sig_hex.lower())
-    survivors = reps.where(
-        _hex_dist(F.col("sig_hex"), probe) <= F.lit(max_dist) + F.col("radius")
+    # the probe's chunks as literals, the "p" side of hamming_jvm
+    probe = [
+        F.lit(int(probe_sig_hex[i * _CHUNK_HEX : (i + 1) * _CHUNK_HEX], 16))
+        .cast("long")
+        .alias(f"c{i}_p")
+        for i in range(N_CHUNKS)
+    ]
+    survivors = reps.select("cluster_id", "radius", *sig_chunks("r"), *probe).where(
+        hamming_jvm("r", "p") <= F.lit(max_dist) + F.col("radius")
     ).select("cluster_id")
     members = clusters.join(survivors, "cluster_id", "left_semi").join(
-        signatures.select("conv_id", "sig_hex"), "conv_id"
+        signatures.select("conv_id", *sig_chunks("m"), *probe), "conv_id"
     )
-    return members.withColumn("dist", _hex_dist(F.col("sig_hex"), probe)).where(
+    return members.withColumn("dist", hamming_jvm("m", "p")).where(
         F.col("dist") <= F.lit(max_dist)
     ).select("conv_id", "cluster_id", "dist")

@@ -39,6 +39,10 @@ SKIPPED_BLOCKS_SCHEMA = StructType([
     StructField("block_size", LongType()),
     StructField("skipped", BooleanType()),
 ])
+# round bound passed to every iterative clustering call the runner makes
+CC_MAX_ITER = 20
+# window of the "snm" extra blocking pass, in rank positions
+SNM_WINDOW = 10
 
 
 @dataclass
@@ -48,8 +52,6 @@ class PipelineConfig:
     max_dist: int = 20
     alpha: float = 0.75
     min_score: float = 0.0
-    cc_max_iter: int = 20
-    pair_partitions: int | None = None  # explicit repartition before scoring
     # pairwise scorer: "blend" = the fixed hamming+Jaro-Winkler alpha blend
     # gated on max_dist (the reference's A2/A3 semantics); "fs" = the
     # Fellegi-Sunter classical-linkage path (pipeline/fs.py) — per-chunk
@@ -64,8 +66,6 @@ class PipelineConfig:
     # evidence the boolean fields collapse, separating concentrated from
     # dispersed difference even when the boolean agreement PATTERNS tie.
     scoring_mode: str = "blend"
-    fs_chunk_dist: int = 4
-    fs_canon_prefix_len: int = 16
     # term-frequency adjustment for the canon-prefix field (fs mode only):
     # corpus frequencies of each prefix become the agreement weight —
     # sharing a boilerplate opening stops counting as strong evidence,
@@ -136,7 +136,7 @@ class PipelineConfig:
     # — density-sensitive: an over-merged component splits along its
     # sparse cut (majority voting starves the bridge) without needing
     # triangle support or scores; deterministic via self-vote + min-label
-    # ties, rounds bounded by cc_max_iter.
+    # ties, rounds bounded by CC_MAX_ITER.
     # Precision levers next to robust (edge corroboration) and repair
     # (post-hoc eviction); unlike those they emit no review queue —
     # disagreements are priced into the partition. Mutually exclusive
@@ -145,24 +145,21 @@ class PipelineConfig:
     # appends — see run_incremental).
     clustering_mode: str = "cc"
     pivot_salt: str = ""
-    # hac mode: distance cut (None -> max_dist), and the honest-cap
-    # component bound forwarded to hac.hac_components
+    # hac mode: distance cut (None -> max_dist)
     hac_threshold: float | None = None
-    hac_max_component: int = 500
     # multi-pass blocking as a production mode: extra candidate passes
     # derived from the signatures' canon key, unioned with the LSH bands
     # (exactly once per unordered pair, provenance kept in the stage
     # table) before scoring — pure RECALL levers, the scoring gate still
     # decides every pair. Allowed names: "suffix" (suffix-array keys,
     # prefix-corruption-robust), "phonetic" (Soundex), "snm" (fixed
-    # window extra_snm_window over the global rank), "adaptive_snm"
+    # window SNM_WINDOW over the global rank), "adaptive_snm"
     # (boundary-segmented windows). The union is widened with both
     # sides' signature chunks and canon keys (two attach joins) in the
     # candidate_pairs stage, so every scoring and meta_prune mode reads
     # it like the LSH pairs; batch-only (the incremental path implements
     # banded blocking only).
     extra_passes: tuple = ()
-    extra_snm_window: int = 10
     # exact containment pre-dedup (pipeline/align.py): before assembly,
     # drop conversations that are strict turn-level prefixes of another
     # conversation (resumed sessions) or exact duplicates (min-id copy
@@ -291,11 +288,15 @@ class Runner:
                     "pipeline config; cannot prove stage outputs match the "
                     "current configuration. Use a fresh workdir."
                 )
-            if stored is not None and stored != self._cfg_dict():
+            current = self._cfg_dict()
+            if stored is not None and stored != current:
+                # keys of either side: a field only the manifest records
+                # (one a later version dropped) is a difference too
+                absent = "<absent>"
                 changed = {
-                    k: (stored.get(k), v)
-                    for k, v in self._cfg_dict().items()
-                    if stored.get(k) != v
+                    k: (stored.get(k, absent), current.get(k, absent))
+                    for k in sorted(stored.keys() | current.keys())
+                    if stored.get(k, absent) != current.get(k, absent)
                 }
                 raise ValueError(
                     "workdir was produced with a different pipeline config "
@@ -344,9 +345,7 @@ class Runner:
             if cfg.scoring_mode == "fs_levels"
             else (fs.fit_wide_pairs, fs.params_to_json)
         )
-        params, prev = fit(
-            pairs, chunk_dist=cfg.fs_chunk_dist, canon_prefix_len=cfg.fs_canon_prefix_len
-        )
+        params, prev = fit(pairs)
         thr = cfg.fs_threshold if cfg.fs_threshold is not None else fs.default_threshold(prev)
         return {**to_json(params, prev), "threshold": thr}
 
@@ -357,16 +356,12 @@ class Runner:
         under exactly the model the prior run recorded."""
         from . import fs
 
-        cfg = self.cfg
-        kw = {"chunk_dist": cfg.fs_chunk_dist, "canon_prefix_len": cfg.fs_canon_prefix_len}
-        if cfg.scoring_mode == "fs_levels":
+        if self.cfg.scoring_mode == "fs_levels":
             lvl_params, _prev = fs.level_params_from_json(model)
-            return lambda p: fs.score_wide_fs_levels(
-                p, lvl_params, model["threshold"], **kw
-            )
+            return lambda p: fs.score_wide_fs_levels(p, lvl_params, model["threshold"])
         params, _prev = fs.params_from_json(model)
         return lambda p: fs.score_wide_fs(
-            p, params, model["threshold"], canon_tf=canon_tf, **kw
+            p, params, model["threshold"], canon_tf=canon_tf
         )
 
     # -- pipeline -----------------------------------------------------------
@@ -446,7 +441,7 @@ class Runner:
                 elif name == "snm":
                     p = snm_mod.sorted_neighborhood_pairs(
                         canon_df, "conv_id", F.col("canon"),
-                        window=cfg.extra_snm_window,
+                        window=SNM_WINDOW,
                     )
                 else:  # adaptive_snm
                     p = snm_mod.adaptive_snm_pairs(
@@ -489,21 +484,18 @@ class Runner:
                 manifest,
                 result,
                 "canon_tf",
-                lambda: fs.canon_term_frequencies(sigs, cfg.fs_canon_prefix_len),
+                lambda: fs.canon_term_frequencies(sigs),
             )
 
         def build_edges() -> DataFrame:
-            p = pairs
-            if cfg.pair_partitions:
-                p = p.repartition(cfg.pair_partitions)
             if cfg.scoring_mode != "blend":
                 # fit on THIS run's pairs (one pattern-count aggregation
                 # over the materialized stage table + driver EM), record
                 # the model in the manifest so incremental folds reuse it
-                manifest["fs_model"] = self._fit_fs_model(p)
-                return self._fs_scorer(manifest["fs_model"], canon_tf)(p)
+                manifest["fs_model"] = self._fit_fs_model(pairs)
+                return self._fs_scorer(manifest["fs_model"], canon_tf)(pairs)
             return scoring.score_wide(
-                p, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
+                pairs, max_dist=cfg.max_dist, alpha=cfg.alpha, min_score=cfg.min_score
             )
 
         edges = self._run_stage(manifest, result, "edges", build_edges)
@@ -527,7 +519,7 @@ class Runner:
                     n_samples=cfg.stability_samples,
                     keep_frac=cfg.stability_keep_frac,
                     seed=cfg.stability_seed,
-                    max_iter=cfg.cc_max_iter,
+                    max_iter=CC_MAX_ITER,
                 ),
             )
 
@@ -561,7 +553,7 @@ class Runner:
                     .unionAll(tri.select(F.col("x").alias("conv_id_a"), F.col("z").alias("conv_id_b")))
                     .distinct()
                 )
-                cc, rounds = clustering.connected_components(kept, max_iter=cfg.cc_max_iter)
+                cc, rounds = clustering.connected_components(kept, max_iter=CC_MAX_ITER)
                 result.cc_rounds = rounds
                 base = clustering.with_singletons(cc, sigs.select("conv_id"))
                 return base if cc_stage != "clusters" else attach_contained(base)
@@ -572,17 +564,17 @@ class Runner:
             def build_clusters() -> DataFrame:
                 if cfg.clustering_mode == "pivot":
                     cl, rounds = clustering.pivot_components(
-                        edges, salt=cfg.pivot_salt, max_iter=cfg.cc_max_iter
+                        edges, salt=cfg.pivot_salt, max_iter=CC_MAX_ITER
                     )
                 elif cfg.clustering_mode == "star":
                     cl, rounds = clustering.star_components(
-                        edges, max_iter=cfg.cc_max_iter
+                        edges, max_iter=CC_MAX_ITER
                     )
                 elif cfg.clustering_mode == "lpa":
                     from hexspark.ops.graph import lpa_communities
 
                     labels, rounds, _converged = lpa_communities(
-                        edges, max_iter=cfg.cc_max_iter
+                        edges, max_iter=CC_MAX_ITER
                     )
                     cl = labels.select(
                         F.col("node").alias("conv_id"),
@@ -600,13 +592,12 @@ class Runner:
                         edges,
                         threshold=thr,
                         dist_col="hamming_dist",
-                        max_component=cfg.hac_max_component,
-                        cc_max_iter=cfg.cc_max_iter,
+                        cc_max_iter=CC_MAX_ITER,
                     ).select("conv_id", "cluster_id")
                     rounds = 0  # HAC runs its own internal closure
                 else:
                     cl, rounds = clustering.connected_components(
-                        edges, max_iter=cfg.cc_max_iter
+                        edges, max_iter=CC_MAX_ITER
                     )
                 result.cc_rounds = rounds
                 base = clustering.with_singletons(cl, sigs.select("conv_id"))
@@ -629,7 +620,7 @@ class Runner:
                 "clusters",
                 lambda: attach_contained(
                     repair.reclustered(
-                        raw, edges, evicted, cc_max_iter=cfg.cc_max_iter
+                        raw, edges, evicted, cc_max_iter=CC_MAX_ITER
                     )
                 ),
             )
@@ -822,7 +813,7 @@ class Runner:
             max_dist=cfg.max_dist,
             alpha=cfg.alpha,
             min_score=cfg.min_score,
-            cc_max_iter=cfg.cc_max_iter,
+            cc_max_iter=CC_MAX_ITER,
             # robust mode clusters over corroborated-triangle sides, not
             # the raw edges — skip the (eager) raw-edge merge entirely
             merge=not cfg.robust,
@@ -880,7 +871,7 @@ class Runner:
                     F.col("u").alias("conv_id_a"), F.col("v").alias("conv_id_b")
                 ),
                 res["new_signatures"].select("conv_id"),
-                cc_max_iter=cfg.cc_max_iter,
+                cc_max_iter=CC_MAX_ITER,
             )
             result.cc_rounds = rounds
             bridges = (

@@ -5,7 +5,6 @@ of dropping mega-blocks), and parity with a brute-force band oracle.
 
 from __future__ import annotations
 
-import pytest
 from pyspark.sql import functions as F
 
 from hexspark.pipeline import blocking, clustering, scoring

@@ -8,7 +8,6 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.probe import probe_clusters, reps_with_radius
 
@@ -88,11 +87,10 @@ def test_screen_actually_prunes(spark):
     sig_df, cl_df = _mk(spark, sigs, clusters)
     reps = reps_with_radius(cl_df, sig_df)
     probe = sigs["cl0_m0"]
-    from hexspark.pipeline.probe import _hex_dist
-
-    surviving = reps.where(
-        _hex_dist(F.col("sig_hex"), F.lit(probe.hex())) <= 16 + F.col("radius")
-    ).count()
+    surviving = sum(
+        _hd(bytes.fromhex(r["sig_hex"]), probe) <= 16 + r["radius"]
+        for r in reps.collect()
+    )
     assert surviving <= 3  # 10 random 256-bit centers sit ~128 bits apart
 
 

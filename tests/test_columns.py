@@ -7,7 +7,6 @@ from __future__ import annotations
 import numpy as np
 import pandas as pd
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark import columns as C
 
@@ -113,12 +112,7 @@ def test_jw_arrow_kernels_differential():
     rows_b += ["", "abc", "", "marhta"]
     ca, cb = pa.array(rows_a), pa.array(rows_b)
 
-    try:
-        import duckdb  # noqa: F401
-    except Exception:
-        import pytest
-
-        pytest.skip("duckdb not available")
+    pytest.importorskip("duckdb")
 
     saved = C._JW_IMPL
     try:

@@ -12,7 +12,6 @@ from __future__ import annotations
 from datetime import datetime, timedelta
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.runner import PipelineConfig, Runner
 

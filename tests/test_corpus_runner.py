@@ -8,7 +8,6 @@ import json
 import os
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.corpus import CorpusConfig, CorpusResult, CorpusRunner
 

@@ -8,7 +8,6 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.runner import PipelineConfig, Runner
 from tests.test_robust_runner import TEXTS, WITNESS, _transcripts

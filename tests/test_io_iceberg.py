@@ -11,7 +11,6 @@ from __future__ import annotations
 
 import os
 
-import pytest
 
 from hexspark.pipeline.io import TableIO
 

@@ -4,8 +4,6 @@ and the one-to-one composition."""
 
 import random
 
-import pytest
-
 from hexspark.pipeline.linkage import link_candidate_pairs_wide
 from hexspark.pipeline.matching import mutual_best_match
 from hexspark.pipeline.scoring import score_wide
@@ -145,8 +143,6 @@ def test_link_tables_one_to_one_cardinality(spark):
 def test_link_tables_scores_match_thin_recompute(spark):
     """score_wide over the linkage pairs must equal re-scoring the same
     (id, id) pairs from scratch — the wide carry can't corrupt payloads."""
-    from hexspark import columns as C
-
     a_rows, b_rows = _rand_tables(5, n_base=16)
     A, B = _mk(spark, a_rows), _mk(spark, b_rows)
     pairs, _ = link_candidate_pairs_wide(A, B)

@@ -11,7 +11,7 @@ from collections import Counter
 
 import pytest
 
-from hexspark.ops.lm import BigramLM, lm_score, train_bigram_lm
+from hexspark.ops.lm import lm_score, train_bigram_lm
 
 _DDL = "doc_id int, text string"
 

@@ -2,11 +2,7 @@
 
 from __future__ import annotations
 
-import itertools
 import random
-
-import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.matching import mutual_best_match
 

@@ -126,8 +126,6 @@ def test_wnp_prune_union_semantics(spark):
     """Hub h has edges of weight 3 and 1 (local mean 2): the weight-1 edge
     to u survives anyway because it is u's ONLY (hence >= mean) edge —
     the redundancy-positive union variant."""
-    import pyspark.sql.types as T
-
     schema = "rec_id_a string, rec_id_b string, cbs long"
     g = spark.createDataFrame(
         [("h", "s1", 3), ("h", "s2", 3), ("h", "u", 1)], schema

@@ -6,7 +6,6 @@ ordering invariant, and the LSH pigeonhole recall guarantee.
 
 from __future__ import annotations
 
-import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
@@ -18,7 +17,6 @@ from hexspark.pipeline import (
     clustering,
     evaluate,
     scoring,
-    simhash,
 )
 from hexspark.pipeline.runner import PipelineConfig, Runner
 

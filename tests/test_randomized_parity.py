@@ -1,110 +1,17 @@
-"""Randomized pure-Python parity for the round-4 comparator families.
+"""Randomized pure-Python parity for the phonetic comparator.
 
-One seeded batch per test (a single Spark job scoring many random rows),
-compared EXACTLY against an independent pure-Python replay — the same
-evidence pattern as test_pivot_clustering's sequential-KwikCluster replay.
-Fixed seeds keep the suite deterministic; the generators cover the edge
-shapes the hand fixtures can't enumerate (random lengths, repeated
-tokens, shared grams, unicode-free canon collisions).
+One seeded batch (a single Spark job over many random words), compared
+EXACTLY against an independent pure-Python replay — the same evidence
+pattern as test_pivot_clustering's sequential-KwikCluster replay. The
+fixed seed keeps the suite deterministic; the generator covers the word
+shapes the hand fixtures can't enumerate.
 """
 
 from __future__ import annotations
 
 import random
 
-import pytest
 from pyspark.sql import functions as F
-
-from hexspark.pipeline import pprl, tokensim
-
-ALPHABET = "abcdefghijklmnopqrstuvwxyz0123456789 !,ABC"
-
-
-def _rand_strings(seed: int, n: int) -> list[str]:
-    rng = random.Random(seed)
-    out = []
-    for _ in range(n):
-        length = rng.randint(0, 24)
-        out.append("".join(rng.choice(ALPHABET) for _ in range(length)))
-    return out
-
-
-# --- pure-Python replays -----------------------------------------------------
-
-def _py_canon(s: str) -> str:
-    return "".join(c for c in s.lower() if c.islower() or c.isdigit() or c == " ")
-
-
-def _py_bloom_positions(s: str) -> list[int]:
-    padded = "^" + _py_canon(s) + "$"
-    pos = set()
-    for i in range(len(padded) - 1):
-        code = ord(padded[i]) * 128 + ord(padded[i + 1])
-        for a, b in zip(pprl.HASH_A, pprl.HASH_B):
-            pos.add(((a * code + b) % pprl.PRIME) % pprl.M_BITS)
-    return sorted(pos)
-
-
-def _py_tokens(s: str) -> list[str]:
-    cleaned = "".join(
-        c if (c.islower() or c.isdigit() or c == " ") else " " for c in s.lower()
-    )
-    return [t for t in cleaned.split(" ") if t]
-
-
-def _py_lev(a: str, b: str) -> int:
-    prev = list(range(len(b) + 1))
-    for i, ca in enumerate(a, 1):
-        cur = [i]
-        for j, cb in enumerate(b, 1):
-            cur.append(min(prev[j] + 1, cur[j - 1] + 1, prev[j - 1] + (ca != cb)))
-        prev = cur
-    return prev[len(b)]
-
-
-def _py_inner_milli(ta: str, tb: str) -> int:
-    return 1000 - (1000 * _py_lev(ta, tb)) // max(len(ta), len(tb))
-
-
-def _py_me(a: str, b: str) -> tuple[int, int, int, int]:
-    ta, tb = _py_tokens(a), _py_tokens(b)
-    def best_sum(xs, ys):
-        if not xs or not ys:
-            return 0
-        return sum(max(_py_inner_milli(x, y) for y in ys) for x in xs)
-    return best_sum(ta, tb), len(ta), best_sum(tb, ta), len(tb)
-
-
-# --- tests -------------------------------------------------------------------
-
-@pytest.mark.parametrize("seed", [11, 97])
-def test_bloom_encoding_matches_python_replay(spark, seed):
-    strings = _rand_strings(seed, 120)
-    df = spark.createDataFrame(
-        [(str(i), s) for i, s in enumerate(strings)], "rec_id string, name string"
-    )
-    got = {
-        r["rec_id"]: list(r["bloom_bits"])
-        for r in pprl.encode(df, "rec_id", "name").collect()
-    }
-    for i, s in enumerate(strings):
-        assert got[str(i)] == _py_bloom_positions(s), (i, repr(s))
-
-
-@pytest.mark.parametrize("seed", [23, 71])
-def test_monge_elkan_matches_python_replay(spark, seed):
-    strings = _rand_strings(seed, 80)
-    rng = random.Random(seed + 1)
-    pairs = [
-        (str(k), rng.choice(strings), rng.choice(strings)) for k in range(80)
-    ]
-    df = spark.createDataFrame(pairs, "pair_id string, a string, b string")
-    got = {
-        r["pair_id"]: (r["me_sum_ab"], r["me_n_a"], r["me_sum_ba"], r["me_n_b"])
-        for r in tokensim.monge_elkan(df, "a", "b").collect()
-    }
-    for pid, a, b in pairs:
-        assert got[pid] == _py_me(a, b), (pid, repr(a), repr(b))
 
 
 def test_soundex_matches_python_reference_on_random_words(spark):

@@ -1,12 +1,8 @@
 """Every module under hexspark/ must be imported, directly or through other
 modules, from a product surface: the driver contract, bench.py, the batch
 and corpus runner scripts, perfbench, the compat API or the streaming
-package. A module only its own tests import is dead code.
-
-UNREACHED names the modules still kept without a product caller; each is
-tested on its own and is either wired into a surface or deleted later.
-The guard fails on any other unreached module, and on a listed module
-that a surface now reaches (so the list only shrinks).
+package. A module only its own tests import is dead code, and the guard
+fails on any unreached module.
 
 The same holds per definition: every top-level function and class, every
 class method and every module constant (a top-level assignment) under
@@ -14,13 +10,17 @@ hexspark/, public or private (single leading underscore; dunders are
 exempt), must be read in code (an identifier or attribute, not a
 comment, docstring, string, re-export import or assignment target) of a
 non-test file, outside its own definition. The scan runs to a fixed
-point: a name used only inside unreached definitions, or only inside the
-UNREACHED modules, is unreached too, so a deletion cannot leave an
-orphaned private helper or constant behind. Uses are matched by name, so
-a method counts as reached when any live code reads an attribute of that
-name. streaming/ and compat.py are product surfaces themselves and are
-not checked. UNREACHED_FUNCS lists the functions still kept, and only
-shrinks, as UNREACHED does; no method or constant is exempt."""
+point: a name used only inside unreached definitions is unreached too, so
+a deletion cannot leave an orphaned private helper or constant behind.
+Uses are matched by name, so a method counts as reached when any live
+code reads an attribute of that name. streaming/ and compat.py are
+product surfaces themselves and are not checked. UNREACHED_FUNCS lists
+the test oracles still kept, and only shrinks; no method or constant is
+exempt.
+
+The test modules are held to the same rule for what they import: every
+name a tests/*.py module binds by an import must be read in that module.
+"""
 
 from __future__ import annotations
 
@@ -32,13 +32,11 @@ REPO = Path(__file__).resolve().parents[1]
 ROOTS = ["__spark_entry__.py", "bench.py", "scripts/run_pipeline.py",
          "scripts/run_corpus.py", "perfbench/*.py", "hexspark/compat.py",
          "hexspark/streaming/*.py"]
-UNREACHED = {"hexspark.pipeline.active", "hexspark.pipeline.pprl",
-             "hexspark.pipeline.tokensim"}
 NON_TEST = ["*.py", "hexspark/**/*.py", "scripts/*.py", "perfbench/*.py"]
 SURFACES = ("hexspark.streaming", "hexspark.compat")
 # blocking.band_projection stays as the brute-force band oracle of tests;
-# probe.probe_clusters (with its _hex_dist) stays as the exact oracle of
-# test_streaming_probe and test_cluster_probe
+# probe.probe_clusters stays as the exact oracle of test_streaming_probe
+# and test_cluster_probe
 UNREACHED_FUNCS = {
     "hexspark.pipeline.blocking.band_projection",
     "hexspark.pipeline.probe.probe_clusters",
@@ -77,7 +75,7 @@ def test_every_hexspark_module_is_reached_from_a_product_surface():
             seen.add(name)
             if name in files:
                 todo.append(files[name])
-    assert sorted(set(files) - seen) == sorted(UNREACHED)
+    assert sorted(set(files) - seen) == [], "unreached module"
 
 
 def _first_line(node: ast.FunctionDef | ast.ClassDef) -> int:
@@ -117,8 +115,7 @@ def _unreached() -> dict[str, set[str]]:
             elif (isinstance(node, ast.Attribute)
                     and not isinstance(node.ctx, ast.Store)):
                 uses[node.attr].append((mod, node.lineno))
-        if (not mod.startswith("hexspark") or mod in UNREACHED
-                or mod.startswith(SURFACES)):
+        if not mod.startswith("hexspark") or mod.startswith(SURFACES):
             continue
         for key, kind, first, last in _defs(tree, mod):
             defs[key] = (kind, mod, first, last)
@@ -126,7 +123,7 @@ def _unreached() -> dict[str, set[str]]:
     dead: set[str] = set()
 
     def live(key: str, mod: str, line: int) -> bool:
-        return mod not in UNREACHED and not any(
+        return not any(
             defs[k][1] == mod and defs[k][2] <= line <= defs[k][3]
             for k in dead | {key}
         )
@@ -155,3 +152,27 @@ def test_every_method_is_reached_from_non_test_code():
 
 def test_every_module_constant_is_read_by_non_test_code():
     assert sorted(_unreached()["const"]) == [], "unread module constant"
+
+
+def _unread_imports(path: Path) -> list[str]:
+    """Names `path` binds by an import but never reads."""
+    tree = ast.parse(path.read_text())
+    bound = {}  # name -> line
+    for node in ast.walk(tree):
+        if isinstance(node, (ast.Import, ast.ImportFrom)):
+            if isinstance(node, ast.ImportFrom) and node.module == "__future__":
+                continue
+            for a in node.names:
+                name = a.asname or a.name.split(".")[0]
+                bound.setdefault(name, node.lineno)
+    read = {n.id for n in ast.walk(tree)
+            if isinstance(n, ast.Name) and not isinstance(n.ctx, ast.Store)}
+    return [f"{path.name}:{line} {name}"
+            for name, line in sorted(bound.items(), key=lambda x: x[1])
+            if name not in read]
+
+
+def test_every_test_import_is_read():
+    unread = [u for p in sorted((REPO / "tests").glob("*.py"))
+              for u in _unread_imports(p)]
+    assert unread == [], "unread test import"

@@ -159,6 +159,29 @@ def test_manifest_without_config_is_treated_as_drift(spark, first_run):
             f.write(original)
 
 
+def test_manifest_with_a_dropped_config_field_names_it(spark, first_run):
+    """A manifest recording a field the config no longer has (here
+    pair_partitions, at its old default None) must refuse to resume, and
+    the refusal must name that field rather than print an empty diff."""
+    _, workdir, _, _ = first_run
+    manifest_path = os.path.join(workdir, "run_manifest.json")
+    with open(manifest_path) as f:
+        original = f.read()
+    try:
+        manifest = json.loads(original)
+        manifest["config"]["pair_partitions"] = None
+        with open(manifest_path, "w") as f:
+            json.dump(manifest, f)
+        runner = Runner(spark, workdir, PipelineConfig(max_dist=40))
+        with pytest.raises(
+            ValueError, match="different pipeline config .*'pair_partitions'"
+        ):
+            runner._manifest()
+    finally:
+        with open(manifest_path, "w") as f:
+            f.write(original)
+
+
 def test_torn_manifest_dump_keeps_previous_manifest(spark, first_run, monkeypatch):
     """A crash in the middle of writing run_manifest.json (here: a dump
     that writes half the JSON, then raises) leaves the previous manifest

@@ -20,7 +20,6 @@ from __future__ import annotations
 from datetime import datetime
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.pipeline.runner import PipelineConfig, Runner
 

@@ -8,7 +8,6 @@ from __future__ import annotations
 import json
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.streaming.corpus import (
     DOC_DDL,

@@ -6,7 +6,6 @@ from __future__ import annotations
 import datetime as dt
 
 import pytest
-from pyspark.sql import functions as F
 
 from hexspark.streaming.joins import (
     CLICK_DDL,

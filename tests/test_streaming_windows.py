@@ -4,7 +4,6 @@ windows, append-mode emit-once, and late-row drop across restarts."""
 from __future__ import annotations
 
 import datetime as dt
-import os
 
 from pyspark.sql import functions as F
 
